@@ -332,8 +332,10 @@ object Bench {
     // never reached the driver's PERF comparison in any round. Persist
     // the full line as a repo-root artifact too: committed per round,
     // it is the durable all-queries record the tail cannot carry.
+    // Keyed by core count: an 8-core scaling run must not overwrite
+    // the 32-core record it is compared against.
     val qFile = sys.env.getOrElse("GRAFT_BENCH_QUERIES_FILE",
-      "BENCH_QUERIES.json")
+      s"BENCH_QUERIES_c$cpus.json")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(qFile), fullLine + "\n")
     catch { case e: Throwable =>
@@ -345,7 +347,7 @@ object Bench {
       .map { case (k, v, _, _) => "\"" + k + f"\":$v%.2f" }
       .mkString("{", ",", "}")
     println(
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$slowest,"n_queries":${results.size},"failed":$failed$contentionStamp,"queries_file":"$qFile","sf":"$sfDir"}""")
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$slowest,"n_queries":${results.size},"failed":$failed$contentionStamp,"cpus":$cpus,"queries_file":"$qFile","sf":"$sfDir"}""")
     spark.stop()
   }
 }

@@ -298,17 +298,9 @@ object GenData {
     // repartition(1) (NOT coalesce, which would collapse the generating
     // stage itself to one task) + a sort keeps the file deterministic.
     def writeOne(df: DataFrame, name: String, key: String): Unit = {
-      val tmp = s"$outDir/_tmp_$name"
-      df.repartition(1).sortWithinPartitions(key).write.mode("overwrite")
-        .option("parquet.block.size", (8L * 1024 * 1024).toString)
-        .parquet(tmp)
-      val p = java.nio.file.Paths.get(tmp)
-      val part = java.nio.file.Files.list(p).filter(_.toString.endsWith(".parquet"))
-        .findFirst().get()
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(s"$outDir/$name.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
+      BenchFixtures.writeSingleFile(
+        df.repartition(1).sortWithinPartitions(key), outDir, name,
+        Map("parquet.block.size" -> (8L * 1024 * 1024).toString))
       println(s"[gendata] wrote $outDir/$name.parquet")
     }
     if (hot) {
@@ -411,21 +403,13 @@ object SplitEventsByTime {
     val sliced = ev.withColumn("__slice", ntile(n).over(w) - 1).persist()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (i <- 0 until n) {
-      val tmp = s"$outDir/_tmp_slice_$i"
-      sliced.filter(col("__slice") === i).drop("__slice")
-        .repartition(1)
-        .sortWithinPartitions(orderCols(table).map(col): _*)
-        .write.mode("overwrite")
-        .option("parquet.block.size", (8L * 1024 * 1024).toString)
-        .parquet(tmp)
-      val p = java.nio.file.Paths.get(tmp)
-      val part = java.nio.file.Files.list(p)
-        .filter(_.toString.endsWith(".parquet")).findFirst().get()
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(f"$outDir/$table%s-$i%02d.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      org.apache.commons.io.FileUtils.deleteDirectory(p.toFile)
-      println(f"[split] wrote $outDir/$table%s-$i%02d.parquet")
+      val out = BenchFixtures.writeSingleFile(
+        sliced.filter(col("__slice") === i).drop("__slice")
+          .repartition(1)
+          .sortWithinPartitions(orderCols(table).map(col): _*),
+        outDir, f"$table%s-$i%02d",
+        Map("parquet.block.size" -> (8L * 1024 * 1024).toString))
+      println(s"[split] wrote $out")
     }
     sliced.unpersist()
   }

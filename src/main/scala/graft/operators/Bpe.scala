@@ -416,32 +416,24 @@ object Bpe {
   def tokenCountsViaVocab(docs: DataFrame, merges: Seq[(String, String)],
       idCol: String = "doc_id", textCol: String = "text",
       keepCols: Seq[String] = Nil,
-      broadcastMaxRows: Long = Broadcasts.defaultMaxRows,
-      materializeTokens: Boolean = false): DataFrame = {
+      broadcastMaxRows: Long = Broadcasts.defaultMaxRows): DataFrame = {
     val spark = docs.sparkSession
     val ts = filter(split(col(textCol), " "), t => t =!= "")
     val keep = keepCols.map(col)
-    val derived = docs.select(
+    val exploded = docs.select(
       (col(idCol) +: keep) ++ Seq(size(ts).cast("long").as("n_tokens"),
         explode_outer(ts).as("token")): _*)
     // The token stream feeds TWO consumers (the vocabulary aggregation
     // below and the final per-doc join+sum), so the corpus
     // tokenize+explode runs once per consumer. Materializing it once
     // in session-temp parquet (the x14 bigram-stream pattern) was
-    // MEASURED AND REJECTED as the default: tokenize here is one cheap
+    // MEASURED AND REJECTED: tokenize here is one cheap
     // split+explode, and landing a one-row-per-token stream costs more
     // than recomputing it at every measured scale (paired sf0.1 subset:
-    // p13b 2.09→2.63 s, p6c 1.35→1.82 s slower materialized; BpeScale
-    // zipf 500k docs: 12.46 s materialized vs 8.93 s re-derived —
+    // p13b 2.09→2.63 s, p6c 1.35→1.82 s slower materialized; `bpe` scale
+    // bench, zipf 500k docs: 12.46 s materialized vs 8.93 s re-derived —
     // unlike x14's bigram stream, whose per-row derivation is heavy
-    // enough to repay the round-trip). `materializeTokens = true`
-    // keeps the shape measurable; BpeSpec pins both equal.
-    val exploded =
-      if (materializeTokens) {
-        val tmpT = graft.SessionTemp.dir("bpe_token_stream_")
-        derived.write.mode("overwrite").parquet(tmpT)
-        spark.read.parquet(tmpT)
-      } else derived
+    // enough to repay the round-trip).
     // vocabulary of THIS corpus -> symbol counts, materialized (the
     // trainer's pattern: the chain is evaluated once, never per branch)
     val vocab = exploded.filter(col("token").isNotNull)

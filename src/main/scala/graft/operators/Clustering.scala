@@ -341,14 +341,13 @@ object Clustering {
     * `twoLevel = None` auto-selects the two-level fit at k ≥
     * [[autoTwoLevelK]] (see [[kMeansAssign]]); the pair stage is
     * identical either way — only the cluster-id scheme differs.
-    * `materialize = None` auto-selects writing the tagged table to
-    * session-temp once k ≥ [[materializeK]] (below it the double
+    * The tagged table is written to session-temp once when the
+    * two-level fit runs or k ≥ [[materializeK]] (below it the double
     * argmin on the self-join's two sides is cheaper than the
     * write+read round trip — measured, see BENCH_sf1 cluster_scale). */
   def semanticDrops(emb: DataFrame, k: Int, iters: Int, tau: Double,
       idCol: String = "vec_id", vecCol: String = "v",
-      twoLevel: Option[Boolean] = None, k1Override: Int = 0,
-      materialize: Option[Boolean] = None): DataFrame = {
+      twoLevel: Option[Boolean] = None, k1Override: Int = 0): DataFrame = {
     val qn = SqlLit.quoteName(vecCol)
     val nz = emb.filter(expr(s"vec_dot($qn, $qn) > 0"))
     if (useTwoLevel(k, twoLevel)) {
@@ -360,7 +359,7 @@ object Clustering {
       return semanticDropsFrom(
         tagClustersTwoLevel(nz.select(col(idCol), col(vecCol)), coarse,
           fine, vecCol),
-        materialize.getOrElse(true), tau, idCol, vecCol)
+        materialize = true, tau, idCol, vecCol)
     }
     val centroids = fitCentroids(nz, k, iters, idCol, vecCol)
     if (centroids.isEmpty)
@@ -368,8 +367,7 @@ object Clustering {
         col(idCol).as("dup_of")).limit(0)
     semanticDropsFrom(
       tagClusters(nz.select(col(idCol), col(vecCol)), centroids, vecCol),
-      materialize.getOrElse(centroids.size >= materializeK), tau, idCol,
-      vecCol)
+      centroids.size >= materializeK, tau, idCol, vecCol)
   }
 
   /** Flat-path k at or above which [[semanticDrops]] materializes the

@@ -64,38 +64,29 @@ object LanguageModel {
     * text); output (idCol, n_bigrams, ppl) for every doc with ≥ 2
     * tokens, sorted by id. `broadcastMaxRows` gates the score join's
     * broadcast hint (see object Scaladoc; 0 forces the shuffle-join
-    * path — the mode-equality spec uses it). `materializeBigrams =
-    * false` keeps the legacy shape whose score pass re-derives the
-    * bigram stream from the raw corpus (re-tokenize + re-explode) —
-    * retained ONLY as the A/B baseline the spec pins equal; production
-    * callers want the default. FOOTPRINT: the default materializes one
-    * corpus-scale (one row per token position) stream in
+    * path — the mode-equality spec uses it). FOOTPRINT: materializes
+    * one corpus-scale (one row per token position) stream in
     * [[graft.SessionTemp]] PER CALL, reclaimed at JVM exit — a
     * long-lived driver scoring many corpora should call
     * `SessionTemp.cleanupNow()` between rounds (safe once the returned
-    * frame is consumed) or pass `materializeBigrams = false` to trade
-    * the second scan for zero scratch. */
+    * frame is consumed). */
   def bigramPerplexity(d: DataFrame, idCol: String = "doc_id",
-      broadcastMaxRows: Long = defaultBroadcastMaxRows,
-      materializeBigrams: Boolean = true): DataFrame = {
+      broadcastMaxRows: Long = defaultBroadcastMaxRows): DataFrame = {
     val spark = d.sparkSession
-    def derived = d
-      .select(col(idCol), expr(TextAnalysis.tokensExpr).as("ts"))
-      .filter(size(col("ts")) >= 2)
-      .select(col(idCol), explode(expr(bigramsExpr)).as("b"))
-      .select(col(idCol), col("b.prev").as("prev"), col("b.cur").as("cur"))
     // the ONE pass that pays tokenize + explode: the narrow
     // (id, prev, cur) stream lands in session-temp parquet and both
     // the model aggregation and the score join read it from there
-    // (a () => DataFrame so the legacy mode still re-derives per use)
-    val bg: () => DataFrame =
-      if (materializeBigrams) {
-        val tmpB = graft.SessionTemp.dir("graft_bigram_stream_")
-        derived.write.mode("overwrite").parquet(tmpB)
-        val stream = spark.read.parquet(tmpB)
-        () => stream
-      } else { () => derived }
-    val model = bg().groupBy("prev", "cur").agg(count(lit(1)).as("cnt"))
+    // (re-deriving it for the score join instead measured
+    // cost-neutral — 6.50 vs 6.66 s at sf10, 57.5 vs 56.9 s at sf100 —
+    // so only this one shape is kept)
+    val tmpB = graft.SessionTemp.dir("graft_bigram_stream_")
+    d.select(col(idCol), expr(TextAnalysis.tokensExpr).as("ts"))
+      .filter(size(col("ts")) >= 2)
+      .select(col(idCol), explode(expr(bigramsExpr)).as("b"))
+      .select(col(idCol), col("b.prev").as("prev"), col("b.cur").as("cur"))
+      .write.mode("overwrite").parquet(tmpB)
+    val bg = spark.read.parquet(tmpB)
+    val model = bg.groupBy("prev", "cur").agg(count(lit(1)).as("cnt"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val modelRows = model.count() // materializes the cache; probs is 1:1
     val ptot = model.groupBy("prev").agg(sum("cnt").as("tot"))
@@ -107,12 +98,17 @@ object LanguageModel {
         log((col("cnt") + lit(1.0)) / (col("tot") + col("v"))).as("lp"))
     // Size-gated model delivery (same gate, same two relations — only
     // WHERE the probs rows live differs):
-    //  - at or below the broadcast ceiling, the probs table is exactly
-    //    what a broadcast build would collect to the driver anyway —
-    //    collect it once from the cached model and broadcast a local
-    //    relation, skipping the parquet write+read round-trip outright
-    //    (the round-trip existed to make the row count metadata-cheap,
-    //    but the count is already known from the cache);
+    //  - at or below the broadcast ceiling, collect the probs table
+    //    once from the cached model and broadcast a local relation,
+    //    skipping the parquet write+read round-trip outright (the
+    //    round-trip existed to make the row count metadata-cheap, but
+    //    the count is already known from the cache). Driver heap: this
+    //    is NOT just the bytes a broadcast build would hold — while
+    //    the relation is built, the collected Row array and the
+    //    LocalRelation's InternalRow copy of it coexist, so near the
+    //    2M-row gate the driver holds two full copies of the probs
+    //    table, and the broadcast build adds its hashed relation when
+    //    the join executes;
     //  - above the ceiling the DURABLE path is unchanged: probs land in
     //    session-temp parquet (survives executor loss; the broadcast
     //    would not fit regardless) and the score join shuffles on the
@@ -129,7 +125,7 @@ object LanguageModel {
         model.unpersist()
         spark.read.parquet(tmp)
       }
-    bg().join(modelDf, Seq("prev", "cur"))
+    bg.join(modelDf, Seq("prev", "cur"))
       .groupBy(idCol)
       .agg(count(lit(1)).as("n_bigrams"),
         exp(-avg(col("lp"))).as("ppl"))

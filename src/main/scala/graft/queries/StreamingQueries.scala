@@ -958,16 +958,8 @@ object StreamingQueries {
           col("doc_id") < cuts(i + 1))
         // one file per slice: a slice IS a micro-batch under the
         // runner's maxFilesPerTrigger=1
-        val stage = s"$streamDir/_stage_$i"
-        delta.coalesce(1).write.mode("overwrite").parquet(stage)
-        val ls = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        val part =
-          try ls.filter(_.toString.endsWith(".parquet")).findFirst().get()
-          finally ls.close()
-        java.nio.file.Files.move(part, java.nio.file.Paths.get(
-          f"$streamDir/documents-$i%02d.parquet"))
-        org.apache.commons.io.FileUtils.deleteDirectory(
-          new java.io.File(stage))
+        val slice = graft.BenchFixtures.writeSingleFile(delta.coalesce(1),
+          streamDir, f"documents-$i%02d")
         // absorb the arrival into the census, then emit ONLY the delta
         graft.streaming.IncrementalSpanCensus.run(s, streamDir, workDir)
         // the emission consumes the STAGED slice file (same rows as
@@ -976,7 +968,7 @@ object StreamingQueries {
         // documents table — the shape a production stream has anyway
         // (the arriving slice IS a file)
         graft.streaming.IncrementalSpanCensus.emitNewDocs(s, workDir,
-          s.read.parquet(f"$streamDir/documents-$i%02d.parquet"))
+          s.read.parquet(slice))
       }
       graft.streaming.IncrementalSpanCensus.emittedCorpus(s, workDir)
         .orderBy("doc_id")

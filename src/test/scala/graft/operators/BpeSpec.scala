@@ -300,9 +300,6 @@ class BpeSpec extends AnyFunSuite {
     assert(collect(Bpe.tokenCountsViaVocab(d, merges)) == expect)
     assert(collect(Bpe.tokenCountsViaVocab(d, merges,
       broadcastMaxRows = 0L)) == expect)
-    // materialized token stream == the default re-deriving shape
-    assert(collect(Bpe.tokenCountsViaVocab(d, merges,
-      materializeTokens = true)) == expect)
     // no merges: BPE count = char count of Sep-free tokens
     assert(collect(Bpe.tokenizeCorpus(d, Seq.empty)) ==
       refDocCounts(rows, Seq.empty))

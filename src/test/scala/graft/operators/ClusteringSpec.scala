@@ -164,6 +164,13 @@ class ClusteringSpec extends AnyFunSuite {
         twoLevel = Some(true))
       .collect().map(_.getLong(0)).toSet
     assert(auto == pinned && auto.contains(500L), s"auto=$auto")
+    // one below it: the flat path, which the materializeK rule writes
+    // to session-temp (k - 1 >= materializeK) — both sides of the rule
+    // stay covered, the small-k side by the tests above
+    assert(k - 1 >= Clustering.materializeK)
+    val flat = Clustering.semanticDrops(dup, k - 1, iters = 1, tau = 0.99)
+      .collect().map(_.getLong(0)).toSet
+    assert(flat.contains(500L), s"flat=$flat")
   }
 
   test("degenerate inputs: empty, single row, k > n, zero-norm vector") {

@@ -123,8 +123,9 @@ PYEOF
 fi
 
 # anchor the per-query artifact at THIS tree's root (an A/B prev arm
-# must not overwrite the shipped tree's record)
-export GRAFT_BENCH_QUERIES_FILE="${GRAFT_BENCH_QUERIES_FILE:-$REPO_ROOT/BENCH_QUERIES.json}"
+# must not overwrite the shipped tree's record), keyed by core count (an
+# 8-core run must not overwrite the 32-core record)
+export GRAFT_BENCH_QUERIES_FILE="${GRAFT_BENCH_QUERIES_FILE:-$REPO_ROOT/BENCH_QUERIES_c${SPARK_GRAFT_CPUS:-32}.json}"
 exec java $FLAGS $EXTRA_JAVA_OPTS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -cp "$REPO_ROOT/target/scala-2.13/classes:/opt/spark/jars/*" graft.Bench "$@"
