@@ -61,7 +61,7 @@ import graft.streaming.{IncrementalDsir, IncrementalSpanCensus}
   * span-emit  <docs> [deltaRows=5000] [mainSlices=4]      docs delta_rows emit_bounded_sec
   *            [compactTargetBytes]                        emit_accumulated_sec compacted
   * topic      [iters=40] [--stream]                       metric=topiclog_metadata_walk tp_ratio
-  *                                                        tps_<n>{…} iters;
+  *                                                        tps_<n>{…} wide_256{…} iters;
   *                                                        metric=topiclog_stream_drain_1000tp …
   * floor      <sfDir>                                     metric=lifecycle_floor fresh_sec
   *                                                        resume_nodata_sec resume_1file_sec
@@ -756,18 +756,24 @@ object ScaleBench {
     * [[FileTopicLog.endOffsets]] runs once per micro-batch over every
     * whitelisted (topic, partition) — the one driver cost that grows
     * with assignment size, not data size (the reference plans routes
-    * over THOUSANDS of TPs). ms/walk at 20 / 100 / 1000 TPs: `uncached`
-    * (the pre-cache baseline), `steady` (no commits between walks),
-    * `dirty1` (one TP commits between walks), `allhot_*` (every topic
-    * appends between walks; exact vs TTL listing), and the retention
-    * cut over every partition (one group snapshot vs per-partition
-    * re-reads). Pure filesystem metadata — no Spark. `--stream` then
-    * drains 1000 TPs through the real streaming source. */
+    * over THOUSANDS of TPs). ms/walk at 20 / 100 / 1000 TPs in
+    * 4-partition topics (`tps_<n>`) and one 256-partition topic
+    * (`wide_256`): `uncached` (the pre-cache baseline), `steady` (no
+    * commits between walks), `dirty1` (one TP commits between walks),
+    * `allhot_*` (every topic appends between walks; exact vs TTL
+    * listing), `cut_walk` (a real truncating retention walk retiring
+    * one record per TP, one [[FileTopicLog.truncateTopic]] per topic),
+    * and the retention cut computation over every partition (one group
+    * snapshot vs per-partition re-reads). Pure filesystem — no Spark.
+    * `--stream` then drains 1000 TPs through the real streaming
+    * source. */
   private def topic(c: Ctx, args: Seq[String]): Unit = {
-    val parts = 4
     val iters = args.headOption.filterNot(_ == "--stream").fold(40)(_.toInt)
-    val out = Seq(5, 25, 250).map { nTopics => // 20 / 100 / 1000 TPs
-      val root = SessionTemp.dir(s"graft_tpscale_$nTopics")
+    // 20 / 100 / 1000 TPs over 4-partition topics, then one wide topic
+    val sizes = Seq((5, 4, "tps_20"), (25, 4, "tps_100"), (250, 4, "tps_1000"),
+      (1, 256, "wide_256"))
+    val out = sizes.map { case (nTopics, parts, label) =>
+      val root = SessionTemp.dir(s"graft_tpscale_${label}_")
       val topics = (0 until nTopics).map(i => f"topic$i%04d")
       topics.foreach { t =>
         (0 until parts).foreach(p =>
@@ -808,6 +814,17 @@ object ScaleBench {
       val end = FileTopicLog.endOffsets(root)
       require(end(topics.head)(0) > 1L, "dirty commits must be visible")
       require(end.size == nTopics && end.forall(_._2.size == parts))
+      // the retention walk a truncating commit runs (no groups yet, so
+      // each cut is the query's own position): every walk retires one
+      // record per TP, so each TP gets one record per timed walk first
+      topics.foreach(t => (0 until parts).foreach(p =>
+        FileTopicLog.append(root, t, p, (0 until iters + 2).map(topicRec))))
+      val cutWalk = time {
+        topics.foreach(t => FileTopicLog.truncateTopic(root, t,
+          (0 until parts).map(p => p -> (FileTopicLog.startOffset(root, t, p) + 1))))
+      }
+      require(FileTopicLog.startOffset(root, topics.last, parts - 1) == iters + 2,
+        "every walk must retire one record per TP")
       Seq("g1", "g2", "g3").foreach { g =>
         FileTopicLog.registerGroup(root, g)
         FileTopicLog.commitGroup(root, g,
@@ -823,9 +840,9 @@ object ScaleBench {
           FileTopicLog.retentionCut(root, t, p, 1L): Unit))
       }
       (nTopics * parts,
-        f""""tps_${nTopics * parts}":{"uncached_ms":$uncached%.3f,"steady_ms":$steady%.3f,"dirty1_ms":$dirty%.3f,"allhot_exact_ms":$hotExact%.3f,"allhot_ttl_ms":$hotTtl%.3f,"cut_snapshot_ms":$cutSnap%.3f,"cut_perpart_ms":$cutPer%.3f}""")
+        f""""$label":{"uncached_ms":$uncached%.3f,"steady_ms":$steady%.3f,"dirty1_ms":$dirty%.3f,"allhot_exact_ms":$hotExact%.3f,"allhot_ttl_ms":$hotTtl%.3f,"cut_walk_ms":$cutWalk%.3f,"cut_snapshot_ms":$cutSnap%.3f,"cut_perpart_ms":$cutPer%.3f}""")
     }
-    val ratio = out.last._1.toDouble / out.head._1
+    val ratio = out(2)._1.toDouble / out.head._1
     println(f"""{"metric":"topiclog_metadata_walk","unit":"ms_per_walk","tp_ratio":$ratio%.0f,${out.map(_._2).mkString(",")},"iters":$iters}""")
     if (args.contains("--stream")) topicStreamDrain(c.spark)
   }

@@ -185,10 +185,20 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
     * lexicographically-early topic that alone produces >= budget per
     * trigger starve every later topic forever, where the reference's
     * poll loop services every assigned TP each cycle
-    * (`W/ConsumerFetcherThread.java:134-154`). Floor-divide shares; any
-    * TP with data gets at least one row (a sub-1 share would floor to
-    * zero and re-starve low-volume TPs behind a growing hot backlog —
-    * Spark's Kafka source ceils sub-1 prorations for the same reason).
+    * (`W/ConsumerFetcherThread.java:134-154`). Shares are apportioned by
+    * largest remainder: each TP first gets its floor share
+    * `floor(budget·a/total)`, any TP with data gets at least one row (a
+    * sub-1 share would floor to zero and re-starve low-volume TPs behind
+    * a growing hot backlog — Spark's Kafka source ceils sub-1
+    * prorations for the same reason), and the rows the floors leave in
+    * the budget go one each to the TPs with the largest fractional
+    * remainders `budget·a mod total`, ties in canonical (topic,
+    * partition) order. TPs the min-1 floor lifted already hold the
+    * ceiling of their quota and take no remainder row. A capped batch
+    * therefore plans exactly `budget` rows unless the min-1 floor
+    * overshoots it, and a backlog of N rows drains in ceil(N/budget)
+    * batches — floor shares alone under-fill every capped batch by the
+    * sum of the fractional parts and leave a one-row-per-TP tail batch.
     * When the budget is smaller than the number of non-empty TPs the
     * per-TP floor itself would overshoot unboundedly, so the floor is
     * round-robined instead: exactly `budget` TPs take 1 row, the run
@@ -256,17 +266,30 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
             }
           (t, p) -> (from + take)
         }
-      } else avail.map { case (t, p, from, a) =>
-        val take =
-          if (a == 0L) 0L
-          else {
-            // floor share via BigInt (budget * a overflows Long at
-            // scale); min 1 row keeps every non-empty TP live under a
-            // sustained cap (overshoot ≤ 1 row/TP ≤ budget here)
-            val share = (BigInt(budget) * BigInt(a) / BigInt(total)).toLong
-            math.min(a, math.max(share, 1L))
-          }
-        (t, p) -> (from + take)
+      } else {
+        // (floor share, remainder) via BigInt (budget * a overflows Long
+        // at scale); the remainder is < total, so it fits a Long
+        val shares = avail.toVector.map { case (_, _, _, a) =>
+          val (q, r) = (BigInt(budget) * BigInt(a)) /% BigInt(total)
+          (q.toLong, r.toLong)
+        }
+        // min 1 row keeps every non-empty TP live under a sustained cap
+        // (overshoot ≤ 1 row/TP ≤ budget here); share < a whenever the
+        // plan is capped, so only a lifted TP with a == 1 is fully taken
+        val floors = avail.zip(shares).map { case ((_, _, _, a), (q, _)) =>
+          if (a == 0L) 0L else math.min(a, math.max(q, 1L))
+        }
+        // the rows the floors leave in the budget: one each to the
+        // largest remainders among TPs the min-1 floor did not lift;
+        // `left` is below the number of such TPs with a non-zero
+        // remainder, so one pass fills the budget exactly
+        val left = budget - floors.sum
+        val extra = if (left <= 0L) Set.empty[Int]
+          else shares.indices.filter(i => shares(i)._1 > 0L)
+            .sortBy(i => (-shares(i)._2, i)).take(left.toInt).toSet
+        avail.zip(floors).zipWithIndex.map { case (((t, p, from, _), f), i) =>
+          (t, p) -> (from + f + (if (extra(i)) 1L else 0L))
+        }
       }
     val advanced = takes.groupBy(_._1._1).map { case (t, tps) =>
       t -> tps.map { case ((_, p), pos) => p -> pos }.toMap
@@ -374,7 +397,7 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
     * serializing with registerGroup: "from registration the group
     * blocks retention" holds exactly — no window where a
     * just-registered group is invisible to an in-flight cut. Cheap to
-    * hold: ~ms even at 1000-TP assignments (see TopicScaleBench). */
+    * hold: ~ms even at 1000-TP assignments (see `ScaleBench topic`). */
   /** (positions, group snapshot) of the last completed idle-tick heal.
     * The heal exists to close ONE stale-min race after traffic stops;
     * once it has run against a given (position, snapshot) pair the cut
@@ -392,10 +415,9 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
       val snap = FileTopicLog.groupSnapshot(root)
       if (publish || !lastIdleHeal.contains((pos, snap))) {
         pos.foreach { case (t, ps) =>
-          ps.foreach { case (p, off) =>
-            FileTopicLog.truncateBelow(root, t, p,
-              FileTopicLog.retentionCut(snap, root, t, p, off))
-          }
+          FileTopicLog.truncateTopic(root, t, ps.map { case (p, off) =>
+            p -> FileTopicLog.retentionCut(snap, root, t, p, off)
+          })
         }
         // a data commit moves positions; force the next idle tick to
         // heal once against the fresh state, then settle.

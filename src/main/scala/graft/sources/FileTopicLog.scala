@@ -370,8 +370,48 @@ object FileTopicLog {
     * a reader at `offset` or above sees identical records before and
     * after; a reader below clamps to the new start. */
   def truncateBelow(root: String, topic: String, partition: Int,
-      offset: Long): Unit = {
-    if (truncateIsNoop(root, topic, partition, offset)) return
+      offset: Long): Unit =
+    truncateTopic(root, topic, Seq(partition -> offset))
+
+  /** [[truncateBelow]] for several partitions of one topic, cut in turn
+    * as `(partition, offset)` pairs — one retention walk over a topic.
+    * No-op cuts are skipped first, and the topic directory is listed
+    * ONCE, only if some partition needs a cut, for the crash-garbage
+    * sweep of every partition cut here: per-partition listings cost
+    * O(P²) dirents per walk of a P-partition topic. */
+  def truncateTopic(root: String, topic: String,
+      cuts: Iterable[(Int, Long)]): Unit = {
+    val live = cuts.filterNot { case (p, o) => truncateIsNoop(root, topic, p, o) }
+    if (live.isEmpty) return
+    val debris = listDebris(dir(root, topic))
+    live.foreach { case (p, o) =>
+      cutPartition(root, topic, p, o, debris.getOrElse(p, Nil))
+    }
+  }
+
+  private val TmpName = "^_p(\\d+)\\..*\\.tmp$".r
+  private val DataName = "^p(\\d+)(?:\\.e(\\d+))?\\.(log|idx)$".r
+
+  /** Crash-garbage candidates in a topic dir, by partition: every data
+    * file with its epoch, and every partition tmp as epoch -1 (dead
+    * once its writer no longer holds the lock). Garbage-ness is decided
+    * later, under each partition's lock, against the committed epoch. */
+  private def listDebris(d: Path): Map[Int, Seq[(String, Long)]] = {
+    import scala.jdk.CollectionConverters._
+    sweepListings.incrementAndGet(): Unit
+    val s = Files.list(d)
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .collect {
+        case n @ TmpName(p) => (p.toInt, (n, -1L))
+        case n @ DataName(p, e, _) =>
+          (p.toInt, (n, if (e == null) 0L else e.toLong))
+      }
+      .toSeq.groupMap(_._1)(_._2)
+    finally s.close()
+  }
+
+  private def cutPartition(root: String, topic: String, partition: Int,
+      offset: Long, debris: Seq[(String, Long)]): Unit =
     withPartitionLock(root, topic, partition) {
     val st = state(root, topic, partition)
     val newBase = math.min(math.max(offset, st.base), st.end)
@@ -385,9 +425,6 @@ object FileTopicLog {
     val newEpoch = st.epoch + 1
     val newLf = dataFile(root, topic, partition, newEpoch, "log")
     val newXf = dataFile(root, topic, partition, newEpoch, "idx")
-    // write the retained suffix: log bytes [dropBytes, endPos) verbatim,
-    // idx entries rebased by -dropBytes — via tmp + ATOMIC_MOVE so a
-    // concurrent reader never opens a half-written epoch file
     // Crash-garbage sweep (under the lock): a cleaner that died between
     // tmp-write and publish leaves epoch-named tmps that never recur
     // (unlike `_p<P>.count.tmp`, which is reused and self-heals), and
@@ -396,24 +433,17 @@ object FileTopicLog {
     // deletes its own predecessor — would otherwise never touch. Both
     // are dead by construction once `.count` names a different epoch;
     // deleting them is safe even with readers open (POSIX keeps open
-    // FDs alive past unlink).
-    locally {
-      import scala.jdk.CollectionConverters._
-      val tmpRe = s"^_p$partition\\..*\\.tmp$$".r
-      val dataRe = s"^p$partition(?:\\.e(\\d+))?\\.(log|idx)$$".r
-      val sweep = Files.list(dir(root, topic))
-      try sweep.iterator().asScala
-        .filter { f =>
-          f.getFileName.toString match {
-            case tmpRe() => true
-            case dataRe(e, _) =>
-              (if (e == null) 0L else e.toLong) != st.epoch
-            case _ => false
-          }
-        }
-        .foreach(Files.deleteIfExists(_))
-      finally sweep.close()
+    // FDs alive past unlink). `debris` comes from the walk's one
+    // listing, taken before this lock: a listed name is deleted only if
+    // it is garbage against the epoch read HERE, and epochs only grow,
+    // so a stale listing can miss garbage (swept by a later cut) but
+    // never names a live file.
+    debris.foreach { case (n, e) =>
+      if (e != st.epoch) Files.deleteIfExists(dir(root, topic).resolve(n)): Unit
     }
+    // write the retained suffix: log bytes [dropBytes, endPos) verbatim,
+    // idx entries rebased by -dropBytes — via tmp + ATOMIC_MOVE so a
+    // concurrent reader never opens a half-written epoch file
     val tmpLf = newLf.resolveSibling(s"_${newLf.getFileName}.tmp")
     val tmpXf = newXf.resolveSibling(s"_${newXf.getFileName}.tmp")
     val in = java.nio.channels.FileChannel.open(oldLf, StandardOpenOption.READ)
@@ -445,7 +475,6 @@ object FileTopicLog {
     Files.deleteIfExists(oldLf): Unit
     Files.deleteIfExists(oldXf): Unit
     }
-  }
 
   /** Atomically publish a partition written in a scratch root into
     * `dstRoot` — the idempotent ingest pattern for task-side writers: a
@@ -599,6 +628,11 @@ object FileTopicLog {
   /** Count of actual directory walks (cache misses) — observability
     * for specs and the scale bench; not part of the API surface. */
   private[graft] val listingWalks = new java.util.concurrent.atomic.AtomicLong(0)
+
+  /** Count of topic-directory listings taken by retention walks for the
+    * crash-garbage sweep — observability for specs, like
+    * [[listingWalks]]. */
+  private[graft] val sweepListings = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Margin under which a directory mtime counts as "could still be
     * racing": covers coarse-clock filesystem timestamp granularity

@@ -44,4 +44,16 @@ class SessionTempSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty, s"route these through SessionTemp: $offenders")
   }
+
+  test("no raw createTempDirectory remains in the sources specs") {
+    import scala.jdk.CollectionConverters._
+    val walk = Files.walk(Paths.get("src/test/scala/graft/sources"))
+    val offenders =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .filter(p => Files.readString(p).contains("createTempDirectory"))
+        .map(_.toString).toList
+      finally walk.close()
+    assert(offenders.isEmpty, s"route these through SessionTemp: $offenders")
+  }
 }

@@ -32,7 +32,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
       headers = Seq("seq" -> b(i.toString)))
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_dynlog_").toString
+    graft.SessionTemp.dir("graft_dynlog_")
 
   private def startQuery(root: String, ckpt: String, sink: String,
       maxRows: Option[Long] = None, truncateOnCommit: Boolean = false,
@@ -85,7 +85,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("in-flight add and remove: one runId observes both assignment changes") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.append(root, "alpha", 0, (0 until 10).map(rec))
     FileTopicLog.append(root, "beta", 0, (0 until 10).map(rec))
     FileTopicLog.setWhitelist(root, Seq("alpha"))
@@ -132,7 +132,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("exactly-once across stop + checkpoint resume") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 8).map(rec))
     FileTopicLog.append(root, "t", 1, (0 until 5).map(rec))
@@ -155,7 +155,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("maxRowsPerTrigger paces batches through admission control") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 30).map(rec))
 
@@ -172,7 +172,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("runtime rate change (R1) tightens and releases batches in flight") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 20).map(rec))
 
@@ -272,7 +272,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("a frozen topic's position survives retention of OTHER offsets mid-query") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("a", "b"))
     FileTopicLog.append(root, "a", 0, (0 until 10).map(rec))
     FileTopicLog.append(root, "b", 0, (0 until 10).map(rec))
@@ -300,7 +300,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("truncateOnCommit retires consumed records behind a running query") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 10).map(rec))
     val q = s.readStream.format("graft-topiclog").option("path", root)
@@ -373,7 +373,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     // (the engine commits batch N while constructing N+1), so each round
     // appends fresh data and drains BOTH queries to flush them through.
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 12).map(rec))
     FileTopicLog.registerGroup(root, "slow")
@@ -430,7 +430,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     // cut against the CURRENT group snapshot — so the base advances
     // with NO further append.
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynidle_").toString
+    val base = graft.SessionTemp.dir("graft_dynidle_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 12).map(rec))
     FileTopicLog.registerGroup(root, "slow")
@@ -546,6 +546,74 @@ class DynamicTopicLogSpec extends AnyFunSuite {
       (6 until 10).map(i => s"v$i"))
   }
 
+  test("a topic-level retention walk lists the topic dir once and sweeps every cut partition") {
+    // One walk cuts p0 and p1 of topic t; p2 rides along with a no-op
+    // cut. The sweep takes ONE listing of the topic dir for the whole
+    // walk, removes both cut partitions' planted garbage (an orphan
+    // epoch and a dead epoch tmp), and leaves every file of p2 alone.
+    val root = freshRoot()
+    (0 until 3).foreach(p => FileTopicLog.append(root, "t", p, (0 until 10).map(rec)))
+    val d = java.nio.file.Paths.get(root, "t")
+    (0 until 3).foreach { p =>
+      Files.write(d.resolve(s"p$p.e5.log"), Array[Byte](1, 2, 3))  // orphan epoch
+      Files.write(d.resolve(s"p$p.e5.idx"), Array[Byte](4, 5))
+      Files.write(d.resolve(s"_p$p.e3.log.tmp"), Array[Byte](6))   // dead tmp
+    }
+    def filesOf(p: Int): Set[String] = {
+      import scala.jdk.CollectionConverters._
+      val s = Files.list(d)
+      try s.iterator().asScala.map(_.getFileName.toString)
+        .filter(n => n.startsWith(s"p$p.") || n.startsWith(s"_p$p.")).toSet
+      finally s.close()
+    }
+    val p2Before = filesOf(2)
+    val listings0 = FileTopicLog.sweepListings.get()
+    FileTopicLog.truncateTopic(root, "t", Seq(0 -> 4L, 1 -> 6L, 2 -> 0L))
+    assert(FileTopicLog.sweepListings.get() - listings0 === 1,
+      "the topic dir is listed once per walk, not once per partition")
+    Seq(0, 1).foreach { p =>
+      assert(!Files.exists(d.resolve(s"p$p.e5.log")), s"p$p orphan epoch swept")
+      assert(!Files.exists(d.resolve(s"p$p.e5.idx")), s"p$p orphan idx swept")
+      assert(!Files.exists(d.resolve(s"_p$p.e3.log.tmp")), s"p$p dead tmp swept")
+    }
+    assert(filesOf(2) === p2Before, "an uncut partition keeps all of its files")
+    assert(FileTopicLog.read(root, "t", 0, 0, 10).map(_._1).toSeq === (4L until 10L))
+    assert(FileTopicLog.read(root, "t", 1, 0, 10).map(_._1).toSeq === (6L until 10L))
+    assert(FileTopicLog.read(root, "t", 2, 0, 10).map(_._1).toSeq === (0L until 10L))
+    // a walk whose every cut is a no-op never lists the directory
+    FileTopicLog.truncateTopic(root, "t", Seq(0 -> 4L, 1 -> 2L, 2 -> 0L))
+    assert(FileTopicLog.sweepListings.get() - listings0 === 1,
+      "an all-no-op walk takes no listing")
+  }
+
+  test("a capped backlog of 2x the cap drains in exactly two full batches") {
+    // 3 topics x 8 partitions with odd counts 3, 5, …, 49 (624 rows)
+    // under a 312-row cap: every floor share is half a row short, so
+    // floor shares alone plan 300 rows and leave a third batch; the
+    // largest-remainder rows fill the first batch to the cap exactly.
+    val root = freshRoot()
+    val base = graft.SessionTemp.dir("graft_dynq_")
+    val topics = Seq("a", "b", "c")
+    val counts = for { (t, ti) <- topics.zipWithIndex; p <- 0 until 8 }
+      yield (t, p, 2 * (ti * 8 + p) + 3)
+    counts.foreach { case (t, p, n) => FileTopicLog.append(root, t, p, (0 until n).map(rec)) }
+    FileTopicLog.setWhitelist(root, topics)
+    val cap = counts.map(_._3).sum / 2
+    assert(cap === 312)
+    val q = s.readStream.format("graft-topiclog").option("path", root)
+      .option("maxRowsPerTrigger", cap.toString)
+      .load()
+      .selectExpr("topic", "partition", "offset")
+      .writeStream.format("parquet")
+      .option("path", s"$base/sink")
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq === Seq(cap.toLong, cap.toLong))
+    assert(sinkDf(s"$base/sink").distinct().count() === 2L * cap)
+  }
+
   test("append reconciles uncommitted garbage left by a crashed writer") {
     val root = freshRoot()
     FileTopicLog.append(root, "t", 0, (0 until 5).map(rec))
@@ -598,7 +666,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
           ev: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
         maxStageTasks.getAndUpdate(m => math.max(m, ev.stageInfo.numTasks)): Unit
     }
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     s.sparkContext.addSparkListener(listener)
     try {
       val q = startQuery(root, s"$base/ckpt", s"$base/sink")
@@ -623,7 +691,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     val root = freshRoot()
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 4).map(rec))
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     val q = startQuery(root, s"$base/ckpt", s"$base/sink")
     try {
       val runId = q.runId
@@ -650,7 +718,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     // topic up from offset 0 at the first post-creation batch.
     val root = freshRoot()
     FileTopicLog.setWhitelist(root, Seq("future"))
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     val q = startQuery(root, s"$base/ckpt", s"$base/sink")
     try {
       q.processAllAvailable() // no data, no directory — must not throw
@@ -676,7 +744,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     FileTopicLog.append(root, "t", 0, (0 until 10).map(rec))
     FileTopicLog.truncateBelow(root, "t", 0, 8L)
     assert(FileTopicLog.startOffset(root, "t", 0) === 8)
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     val q = startQuery(root, s"$base/ckpt", s"$base/sink", maxRows = Some(2L))
     try {
       q.processAllAvailable()
@@ -705,7 +773,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
           ev: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
         maxStageTasks.getAndUpdate(m => math.max(m, ev.stageInfo.numTasks)): Unit
     }
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     s.sparkContext.addSparkListener(listener)
     try {
       val q = s.readStream.format("graft-topiclog").option("path", root)
@@ -911,7 +979,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     // end-to-end: a stream with bounded-staleness discovery still picks
     // up a partition created mid-query — just possibly one TTL late.
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_ttlq_").toString
+    val base = graft.SessionTemp.dir("graft_ttlq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 3).map(rec))
     val q = s.readStream.format("graft-topiclog").option("path", root)
@@ -969,7 +1037,7 @@ class DynamicTopicLogSpec extends AnyFunSuite {
 
   test("availableNow drains the start-time snapshot and terminates") {
     val root = freshRoot()
-    val base = Files.createTempDirectory("graft_dynq_").toString
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
     FileTopicLog.append(root, "t", 0, (0 until 12).map(rec))
 

@@ -1,7 +1,6 @@
 package graft.sources
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.Files
 
 import graft.sources.FileTopicLog.LogRecord
 import org.scalacheck.{Gen, Properties}
@@ -27,7 +26,7 @@ import org.scalacheck.Prop.forAll
 object FileTopicLogProps extends Properties("FileTopicLog") {
 
   private def freshRoot(): String =
-    Files.createTempDirectory("graft_logprops_").toString
+    graft.SessionTemp.dir("graft_logprops_")
 
   private val genBytes: Gen[Array[Byte]] =
     Gen.chooseNum(0, 24).flatMap(n =>

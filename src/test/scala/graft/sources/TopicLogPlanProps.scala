@@ -91,8 +91,7 @@ object TopicLogPlanProps extends Properties("TopicLogPlanning") {
 
   propertyWithSeed("maxRows budget prorates by available rows, min 1/TP", None) =
     forAll(genLog, Gen.chooseNum(0L, 60L)) { (tps, budget) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_budget_").toString
+      val root = graft.SessionTemp.dir("graft_budget_")
       tps.foreach { case (t, p, n) =>
         FileTopicLog.append(root, t, p, (0 until n).map(rec))
       }
@@ -101,14 +100,16 @@ object TopicLogPlanProps extends Properties("TopicLogPlanning") {
       val end = stream.latestOffset(TopicLogOffset(Map.empty),
         org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(budget))
         .asInstanceOf[TopicLogOffset].positions
-      // expected: the fair-share model — floor(budget * avail / total),
-      // clamped to [1, avail] when capped (liveness: every non-empty TP
-      // advances), full drain when everything fits, and — when the
-      // budget is below the number of non-empty TPs — the round-robined
-      // floor: the first `budget` TPs in canonical order (rotation 0
-      // here: all start positions are 0) take exactly 1 row.
-      // Byte-for-byte what a capped batch must plan so replays are
-      // deterministic.
+      // expected: the largest-remainder model — floor(budget * avail /
+      // total), clamped to [1, avail] when capped (liveness: every
+      // non-empty TP advances), then the rows left in the budget one
+      // each to the largest remainders (budget * avail mod total) among
+      // TPs whose floor share is >= 1, ties in canonical order; full
+      // drain when everything fits, and — when the budget is below the
+      // number of non-empty TPs — the round-robined floor: the first
+      // `budget` TPs in canonical order (rotation 0 here: all start
+      // positions are 0) take exactly 1 row. Byte-for-byte what a
+      // capped batch must plan so replays are deterministic.
       val total = tps.map(_._3.toLong).sum
       val sorted = tps.sortBy(t => (t._1, t._2))
       val nonEmpty = sorted.size // genLog counts are >= 1
@@ -118,13 +119,60 @@ object TopicLogPlanProps extends Properties("TopicLogPlanning") {
           sorted.zipWithIndex.map { case ((t, p, _), i) =>
             (t, p) -> (if (i < budget) 1L else 0L)
           }.toMap
-        else sorted.map { case (t, p, n) =>
-          (t, p) -> math.min(n.toLong,
-            math.max((BigInt(budget) * BigInt(n) / BigInt(total)).toLong, 1L))
-        }.toMap
+        else {
+          val quota = sorted.map { case (_, _, n) =>
+            (budget * n / total, budget * n % total) }
+          val floors = sorted.zip(quota).map { case ((_, _, n), (q, _)) =>
+            math.min(n.toLong, math.max(q, 1L)) }
+          val left = budget - floors.sum
+          val ranked = quota.zipWithIndex.filter(_._1._1 > 0L)
+            .sortBy { case ((_, r), i) => (-r, i) }.map(_._2)
+          val extra = if (left > 0L) ranked.take(left.toInt).toSet else Set.empty[Int]
+          sorted.zipWithIndex.map { case ((t, p, _), i) =>
+            (t, p) -> (floors(i) + (if (extra(i)) 1L else 0L))
+          }.toMap
+        }
       tps.forall { case (t, p, _) =>
         end.getOrElse(t, Map.empty[Int, Long]).getOrElse(p, 0L) == want((t, p))
       }
+    }
+
+  /** A capped batch whose floor shares are all >= 1 (the min-1 floor
+    * lifts no TP) plans EXACTLY the budget, each TP within one row of
+    * its floor share — a backlog of N rows drains in ceil(N/budget)
+    * batches, with no under-filled batch and no one-row-per-TP tail. */
+  private val genFilledCap: Gen[(List[(String, Int, Int)], Long)] = for {
+    nt <- Gen.chooseNum(1, 4)
+    tps <- Gen.listOfN(nt, for {
+      np <- Gen.chooseNum(1, 4)
+      counts <- Gen.listOfN(np, Gen.chooseNum(2, 40))
+    } yield counts)
+    log = tps.zipWithIndex.flatMap { case (cs, t) =>
+      cs.zipWithIndex.map { case (c, p) => (f"t$t%02d", p, c) }
+    }
+    total = log.map(_._3.toLong).sum
+    // budget * min(avail) >= total: every floor share is >= 1
+    lo = (total + log.map(_._3).min - 1) / log.map(_._3).min
+    budget <- Gen.chooseNum(lo, total - 1)
+  } yield (log, budget)
+
+  propertyWithSeed("a capped plan takes exactly the budget when no TP is lifted", None) =
+    forAll(genFilledCap) { case (tps, budget) =>
+      val root = graft.SessionTemp.dir("graft_exact_")
+      tps.foreach { case (t, p, n) =>
+        FileTopicLog.append(root, t, p, (0 until n).map(rec))
+      }
+      FileTopicLog.setWhitelist(root, tps.map(_._1).distinct)
+      val end = new DynamicTopicLogStream(root, None).latestOffset(
+        TopicLogOffset(Map.empty),
+        org.apache.spark.sql.connector.read.streaming.ReadLimit.maxRows(budget))
+        .asInstanceOf[TopicLogOffset].positions
+      val total = tps.map(_._3.toLong).sum
+      val takes = tps.map { case (t, p, n) =>
+        (end(t)(p), budget * n / total)
+      }
+      takes.map(_._1).sum == budget &&
+        takes.forall { case (take, share) => take == share || take == share + 1 }
     }
 
   /** Liveness under a sustained cap: however hot one TP is, every TP
@@ -134,8 +182,7 @@ object TopicLogPlanProps extends Properties("TopicLogPlanning") {
     * budget — never the unbounded one-row-per-TP floor. */
   propertyWithSeed("no TP with data is starved under a sustained cap", None) =
     forAll(genLog, Gen.chooseNum(1L, 30L)) { (tps, budget) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_starve_").toString
+      val root = graft.SessionTemp.dir("graft_starve_")
       tps.foreach { case (t, p, n) =>
         FileTopicLog.append(root, t, p, (0 until n).map(rec))
       }
@@ -179,8 +226,7 @@ object TopicLogPlanProps extends Properties("TopicLogPlanning") {
     * batches — no TP starves, no batch overshoots. */
   propertyWithSeed("budget below #TPs: exact budget per batch, full coverage", None) =
     forAll(Gen.chooseNum(3, 9), Gen.chooseNum(1L, 2L)) { (nTps, budget) =>
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_rr_").toString
+      val root = graft.SessionTemp.dir("graft_rr_")
       val tps = (0 until nTps).map(p => ("t00", p))
       tps.foreach { case (t, p) =>
         FileTopicLog.append(root, t, p, (0 until 100).map(rec))

@@ -66,7 +66,7 @@ class TopicObserverSpec extends AnyFunSuite {
   }
 
   test("B1: csv-backed loader reads (topic,count) lines") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_b1_")
+    val dir = java.nio.file.Paths.get(graft.SessionTemp.dir("graft_b1_"))
     val f = dir.resolve("catalog.csv")
     java.nio.file.Files.writeString(f, "click,4\nview,2\n")
     val obs = TopicCatalogObserver.fromCsv(spark, f.toString)
