@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{ArrayExceptSorted, BigramBuckets, BloomContains, BottomKDistinct, BpeSegment, DsirScore, DsirScoreN, DsirScoreUniBi, KafkaMurmur2Partition, MinHashLshBands, NgramBuckets, RepetitionStats, SimHash16, SpanCut, SpanCutPositions, SpanHashes, SpanHashesPos, UnibigramBuckets, VecDot, VecSumAgg, WordNGrams}
+import graft.functions.{ArrayExceptSorted, BigramBuckets, BloomContains, BottomKDistinct, BpeSegment, DsirScore, DsirScoreN, DsirScoreUniBi, KafkaMurmur2Partition, MinHashLshBands, NgramBuckets, NgramHashes, RepetitionStats, SimHash16, SpanCut, SpanCutPositions, SpanHashes, SpanHashesPos, UnibigramBuckets, VecDot, VecSumAgg, WordNGrams}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -13,11 +13,18 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  *
  * Injects the engine's codegen'd kernels — `kafka_partition(key, n)`
  * (murmur2-exact Kafka default partitioner, [[graft.functions.Murmur2]])
- * and the sketch kernels `minhash_lsh_bands(shingles)`,
- * `simhash16(tokens)`, `vec_dot(a, b)` ([[graft.functions.Sketches]]) —
- * the per-row hot loops Catalyst's interpreted higher-order functions
- * can't keep inside whole-stage codegen. Everything else the engine
- * needs is expressible with stock Catalyst (SURVEY §4).
+ * and the sketch kernels ([[graft.functions.Sketches]]) —
+ * `minhash_lsh_bands(shingles)`, `simhash16(tokens)`, `vec_dot(a, b)`,
+ * the n-gram family `word_ngrams` / `ngram_hashes` / `ngram_buckets` /
+ * `bigram_buckets` / `unibigram_buckets`, the span family `span_hashes`
+ * / `span_hashes_pos` / `span_cut` / `span_cut_positions`, the DSIR
+ * scorers `dsir_score` / `dsir_score_n` / `dsir_score_unibi`,
+ * `bpe_segment`, `repetition_stats`, `bloom_contains`,
+ * `array_except_sorted`, plus the aggregates `bottom_k_distinct`
+ * (BottomK.scala) and `vec_sum` (VecSum.scala) — the per-row hot loops
+ * Catalyst's interpreted higher-order functions can't keep inside
+ * whole-stage codegen. Everything else the engine needs is expressible
+ * with stock Catalyst (SURVEY §4).
  */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
@@ -43,6 +50,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     inject(ext, "simhash16", 1, classOf[SimHash16], c => SimHash16(c.head))
     inject(ext, "word_ngrams", 2, classOf[WordNGrams],
       c => WordNGrams(c.head, c(1)))
+    inject(ext, "ngram_hashes", 2, classOf[NgramHashes],
+      c => NgramHashes(c.head, c(1)))
     inject(ext, "span_hashes", 3, classOf[SpanHashes],
       c => SpanHashes(c.head, c(1), c(2)))
     inject(ext, "span_cut", 4, classOf[SpanCut],

@@ -713,6 +713,43 @@ object Sketches {
     new GenericArrayData(out)
   }
 
+  /** The 60-bit md5 hash ([[md5Long15]]) of each DISTINCT word n-gram,
+    * in [[wordNGrams]] order — the kernel behind
+    * `Decontamination.ngramHashes`. Bit-identical to
+    * `explode(word_ngrams(text, n))` → `conv(substring(md5(g),1,15),16,10)`
+    * (SketchParitySpec pins it), but each window is deduped and hashed
+    * straight off the shared [[TokenBuf]] bytes: no per-gram string,
+    * hex encoding or base conversion. Fewer than n tokens → empty
+    * array; n < 1 hashes the `word_ngrams` output as-is. */
+  def ngramHashes(text: UTF8String, n: Int): ArrayData = {
+    if (n < 1) {
+      val gs = wordNGrams(text, n)
+      return new GenericArrayData(Array.tabulate[Any](gs.numElements())(i =>
+        md5Long15(gs.getUTF8String(i).getBytes)))
+    }
+    val toks = spaceTokens(text)
+    val m = toks.size - n + 1
+    if (m <= 0) return new GenericArrayData(Array.empty[Any])
+    val tb = new TokenBuf(toks)
+    val md = Md5.get()
+    // ByteBuffer equality and hash are over the wrapped byte range, so
+    // the set dedupes n-grams by content without copying them out
+    val seen = new java.util.HashSet[java.nio.ByteBuffer](m * 2)
+    val out = new java.util.ArrayList[Any](m)
+    var i = 0
+    while (i < m) {
+      val from = tb.starts(i)
+      val len = tb.ends(i + n - 1) - from
+      if (seen.add(java.nio.ByteBuffer.wrap(tb.buf, from, len))) {
+        md.reset()
+        md.update(tb.buf, from, len)
+        out.add(digest60(md.digest()))
+      }
+      i += 1
+    }
+    new GenericArrayData(out.toArray)
+  }
+
   /**
    * Per-document repetition counters in ONE tokenization pass — the
    * Gopher/C4-family repetition quality signals (duplicate tokens,
@@ -844,6 +881,25 @@ case class WordNGrams(left: Expression, right: Expression) extends BinaryExpress
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): WordNGrams =
+    copy(left = newLeft, right = newRight)
+}
+
+/** `ngram_hashes(text STRING, n INT) -> ARRAY<BIGINT>` — the 60-bit md5
+  * hash of each distinct word n-gram, in `word_ngrams` order, one kernel
+  * call replacing the per-gram md5 → substring → conv chain (see
+  * [[Sketches.ngramHashes]]). */
+case class NgramHashes(left: Expression, right: Expression) extends BinaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def prettyName: String = "ngram_hashes"
+
+  override protected def nullSafeEval(text: Any, n: Any): Any =
+    Sketches.ngramHashes(text.asInstanceOf[UTF8String], n.asInstanceOf[Int])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (t, n) => s"graft.functions.Sketches.ngramHashes($t, $n)")
+
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): NgramHashes =
     copy(left = newLeft, right = newRight)
 }
 

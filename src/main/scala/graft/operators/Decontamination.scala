@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
@@ -33,18 +33,20 @@ import org.apache.spark.sql.functions._
  */
 object Decontamination {
 
-  /** md5 → 60-bit int (15 hex chars); DuckDB:
-    * `('0x'||substr(md5(x),1,15))::BIGINT`. */
-  private def md5Long(c: Column): Column =
-    conv(substring(md5(c), 1, 15), 16, 10).cast("long")
-
-  /** Distinct word-n-gram 60-bit hashes per document: (doc_id, gh).
-    * The n-gram kernel (tokenize, slide, join, dedupe) is ONE codegen'd
-    * call per row; only fixed-width 8-byte keys leave the scan. */
+  /** Distinct word-n-gram 60-bit hashes per document: (doc_id, gh),
+    * where gh is the DuckDB `('0x'||substr(md5(g),1,15))::BIGINT` of
+    * each distinct n-gram g. Tokenize, slide, dedupe and hash are ONE
+    * codegen'd `ngram_hashes` call per row
+    * ([[graft.functions.Sketches.ngramHashes]]); only fixed-width
+    * 8-byte keys leave the scan. `explode_outer` + `isNotNull` is the
+    * [[Dedup.bandTable]] pattern: a plain `explode` of a column holding
+    * the array lets InferFiltersFromGenerate add a `size() > 0` filter
+    * that the optimizer inlines the kernel into (PlanShapeSpec pins
+    * that no Filter evaluates it). */
   def ngramHashes(corpus: DataFrame, n: Int = 4): DataFrame =
     corpus
-      .select(col("doc_id"), explode(expr(s"word_ngrams(text, $n)")).as("g"))
-      .select(col("doc_id"), md5Long(col("g")).as("gh"))
+      .select(col("doc_id"), explode_outer(expr(s"ngram_hashes(text, $n)")).as("gh"))
+      .filter(col("gh").isNotNull)
 
   /** Serialized Bloom filter over an eval-side `gh` column — the
     * scan-stage pre-filter for [[flagExact]]. `expectedItems` is

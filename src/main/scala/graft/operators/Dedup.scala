@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
  *    ever moves.
  *  - [[nearDupPairs]]: banded LSH candidate generation (equi-join on
  *    (band, band_hash)) — never an all-pairs corpus join — then exact
- *    Jaccard verification restricted to candidates. Candidate volume
- *    is flat by construction as the corpus grows (measured 256 → 344
- *    for ×10 rows on the fixtures).
+ *    Jaccard verification restricted to candidates, from their
+ *    shingle arrays, landed once as a small parquet pair table.
+ *    Candidate volume is flat by construction as the corpus grows
+ *    (measured 256 → 344 for ×10 rows on the fixtures).
  *
  * All hashing is md5-derived integer arithmetic, bit-identical to the
  * DuckDB oracle SQL in the catalog (the cross-engine gate is the spec
@@ -49,19 +50,42 @@ object Dedup {
 
   /** The 16-band MinHash table of a [[shingles]] relation:
     * (doc_id, band, band_hash) — 16 rows per doc, the only relation
-    * LSH ever shuffles. */
+    * LSH ever shuffles. `posexplode_outer` + `isNotNull` instead of
+    * `posexplode` keeps InferFiltersFromGenerate from inferring a
+    * `size(bh) > 0 AND isnotnull(bh)` filter, into which the optimizer
+    * would inline the kernel — three evaluations per row instead of
+    * one (the [[spanDuplicates]] pattern; PlanShapeSpec pins it). */
   def bandTable(shingled: DataFrame): DataFrame =
     shingled.withColumn("bh", expr("minhash_lsh_bands(ws)"))
       .select(col("doc_id"),
-        posexplode(col("bh")).as(Seq("band", "band_hash")))
+        posexplode_outer(col("bh")).as(Seq("band", "band_hash")))
+      .filter(col("band_hash").isNotNull)
 
   /** MinHash-LSH near-duplicate pairs (doc_a < doc_b, jaccard):
     * banded candidates verified by exact Jaccard over the shingle
     * sets, kept at `round(j, 6) >= threshold` (the d3 arithmetic the
-    * oracle reproduces bit-for-bit). `shingled` is read by FIVE plan
-    * branches — persist or materialize it before calling (the catalog
-    * caches the pair table per (session, fixture); see
-    * PipelineQueries.minhashPairsShared). */
+    * oracle reproduces bit-for-bit).
+    *
+    * Precondition — the [[shingles]] contract: one row per `doc_id`,
+    * and `ws` a distinct, non-null, non-empty array. Verification then
+    * needs no (doc, shingle) explode: each candidate pair joins its two
+    * `ws` arrays once per side and takes
+    * `inter = size(array_intersect(ws_a, ws_b))` and `sz = size(ws)`,
+    * keeping `inter > 0` (the pairs an explode join on the shingle
+    * would find). No (doc, shingle) row is ever shuffled or
+    * broadcast: only the ~hundreds of candidate pairs pick up arrays.
+    *
+    * The verified pair table is LANDED: written once to a
+    * [[graft.SessionTemp]] parquet dir and returned as its read (the
+    * `Curation.funnel` materialize idiom), so this call runs one Spark
+    * write. Every downstream plan over the pairs — a drop set
+    * anti-joined into a funnel whose later stages push predicates
+    * into it, a pair report and a keep-list over the same table —
+    * scans a few hundred rows instead of re-planning LSH. Inside that
+    * one write `shingled` is still read by several plan branches (the
+    * band self-join and the `ws` lookup of each side); hand in a
+    * materialized or persisted relation when computing it is not
+    * free. */
   def nearDupPairs(s: SparkSession, shingled: DataFrame,
       threshold: Double = 0.4): DataFrame = {
     import s.implicits._
@@ -70,19 +94,24 @@ object Dedup {
         $"x.band" === $"y.band" && $"x.band_hash" === $"y.band_hash" &&
           $"x.doc_id" < $"y.doc_id")
       .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b")).distinct()
-    val uni = shingled.select(col("doc_id"), explode(col("ws")).as("w"))
-    val sizes = uni.groupBy("doc_id").agg(count(lit(1)).as("sz"))
-    cand
-      .join(uni.select(col("doc_id").as("doc_a"), col("w")), "doc_a")
-      .join(uni.select(col("doc_id").as("doc_b"), col("w")), Seq("doc_b", "w"))
-      .groupBy("doc_a", "doc_b").agg(count(lit(1)).as("inter"))
-      .join(sizes.select(col("doc_id").as("doc_a"), col("sz").as("sz_a")), "doc_a")
-      .join(sizes.select(col("doc_id").as("doc_b"), col("sz").as("sz_b")), "doc_b")
+    def side(tag: String) =
+      shingled.select(col("doc_id").as(s"doc_$tag"), col("ws").as(s"ws_$tag"))
+    val pairs = cand
+      .join(side("a"), "doc_a")
+      .join(side("b"), "doc_b")
+      .select(col("doc_a"), col("doc_b"),
+        size(array_intersect(col("ws_a"), col("ws_b"))).cast("long").as("inter"),
+        size(col("ws_a")).cast("long").as("sz_a"),
+        size(col("ws_b")).cast("long").as("sz_b"))
+      .filter(col("inter") > 0)
       .withColumn("jaccard",
         round(col("inter").cast("double") /
           (col("sz_a") + col("sz_b") - col("inter")), 6))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
+    val tmp = graft.SessionTemp.dir("graft_lsh_pairs_")
+    pairs.write.mode("overwrite").parquet(tmp)
+    s.read.parquet(tmp)
   }
 
   /** The drop set of a pair table: every doc that appears as the

@@ -195,14 +195,13 @@ object PipelineQueries {
 
   /** MinHash-LSH near-dup pairs (doc_a, doc_b, jaccard) — shared by the
     * pair report (d3) and the dedup keep-list (d6). The shingle table
-    * `sh` feeds FIVE branches of this plan (the band self-join's two
-    * scans, the size agg, and the two intersection joins); without
-    * materialization Catalyst recomputes the `word_ngrams` kernel and
-    * the per-shingle md5 pass for each branch — the single most
-    * expensive stage of the pipeline, paid ~5×. The caller
-    * ([[minhashPairsShared]]) persists `sh` for the duration of the
-    * pair build and drops it the moment the tiny pair table is
-    * materialized, so nothing corpus-sized stays pinned. */
+    * `sh` feeds three branches of the pair build (the band table and
+    * the two `ws` lookups of verification); without persisting it,
+    * Catalyst recomputes the `word_ngrams` kernel for each branch. The
+    * caller ([[minhashPairsShared]]) persists `sh` for the duration of
+    * the pair build, which lands the tiny pair table in session-temp
+    * parquet, and drops it right after, so nothing corpus-sized stays
+    * pinned. */
   private def minhashPairs(s: SparkSession, dir: String,
       sh: DataFrame): DataFrame =
     // The whole LSH pipeline (64-permutation signature + 16 band
@@ -283,36 +282,31 @@ object PipelineQueries {
     * the pairs are materialized to parquet once and both the pair
     * report and the keep-list derive from the stored table — running
     * the MinHash chain twice at 100 TB would double the most expensive
-    * stage of the pipeline. In-session the same shape is a persisted
-    * (memory-and-disk) intermediate keyed by (session, data dir): the
-    * first reader pays the signature pass, the second reuses the tiny
-    * cached pair table. */
+    * stage of the pipeline. In-session the same shape is the pair
+    * table `Dedup.nearDupPairs` lands in session-temp parquet, keyed by
+    * (session, data dir): the first reader pays the signature pass,
+    * the second re-reads the tiny landed table. */
   // CACHE CONTRACT: keys are (session, dir) and entries live until the
   // cap; fixture dirs are immutable during a run (regenerating a dir
   // mid-session would serve stale pairs). The cap bounds a long-lived
-  // driver sweeping many dirs — on overflow everything is unpersisted
-  // and the cache restarts, so blocks never accumulate unboundedly.
+  // driver sweeping many dirs — on overflow the map restarts; the
+  // landed tables are small and SessionTemp removes them at exit.
   private val pairsCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def minhashPairsShared(s: SparkSession, dir: String): DataFrame =
     pairsCache.synchronized {
-      if (pairsCache.size > 8) {
-        pairsCache.values.forEach(df => df.unpersist())
-        pairsCache.clear()
-      }
+      if (pairsCache.size > 8) pairsCache.clear()
       pairsCache.computeIfAbsent((s, dir), _ => {
-        // persist the shingle table for the pair build only: count()
-        // forces the pair table into its own cache, after which the
-        // corpus-sized shingle blocks are dropped — the in-session twin
-        // of "materialize the signature table once, derive everything
-        // from it" that a 100-TB run does on distributed storage
+        // persist the shingle table for the pair build only:
+        // nearDupPairs lands the pair table in session-temp parquet,
+        // after which the corpus-sized shingle blocks are dropped — the
+        // in-session twin of "materialize the signature table once,
+        // derive everything from it" that a 100-TB run does on
+        // distributed storage
         val sh = shingled(docs(s, dir))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val pairs = minhashPairs(s, dir, sh)
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        pairs.count()
-        sh.unpersist()
-        pairs
+        try minhashPairs(s, dir, sh)
+        finally sh.unpersist()
       })
     }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
+import graft.operators.Dedup
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Streaming INCREMENTAL NEAR-dedup — the MinHash-LSH twin of
   * [[IncrementalDedup]], and the daily production job of a training-data
@@ -26,12 +26,7 @@ import org.apache.spark.sql.functions._
 object IncrementalNearDup {
 
   private def bands(batch: DataFrame): DataFrame =
-    batch
-      .select(col("doc_id"), expr("word_ngrams(text, 3)").as("ws"))
-      .filter(size(col("ws")) > 0)
-      .withColumn("bh", expr("minhash_lsh_bands(ws)"))
-      .select(col("doc_id"),
-        posexplode(col("bh")).as(Seq("band", "band_hash")))
+    Dedup.bandTable(Dedup.shingles(batch))
 
   def run(s: SparkSession, docsDir: String, workDir: String,
       failAtBatch: Option[Long] = None,

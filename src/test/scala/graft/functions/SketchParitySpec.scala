@@ -104,6 +104,63 @@ class SketchParitySpec extends AnyFunSuite {
     assert(r.getSeq[String](3) === Seq("x y", "y x"))
   }
 
+  /** The legacy decontamination gram hash: every `word_ngrams` element,
+    * in order and with multiplicity, through the per-gram md5 → hex
+    * substring → base-conversion chain (the DuckDB
+    * `('0x'||substr(md5(g),1,15))::BIGINT`). */
+  private def legacyGramHashes(n: Int) =
+    s"transform(word_ngrams(text, $n), " +
+      "g -> cast(conv(substring(md5(g), 1, 15), 16, 10) as bigint))"
+
+  test("ngram_hashes matches md5 → substring → conv over word_ngrams") {
+    val docs = graft.sources.Records.table(s, dir, "documents")
+    for (n <- Seq(1, 2, 3, 4)) {
+      val mismatches = docs
+        .select(expr(s"ngram_hashes(text, $n)").as("kernel"),
+          expr(legacyGramHashes(n)).as("legacy"))
+        .filter(!(col("kernel") <=> col("legacy")))
+        .count()
+      assert(mismatches === 0, s"n=$n")
+    }
+    // exploded, row for row: the same (doc, position, hash) multiset
+    val viaKernel = docs.select(col("doc_id"),
+      posexplode(expr("ngram_hashes(text, 4)")).as(Seq("pos", "gh")))
+    val viaLegacy = docs.select(col("doc_id"),
+        posexplode(expr("word_ngrams(text, 4)")).as(Seq("pos", "g")))
+      .select(col("doc_id"), col("pos"),
+        conv(substring(md5(col("g")), 1, 15), 16, 10).cast("long").as("gh"))
+    assert(viaKernel.count() > 0)
+    assert(viaKernel.exceptAll(viaLegacy).count() === 0, "extra grams")
+    assert(viaLegacy.exceptAll(viaKernel).count() === 0, "missing grams")
+  }
+
+  test("ngram_hashes edge cases: empties, repeated spaces, short docs, non-ASCII") {
+    import s.implicits._
+    val texts = Seq("", "  ", "one two", "x  y   x  y", "a b a b a b",
+      " lead and trail ", "tab\tsplit only on spaces here",
+      "été café 世界 t été café 世界",
+      "😀 emoji 😀 emoji 😀")
+    val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    for (n <- Seq(0, 1, 2, 3, 4)) {
+      df.select(col("text"), expr(s"ngram_hashes(text, $n)").as("kernel"),
+          expr(legacyGramHashes(n)).as("legacy"))
+        .collect().foreach { r =>
+          assert(r.getSeq[Long](1) == r.getSeq[Long](2),
+            s"n=$n text='${r.getString(0)}'")
+        }
+    }
+    val r = s.sql(
+      """SELECT ngram_hashes('', 1) AS a, ngram_hashes('one two', 3) AS b,
+        |       ngram_hashes('x  y   x  y', 2) AS c,
+        |       ngram_hashes(cast(null as string), 2) AS d""".stripMargin)
+      .collect().head
+    assert(r.getSeq[Long](0) === Seq())
+    assert(r.getSeq[Long](1) === Seq())
+    assert(r.getSeq[Long](2) === Seq("x y", "y x").map(VectorLsh.md5Long15))
+    assert(r.isNullAt(3))
+  }
+
   test("simhash16 of an empty token array is 0") {
     val r = s.sql("SELECT simhash16(cast(array() as array<string>)) AS v")
       .collect().head.getLong(0)

@@ -24,8 +24,37 @@ class PlanShapeSpec extends AnyFunSuite {
     if (cut >= 0) p.substring(0, cut) else p
   }
 
+  /** Executed plans of every query d3 runs while it is built and
+    * collected, in a fresh session so its session-keyed pair cache
+    * starts cold. d3 lands its LSH pair table in a write of its own,
+    * which the final frame's plan only shows as a parquet scan.
+    * Listener events arrive on an async bus: waits (bounded) until the
+    * band-kernel plan has been seen. */
+  private def d3Plans: String = {
+    import scala.jdk.CollectionConverters._
+    val s = spark.newSession()
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    s.listenerManager.register(listener)
+    try {
+      Catalog.byName("d3_minhash_lsh").fn(s, sfDir).collect()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!plans.asScala.exists(_.contains("minhash_lsh_bands")) &&
+          System.nanoTime() < deadline)
+        Thread.sleep(20)
+      plans.asScala.mkString("\n")
+    } finally s.listenerManager.unregister(listener)
+  }
+
   test("d3: the only cross join is the broadcast 64-row permutation table") {
-    val plan = executedPlan("d3_minhash_lsh")
+    val plan = d3Plans
     assert(!plan.contains("CartesianProduct"),
       s"cartesian product in d3:\n$plan")
     assert(plan.contains("BroadcastNestedLoopJoin") ||
@@ -34,7 +63,7 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("d3: candidate generation is an equi-join on (band, band_hash)") {
-    val plan = executedPlan("d3_minhash_lsh")
+    val plan = d3Plans
     assert(plan.contains("band_hash"), s"no band-hash join:\n$plan")
     assert(plan.contains("SortMergeJoin") || plan.contains("ShuffledHashJoin") ||
       plan.contains("BroadcastHashJoin"),
@@ -634,6 +663,31 @@ class PlanShapeSpec extends AnyFunSuite {
     val heavyFilters = filterLines.filter(_.contains("transform(sequence("))
     assert(heavyFilters.isEmpty,
       s"chunk expression recomputed inside a Filter (pushdown regression):\n${heavyFilters.mkString("\n")}")
+  }
+
+  test("LSH band and decontamination gram kernels run once per row: " +
+      "never inside a Filter") {
+    // explode/posexplode of a column holding a kernel's array lets
+    // InferFiltersFromGenerate add `size(k) > 0 AND isnotnull(k)`, and
+    // the optimizer inlines the kernel into both conjuncts — three
+    // kernel calls per row. explode_outer + an isNotNull on the
+    // generated column keeps the inference off.
+    val docs = graft.sources.Records.table(spark, sfDir, "documents")
+    val plans = Seq(
+      "minhash_lsh_bands(" -> graft.operators.Dedup.bandTable(
+        graft.operators.Dedup.shingles(docs)),
+      "ngram_hashes(" -> graft.operators.Decontamination.ngramHashes(docs, 4))
+    for ((kernel, df) <- plans) {
+      val plan = df.queryExecution.optimizedPlan.toString
+      assert(plan.contains(kernel), s"$kernel is not planned:\n$plan")
+      val filterLines = plan.linesIterator
+        .filter(_.replaceAll("^[\\s:+|-]+", "").startsWith("Filter"))
+        .toSeq
+      val heavy = filterLines.filter(l =>
+        l.contains("minhash_lsh_bands(") || l.contains("ngram_hashes("))
+      assert(heavy.isEmpty,
+        s"$kernel evaluated inside a Filter:\n${heavy.mkString("\n")}\n$plan")
+    }
   }
 
   // ---- unpartitioned windows: provably aggregate-bounded ----
