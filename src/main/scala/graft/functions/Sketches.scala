@@ -717,37 +717,12 @@ object Sketches {
     * in [[wordNGrams]] order — the kernel behind
     * `Decontamination.ngramHashes`. Bit-identical to
     * `explode(word_ngrams(text, n))` → `conv(substring(md5(g),1,15),16,10)`
-    * (SketchParitySpec pins it), but each window is deduped and hashed
-    * straight off the shared [[TokenBuf]] bytes: no per-gram string,
-    * hex encoding or base conversion. Fewer than n tokens → empty
-    * array; n < 1 hashes the `word_ngrams` output as-is. */
+    * (SketchParitySpec pins it), without the per-gram hex encoding,
+    * substring and base conversion. */
   def ngramHashes(text: UTF8String, n: Int): ArrayData = {
-    if (n < 1) {
-      val gs = wordNGrams(text, n)
-      return new GenericArrayData(Array.tabulate[Any](gs.numElements())(i =>
-        md5Long15(gs.getUTF8String(i).getBytes)))
-    }
-    val toks = spaceTokens(text)
-    val m = toks.size - n + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
-    val tb = new TokenBuf(toks)
-    val md = Md5.get()
-    // ByteBuffer equality and hash are over the wrapped byte range, so
-    // the set dedupes n-grams by content without copying them out
-    val seen = new java.util.HashSet[java.nio.ByteBuffer](m * 2)
-    val out = new java.util.ArrayList[Any](m)
-    var i = 0
-    while (i < m) {
-      val from = tb.starts(i)
-      val len = tb.ends(i + n - 1) - from
-      if (seen.add(java.nio.ByteBuffer.wrap(tb.buf, from, len))) {
-        md.reset()
-        md.update(tb.buf, from, len)
-        out.add(digest60(md.digest()))
-      }
-      i += 1
-    }
-    new GenericArrayData(out.toArray)
+    val gs = wordNGrams(text, n)
+    new GenericArrayData(Array.tabulate[Any](gs.numElements())(i =>
+      md5Long15(gs.getUTF8String(i).getBytes)))
   }
 
   /**

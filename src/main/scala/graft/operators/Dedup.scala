@@ -78,14 +78,15 @@ object Dedup {
     * The verified pair table is LANDED: written once to a
     * [[graft.SessionTemp]] parquet dir and returned as its read (the
     * `Curation.funnel` materialize idiom), so this call runs one Spark
-    * write. Every downstream plan over the pairs — a drop set
-    * anti-joined into a funnel whose later stages push predicates
-    * into it, a pair report and a keep-list over the same table —
-    * scans a few hundred rows instead of re-planning LSH. Inside that
-    * one write `shingled` is still read by several plan branches (the
-    * band self-join and the `ws` lookup of each side); hand in a
-    * materialized or persisted relation when computing it is not
-    * free. */
+    * write, and its dir stays until [[graft.SessionTemp]] is cleaned
+    * (at JVM exit at the latest). Every downstream plan over the
+    * pairs — a drop set anti-joined into a funnel whose later stages
+    * push predicates into it, a pair report and a keep-list over the
+    * same table — scans a few hundred rows instead of re-planning
+    * LSH. Inside that one write `shingled` is still read by several
+    * plan branches (the band self-join and the `ws` lookup of each
+    * side); hand in a materialized or persisted relation when
+    * computing it is not free. */
   def nearDupPairs(s: SparkSession, shingled: DataFrame,
       threshold: Double = 0.4): DataFrame = {
     import s.implicits._

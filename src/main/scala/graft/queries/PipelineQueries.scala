@@ -288,9 +288,12 @@ object PipelineQueries {
     * the second re-reads the tiny landed table. */
   // CACHE CONTRACT: keys are (session, dir) and entries live until the
   // cap; fixture dirs are immutable during a run (regenerating a dir
-  // mid-session would serve stale pairs). The cap bounds a long-lived
-  // driver sweeping many dirs — on overflow the map restarts; the
-  // landed tables are small and SessionTemp removes them at exit.
+  // mid-session would serve stale pairs). The cap bounds the map, not
+  // the disk: on overflow the map restarts, but the evicted entries'
+  // landed parquet dirs stay until SessionTemp removes them at JVM exit
+  // (a frame handed out before the eviction may still be scanning its
+  // dir). Each is a few hundred pair rows, so a driver sweeping many
+  // dirs grows its session-temp root by a few KB per (session, dir).
   private val pairsCache =
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
   private def minhashPairsShared(s: SparkSession, dir: String): DataFrame =

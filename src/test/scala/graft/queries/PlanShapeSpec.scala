@@ -29,7 +29,8 @@ class PlanShapeSpec extends AnyFunSuite {
     * starts cold. d3 lands its LSH pair table in a write of its own,
     * which the final frame's plan only shows as a parquet scan.
     * Listener events arrive on an async bus: waits (bounded) until the
-    * band-kernel plan has been seen. */
+    * band-kernel plan has been seen, and fails naming the timeout if it
+    * never arrives, so the d3 assertions only see a complete set. */
   private def d3Plans: String = {
     import scala.jdk.CollectionConverters._
     val s = spark.newSession()
@@ -46,9 +47,10 @@ class PlanShapeSpec extends AnyFunSuite {
     try {
       Catalog.byName("d3_minhash_lsh").fn(s, sfDir).collect()
       val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!plans.asScala.exists(_.contains("minhash_lsh_bands")) &&
-          System.nanoTime() < deadline)
-        Thread.sleep(20)
+      def sawBands = plans.asScala.exists(_.contains("minhash_lsh_bands"))
+      while (!sawBands && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(sawBands, "listener timeout: no minhash_lsh_bands plan reached " +
+        s"the QueryExecutionListener within 30 s; plans seen:\n${plans.asScala.mkString("\n")}")
       plans.asScala.mkString("\n")
     } finally s.listenerManager.unregister(listener)
   }
