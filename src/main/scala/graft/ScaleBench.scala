@@ -6,7 +6,6 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.collection.immutable.ListMap
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
@@ -41,9 +40,6 @@ import graft.streaming.{IncrementalDsir, IncrementalSpanCensus}
   * cluster    <sfDir> [targetClusterSize=2000]            metric=cluster_scale mode docs k
   *            [--two-level]                               target_cluster assign_sec dedup_sec drops
   *                                                        max_cluster pair_work sf
-  * compaction <docsDir> [targetFileBytes=4194304]         metric=compaction_scale docs_dir batches
-  *            [slices=16]                                 census_rows build_sec target_file_bytes
-  *                                                        single_sec single_files wide_sec wide_files
   * dsir       <sfDir> [stream|sweep]                      metric=dsir_scale phase=fit|fit_sampled_16|
   *                                                        score|resample|stream|bucket_sweep docs sec …
   * dsir-emit  <sfDir> [slices=8]                          docs slices emit_incremental_sec
@@ -59,7 +55,7 @@ import graft.streaming.{IncrementalDsir, IncrementalSpanCensus}
   *            [literal] [bloom] [sampled]                 repeated_spans sf; metric=span_stream …;
   *                                                        metric=span_dedup mode … cut_frac
   * span-emit  <docs> [deltaRows=5000] [mainSlices=4]      docs delta_rows emit_bounded_sec
-  *            [compactTargetBytes]                        emit_accumulated_sec compacted
+  *                                                        emit_accumulated_sec
   * topic      [iters=40] [--stream]                       metric=topiclog_metadata_walk tp_ratio
   *                                                        tps_<n>{…} wide_256{…} iters;
   *                                                        metric=topiclog_stream_drain_1000tp …
@@ -108,8 +104,6 @@ object ScaleBench {
       "<sfDir>|zipf:<docs>:<vmax> [nMerges] [batchSize] [skipDirect]", bpe),
     "cluster" -> Workload("<sfDir> [targetClusterSize] [--two-level]",
       cluster),
-    "compaction" -> Workload("<docsDir> [targetFileBytes] [slices]",
-      compaction),
     "dsir" -> Workload("<sfDir> [stream|sweep]", dsir),
     "dsir-emit" -> Workload("<sfDir> [slices]", dsirEmit),
     "lm" -> Workload("<sfDir>", lm),
@@ -117,8 +111,7 @@ object ScaleBench {
     "pack" -> Workload("<sfDir> [shardSpan]", pack),
     "span" -> Workload("<sfDir> [mod…] [stream] [literal|bloom|sampled…]",
       span),
-    "span-emit" -> Workload(
-      "<docs> [deltaRows] [mainSlices] [compactTargetBytes]", spanEmit),
+    "span-emit" -> Workload("<docs> [deltaRows] [mainSlices]", spanEmit),
     "topic" -> Workload("[iters] [--stream]", topic),
     "floor" -> Workload("<sfDir>", floorProbe),
   )
@@ -280,55 +273,6 @@ object ScaleBench {
       f""""dedup_sec":$dedupSec%.2f,"drops":$drops,""" +
       f""""max_cluster":${stats.getLong(0)},"pair_work":${stats.getLong(1)},""" +
       f""""sf":"$sfDir"}""")
-  }
-
-  /** The compaction write path: merge the SAME span-census batch
-    * partials once through a single task (forced with an unreachable
-    * `targetFileBytes` — the old `repartition(1)` shape) and once
-    * hash-partitioned on `span_h` at a corpus-scaled file count. The
-    * merge work is identical; the delta is the write funnel. The
-    * single-task arm runs first, so the wide arm's warmer page cache
-    * can only overstate it if order mattered. */
-  private def compaction(c: Ctx, args: Seq[String]): Unit = {
-    val docsDir = args(0)
-    val targetFileBytes = args.lift(1).fold(4L << 20)(_.toLong)
-    val slices = args.lift(2).fold(16)(_.toInt)
-    val spark = c.spark
-    // the fixture ships one file, which would make the merge a
-    // 1-partition no-op: slice it into `slices` batch partials
-    val sliced = BenchFixtures.sliceDocs(spark, docsDir, slices,
-      "compact_docs_")
-    // build the partials once (no in-pipeline compaction), then clone
-    // the census dir so both arms merge identical inputs
-    val work = SessionTemp.dir("compact_scale_")
-    val (_, buildSec) = timed(
-      IncrementalSpanCensus.run(spark, sliced, work, compactEvery = 0))
-    val batchIds = new java.io.File(s"$work/census").listFiles()
-      .map(_.getName).filter(_.startsWith("batch="))
-      .map(_.drop(6).toLong).sorted
-    val upTo = batchIds.last
-    val rows = IncrementalSpanCensus.census(spark, work, minCount = 1L)
-      .count()
-
-    def arm(name: String, tfb: Long): (Double, Int) = {
-      val w = SessionTemp.dir(s"compact_${name}_")
-      FileUtils.copyDirectory(new java.io.File(work), new java.io.File(w))
-      val (_, sec) = timed(
-        IncrementalSpanCensus.compact(spark, w, upTo, targetFileBytes = tfb))
-      // recursive: the compacted partition nests its files under
-      // key-bucket `kb=<b>` directories
-      (sec, FileUtils.listFiles(new java.io.File(s"$w/census/compacted=$upTo"),
-        Array("parquet"), true).size)
-    }
-    val (singleSec, singleFiles) = arm("single", Long.MaxValue)
-    val (wideSec, wideFiles) = arm("wide", targetFileBytes)
-
-    println(f"""{"metric":"compaction_scale","docs_dir":"$docsDir",""" +
-      f""""batches":${batchIds.length},"census_rows":$rows,""" +
-      f""""build_sec":$buildSec%.2f,""" +
-      f""""target_file_bytes":$targetFileBytes,""" +
-      f""""single_sec":$singleSec%.2f,"single_files":$singleFiles,""" +
-      f""""wide_sec":$wideSec%.2f,"wide_files":$wideFiles}""")
   }
 
   /** The p17 DSIR wing: fit (two scans ending in 4096-bucket-bounded
@@ -647,17 +591,13 @@ object ScaleBench {
     * slices are doc_id-monotone) are absorbed and emitted except a
     * FIXED final delta, whose bounded emission and the full
     * accumulated rewrite are then timed — comparing two corpus sizes
-    * isolates the accumulated-size dependence. `compactTargetBytes`
-    * (default: the production 128 MB) sizes the compaction run before
-    * the timed arms, so the emission probes the key-bucketed compacted
-    * layout; small values make bucket pruning exercisable at fixture
-    * scale, and `0` skips compaction (loose batch partials, the A/B
-    * baseline). */
+    * isolates the accumulated-size dependence. The census is compacted
+    * (production defaults) before the timed arms, so the emission
+    * probes the compacted layout a long-lived stream settles into. */
   private def spanEmit(c: Ctx, args: Seq[String]): Unit = {
     val nDocs = args(0).toLong
     val deltaRows = args.lift(1).fold(5000L)(_.toLong)
     val mainSlices = args.lift(2).fold(4)(_.toInt)
-    val compactBytes = args.lift(3).map(_.toLong)
     require(deltaRows < nDocs, "delta must be smaller than the corpus")
     val spark = c.spark
     val docs = GenData.documents(spark, nDocs)
@@ -685,16 +625,8 @@ object ScaleBench {
     val delta = spark.read.parquet(
       writeSlice(docs.filter(col("doc_id") >= cut), mainSlices))
     IncrementalSpanCensus.run(spark, streamDir, workDir)
-    val compacted = !compactBytes.contains(0L)
-    if (compacted) {
-      val upTo = mainSlices.toLong // batches 0..mainSlices all visible
-      compactBytes match {
-        case Some(t) =>
-          IncrementalSpanCensus.compact(spark, workDir, upTo,
-            targetFileBytes = t)
-        case None => IncrementalSpanCensus.compact(spark, workDir, upTo)
-      }
-    }
+    // batches 0..mainSlices are all visible
+    IncrementalSpanCensus.compact(spark, workDir, mainSlices.toLong)
 
     // warm the census state (page cache + codegen) so arm ORDER does
     // not decide the comparison — both arms read the same partials
@@ -715,7 +647,7 @@ object ScaleBench {
     val nAcc = spark.read.parquet(accOut).count()
     require(nBounded == nAcc, s"row counts drifted: $nBounded vs $nAcc")
 
-    println(f"""{"docs":$nDocs,"delta_rows":$deltaRows,"emit_bounded_sec":$boundedSec%.2f,"emit_accumulated_sec":$accSec%.2f,"compacted":$compacted}""")
+    println(f"""{"docs":$nDocs,"delta_rows":$deltaRows,"emit_bounded_sec":$boundedSec%.2f,"emit_accumulated_sec":$accSec%.2f}""")
   }
 
   private def topicRec(i: Int): FileTopicLog.LogRecord =

@@ -42,11 +42,15 @@ object Dedup {
 
   /** doc_id → distinct word-3-gram shingle array (`ws`), empty docs
     * dropped — one codegen'd `word_ngrams` kernel call per row
-    * (tokenize, slide, join, dedupe in a single pass). */
+    * (tokenize, slide, join, dedupe in a single pass). The array comes
+    * out of a one-element `explode_outer`, so `size(ws) > 0` filters a
+    * generator output: a filter over a plain alias would be pushed
+    * below the projection with the kernel inlined, evaluating it twice
+    * per row (PlanShapeSpec pins it). */
   def shingles(corpus: DataFrame): DataFrame =
-    corpus.withColumn("ws", expr("word_ngrams(text, 3)"))
+    corpus.select(col("doc_id"),
+        explode_outer(array(expr("word_ngrams(text, 3)"))).as("ws"))
       .filter(size(col("ws")) > 0)
-      .select("doc_id", "ws")
 
   /** The 16-band MinHash table of a [[shingles]] relation:
     * (doc_id, band, band_hash) — 16 rows per doc, the only relation

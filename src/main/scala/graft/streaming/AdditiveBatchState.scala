@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod}
+import org.apache.spark.sql.functions.col
 
 /** Batch-addressed parquet layout for ADDITIVE streaming state — the
   * [[IncrementalSpanCensus]] discipline extracted so other
@@ -23,14 +23,15 @@ import org.apache.spark.sql.functions.{col, lit, pmod}
   * publish, after publish, mid-delete) leaves the visible state
   * exactly correct, never a superset.
   *
-  * The compacted partition is written HASH-PARTITIONED on the caller's
-  * key at a corpus-scaled file count
-  * ([[BatchedParquetIndex.compactionPartitions]] over the source
-  * partitions' bytes): merged additive state can approach the key
-  * domain's full size (the span census keeps EVERY span), so the write
-  * must be as wide as the data — never one task. The rename commit is
-  * unchanged: it operates on the directory, however many files it
-  * holds. */
+  * The compacted partition has one plain layout: hash-partitioned and
+  * sorted on the caller's key into `max(n, defaultParallelism)` files,
+  * n scaled to the source partitions' bytes
+  * ([[BatchedParquetIndex.compactionPartitions]]). Merged additive
+  * state can approach the key domain's full size (the span census
+  * keeps EVERY span), so the write is as wide as the data and never
+  * narrower than the session. Every reader sees the state as one plain
+  * union of the visible partitions. The rename commit operates on the
+  * directory, however many files it holds. */
 private[streaming] object AdditiveBatchState {
 
   /** (isCompacted, id) of a state partition dir name. */
@@ -69,77 +70,26 @@ private[streaming] object AdditiveBatchState {
     }
   }
 
-  /** Bucket-layout marker a bucketed compacted partition carries at its
-    * root (underscore-prefixed → invisible to Spark's file listing):
-    * its text content is the bucket MODULUS the `kb=<b>` partition
-    * directories were written with. A partition without the marker is
-    * plain (pre-bucketing layout or a per-batch partial). */
-  private val BucketMarker = "_kb"
-
-  /** Name of the bucket partition column a bucketed compacted
-    * partition is laid out by. Deliberately NOT underscore-prefixed:
-    * hidden-path filters would make `kb=<b>` directories invisible. */
-  private[streaming] val BucketCol = "kb"
-
-  private def bucketModulus(fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Option[Int] = {
-    val m = new Path(p, BucketMarker)
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      try Some(new String(in.readAllBytes(),
-        java.nio.charset.StandardCharsets.UTF_8).trim.toInt)
-      finally in.close()
-    }
-  }
-
-  /** One state partition as a relation. A bucketed compacted partition
-    * reads through partition discovery (its [[BucketCol]] column is
-    * RETAINED so a probe can partition-prune on it) and carries its
-    * modulus; plain partitions carry None. An empty bucketed partition
-    * (zero rows ⇒ zero `kb=` subdirectories ⇒ nothing to infer a
-    * schema from) contributes nothing and is skipped. */
-  private def partRelation(s: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: Path): Option[(DataFrame, Option[Int])] =
-    bucketModulus(fs, p) match {
-      case None => Some((s.read.parquet(p.toString), None))
-      case Some(nB) =>
-        if (!fs.listStatus(p).exists(_.getPath.getName.startsWith(
-            BucketCol + "=")))
-          None
-        else Some((s.read.parquet(p.toString), Some(nB)))
-    }
-
-  /** Every visible partition as a relation (see [[partRelation]]) —
-    * the read primitive [[merged]] / [[mergedUpTo]] and key-probing
+  /** Every visible partition with id ≤ `upTo` as ONE plain union —
+    * the read [[merged]] / [[mergedUpTo]] aggregate and key-probing
     * readers ([[graft.streaming.IncrementalSpanCensus]]'s
-    * delta-restricted census) build on. */
-  private[streaming] def visibleRelations(s: SparkSession, root: Path,
-      upTo: Long = Long.MaxValue): Seq[(DataFrame, Option[Int])] = {
+    * delta-restricted census) filter before aggregating. */
+  private[streaming] def visibleUnion(s: SparkSession, root: Path,
+      upTo: Long = Long.MaxValue): DataFrame = {
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     val ps = visibleParts(fs, root).filter(p =>
       partId(p.getName).exists(_._2 <= upTo))
     require(ps.nonEmpty, s"no state partitions ≤ $upTo under $root")
-    ps.flatMap(p => partRelation(s, fs, p))
+    union(s, ps)
   }
 
-  /** Union of relations with any bucket partition column dropped —
-    * every non-probing reader's view of the state. */
-  private def unionPlain(rels: Seq[(DataFrame, Option[Int])],
-      root: Path): DataFrame = {
-    val dfs = rels.map { case (df, nB) =>
-      if (nB.isDefined) df.drop(BucketCol) else df
-    }
-    require(dfs.nonEmpty,
-      s"every visible state partition under $root is empty-bucketed")
-    dfs.reduce(_.unionByName(_))
-  }
+  private def union(s: SparkSession, ps: Seq[Path]): DataFrame =
+    ps.map(p => s.read.parquet(p.toString)).reduce(_.unionByName(_))
 
   /** mergeAgg over every visible partition — the one read path. */
   def merged(s: SparkSession, root: Path,
       mergeAgg: DataFrame => DataFrame): DataFrame =
-    mergeAgg(unionPlain(visibleRelations(s, root), root))
+    mergeAgg(visibleUnion(s, root))
 
   /** [[merged]] restricted to visible partitions with id ≤ `upTo` — the
     * deterministic "state as of batch upTo" read a compaction-boundary
@@ -150,21 +100,21 @@ private[streaming] object AdditiveBatchState {
     * `compacted=<n>` with n ≤ upTo holding identical content. */
   def mergedUpTo(s: SparkSession, root: Path, upTo: Long,
       mergeAgg: DataFrame => DataFrame): DataFrame =
-    mergeAgg(unionPlain(visibleRelations(s, root, upTo), root))
+    mergeAgg(visibleUnion(s, root, upTo))
 
   /** mergeAgg every visible partition with id ≤ `upToBatch` into ONE
-    * `compacted=<upToBatch>` partition (hash-partitioned on `keyCols`
-    * at a corpus-scaled file count), then delete the sources.
-    * Crash-safe by publish-rename + the reader's preference rule (see
-    * object Scaladoc). A re-run that finds the target published skips
-    * the merge and finishes the deletions. `failpoint` injects test
+    * `compacted=<upToBatch>` partition, then delete the sources. The
+    * partition is hash-partitioned and sorted on `keyCols` into
+    * `max(n, defaultParallelism)` files, where n is the corpus-scaled
+    * count ([[BatchedParquetIndex.compactionPartitions]]). Crash-safe by
+    * publish-rename + the reader's preference rule (see object
+    * Scaladoc). A re-run that finds the target published skips the
+    * merge and finishes the deletions. `failpoint` injects test
     * crashes. */
   def compact(s: SparkSession, root: Path, upToBatch: Long,
       mergeAgg: DataFrame => DataFrame, keyCols: Seq[String],
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes,
-      failpoint: String = "",
-      bucketKey: Option[org.apache.spark.sql.Column] = None,
-      minBuckets: Int = 64): Unit = {
+      failpoint: String = ""): Unit = {
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return
     fs.listStatus(root).map(_.getPath)
@@ -194,53 +144,20 @@ private[streaming] object AdditiveBatchState {
       val tmp = new Path(root, s"_compact_$upToBatch")
       val n = BatchedParquetIndex.compactionPartitions(
         fs, mergeable, targetFileBytes)
-      val mergedSrc = unionPlain(
-        mergeable.flatMap(p => partRelation(s, fs, p)), root)
-      val merged = mergeAgg(mergedSrc)
-      // sortWithinPartitions on the key: each compacted file's row
-      // groups then cover a narrow key range, so a later selective read
-      // (a delta-restricted emission probing few keys) can skip row
-      // groups via parquet min/max stats — without it a hash key's
-      // uniform spread makes every row group's [min,max] span the whole
-      // domain and nothing ever prunes. Cost is one in-task sort of
-      // rows the repartition already co-located; merge results are
-      // row-order-free so downstream reads are unaffected.
-      //
-      // With `bucketKey` set the partition is additionally laid out as
-      // `kb=<pmod(key, nB)>` DIRECTORIES (nB scales with the write
-      // width so bucket byte-size tracks targetFileBytes/4, floored at
-      // `minBuckets`): a key-probing reader partition-PRUNES to the
-      // buckets its probe set hashes into, so a probe of |S| keys reads
-      // ≈ min(1, |S|/nB) of the state instead of all of it — the
-      // probe-side term goes flat in census size once nB (∝ census)
-      // outgrows |S|. The repartition moves to the bucket id so each
-      // bucket lands in ONE task (≈ one file per bucket, never
-      // n × nB); parallelism is min(n, nB) ≥ n for nB = 4n. The rename
-      // commit is unchanged — it moves the directory, subdirs and all —
-      // and the `_kb` modulus marker rides INSIDE it, so the layout
-      // publishes atomically with the data.
-      val nBOpt = bucketKey.map(_ => math.max(minBuckets, 4 * n))
-      (bucketKey, nBOpt) match {
-        case (Some(key), Some(nB)) =>
-          merged
-            .withColumn(BucketCol, pmod(key, lit(nB)).cast("int"))
-            .repartition(math.max(n, s.sparkContext.defaultParallelism),
-              col(BucketCol))
-            .sortWithinPartitions(
-              (col(BucketCol) +: keyCols.map(col)): _*)
-            .write.mode("overwrite").partitionBy(BucketCol)
-            .parquet(tmp.toString)
-          val out = fs.create(new Path(tmp, BucketMarker), true)
-          try out.write(nB.toString.getBytes(
-            java.nio.charset.StandardCharsets.UTF_8))
-          finally out.close()
-        case _ =>
-          val laid =
-            if (keyCols.nonEmpty) merged.repartition(n, keyCols.map(col): _*)
-              .sortWithinPartitions(keyCols.map(col): _*)
-            else merged.repartition(n)
-          laid.write.mode("overwrite").parquet(tmp.toString)
-      }
+      // At least as wide as the session: a corpus-scaled n of 1-2 files
+      // would leave every later full-state read (the census probe of
+      // each emission) with 1-2 scan tasks on a many-core session.
+      // sortWithinPartitions on the key: each file's row groups then
+      // cover a narrow key range, so a selective read can skip row
+      // groups via parquet min/max stats; merge results are
+      // row-order-free, so downstream reads are unaffected. An empty
+      // merge still writes one schema-only file, so the published
+      // partition stays readable.
+      val keys = keyCols.map(col)
+      mergeAgg(union(s, mergeable))
+        .repartition(math.max(n, s.sparkContext.defaultParallelism), keys: _*)
+        .sortWithinPartitions(keys: _*)
+        .write.mode("overwrite").parquet(tmp.toString)
       if (failpoint == "before-publish")
         throw new RuntimeException("injected compaction crash before publish")
       if (!fs.rename(tmp, target))

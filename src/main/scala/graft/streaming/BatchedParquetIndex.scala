@@ -34,9 +34,7 @@ private[streaming] object BatchedParquetIndex {
     val bytes = sources.iterator
       .map(p => fs.getContentSummary(p).getLength).sum
     // explicit small-input case BEFORE the ceil: `bytes + target - 1`
-    // wraps negative when target is huge (benches pass Long.MaxValue
-    // to force the single-task arm) and the wrap only accidentally
-    // landed on 1 via the max() rescue
+    // wraps negative when target is huge (e.g. Long.MaxValue)
     if (bytes <= targetFileBytes) 1
     else math.min(1L << 20,
       (bytes + targetFileBytes - 1) / targetFileBytes).toInt

@@ -124,8 +124,9 @@ object IncrementalDsir {
 
   /** Crash-safe publish-rename compaction of the model partials — see
     * [[AdditiveBatchState.compact]]. The merged model is
-    * bucket-bounded, so the corpus-scaled file count is naturally 1
-    * here; the shared path keeps the commit protocol uniform. */
+    * bucket-bounded, so its corpus-scaled file count is 1 and the
+    * session-width floor sets the file count (`defaultParallelism`
+    * small files); the shared path keeps the commit protocol uniform. */
   def compact(s: SparkSession, workDir: String, upToBatch: Long,
       failpoint: String = "",
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes): Unit =

@@ -130,30 +130,22 @@ object IncrementalSpanCensus {
     * that finds the target published skips the merge and finishes the
     * deletions. `failpoint` injects test crashes.
     *
-    * The merged partition is written HASH-PARTITIONED on `span_h` at a
-    * corpus-scaled file count
-    * ([[BatchedParquetIndex.compactionPartitions]] over the source
-    * partitions' bytes): the partials keep EVERY span (the ≥ minCount
-    * filter is read-side — a later occurrence can lift a count), so
-    * the merged census approaches the corpus's distinct span count and
-    * must be written as wide as the data, never through one task. The
-    * rename commit point is unchanged — it operates on the directory,
-    * however many files it holds — and clustering by span_h means the
-    * NEXT compaction's merge of this partition shuffles rows that are
-    * already co-located. */
+    * The merged partition is hash-partitioned and sorted on `span_h`
+    * into `max(n, defaultParallelism)` files, n scaled to the source
+    * partitions' bytes ([[AdditiveBatchState.compact]]): the partials
+    * keep EVERY span (the ≥ minCount filter is read-side — a later
+    * occurrence can lift a count), so the merged census approaches the
+    * corpus's distinct span count and must be written as wide as the
+    * data, never through one task. That width also keeps each
+    * emission's census probe ([[censusForSpans]]) a full-width scan.
+    * Clustering by span_h means the NEXT compaction's merge of this
+    * partition shuffles rows that are already co-located. */
   def compact(s: SparkSession, workDir: String, upToBatch: Long,
       failpoint: String = "",
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes): Unit =
     AdditiveBatchState.compact(s, new Path(s"$workDir/census"), upToBatch,
       mergeAgg, keyCols = Seq("span_h"), targetFileBytes = targetFileBytes,
-      failpoint = failpoint,
-      // key-bucketed compacted layout: [[censusForDelta]]'s probe
-      // partition-prunes to the delta's own bucket set, so the
-      // state-scan term of an emission reads ≈ min(1, |S|/nB) of the
-      // compacted census instead of all of it (sub-linear in census
-      // size once nB, which scales with the census, outgrows the
-      // delta's distinct-span count)
-      bucketKey = Some(graft.operators.Dedup.spanKey(col("span_h"))))
+      failpoint = failpoint)
 
   // ---- bounded-cost emission: delta rewrites under monotone arrival ----
   //
@@ -273,14 +265,20 @@ object IncrementalSpanCensus {
     // the monotonicity bounds (observed metrics ride the same pass)
     val obs = org.apache.spark.sql.Observation()
     val spansTmp = graft.SessionTemp.dir("graft_emit_spans_")
+    val boundCols = Seq(min(col("doc_id")).as("min_id"),
+      max(col("doc_id")).as("max_id"), count(lit(1)).as("n"))
     newDocs
-      .observe(obs, min(col("doc_id")).as("min_id"),
-        max(col("doc_id")).as("max_id"), count(lit(1)).as("n"))
+      .observe(obs, boundCols.head, boundCols.tail: _*)
       .select(explode_outer(
         expr(s"span_hashes(text, $spanTokens, 1L)")).as("span_h"))
       .filter(col("span_h").isNotNull).distinct()
       .write.mode("overwrite").parquet(spansTmp)
-    val bounds = obs.get
+    // the observed metrics come back empty when no span survives (every
+    // delta doc shorter than the span width) — read the bounds with one
+    // more delta scan in that case only
+    val bounds = Some(obs.get).filter(_.nonEmpty).getOrElse(
+      newDocs.agg(boundCols.head, boundCols.tail: _*).collect()(0)
+        .getValuesMap[Any](Seq("min_id", "max_id", "n")))
     if (bounds("n").asInstanceOf[Long] == 0L) return
     val minNew = bounds("min_id").asInstanceOf[Long]
     val maxNew = bounds("max_id").asInstanceOf[Long]
@@ -376,20 +374,14 @@ object IncrementalSpanCensus {
   }
 
   /** [[censusForDelta]] over an ALREADY-MATERIALIZED distinct-span
-    * relation (`spans(span_h)`, session-temp parquet) — the entry point
-    * [[emitNewDocs]] uses so its own span materialization pass is not
-    * repeated. */
-  /** Largest bucket in-list a probe pushes as a partition filter —
-    * past it the list costs more to plan than the pruning saves (and
-    * a probe that hits this many buckets reads most of the state
-    * anyway, so the filter would prune ~nothing). */
-  private val maxProbeBuckets = 16384
-
+    * relation (`spans(span_h)`, session-temp parquet) of `nSpans` rows
+    * — the entry point [[emitNewDocs]] uses so its own span
+    * materialization pass is not repeated. Every visible partial is
+    * bloom-probed in one plain union; the exact semi join after the
+    * merge removes the bloom's false positives. */
   private def censusForSpans(s: SparkSession, workDir: String,
-      spans: DataFrame, knownSpanCount: Long = -1L): DataFrame = {
+      spans: DataFrame, nSpans: Long): DataFrame = {
     import graft.operators.Dedup.spanKey
-    val nSpans =
-      if (knownSpanCount >= 0L) knownSpanCount else spans.count()
     if (nSpans == 0L)
       // every delta doc is shorter than the span width — nothing can
       // be cut; hand the rewrite an empty, correctly-typed census
@@ -401,33 +393,10 @@ object IncrementalSpanCensus {
     val bf = spans.stat.bloomFilter(spanKey(col("span_h")), nSpans, 0.001)
     val bos = new java.io.ByteArrayOutputStream()
     bf.writeTo(bos)
-    val bytes = bos.toByteArray
-    // Per-partition state read. A key-BUCKETED compacted partition
-    // (the [[compact]] layout) is first partition-PRUNED to the
-    // delta's own bucket set: every occurrence of a delta span hashes
-    // to the same bucket, so a bucket outside the set cannot hold a
-    // matching row — the scan reads ≈ min(1, |S|/nB) of the compacted
-    // census. Un-bucketed partials (per-batch, or pre-bucketing
-    // compactions) are bloom-probed in full as before; the row-level
-    // bloom + the exact semi join below are unchanged either way.
     val partials = AdditiveBatchState
-      .visibleRelations(s, new Path(s"$workDir/census"))
-      .map {
-        case (df, Some(nB)) =>
-          val bs = spans
-            .select(pmod(spanKey(col("span_h")), lit(nB)).cast("int")
-              .as("b"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          val pruned =
-            if (bs.size < nB && bs.size <= maxProbeBuckets)
-              df.filter(col(AdditiveBatchState.BucketCol).isin(bs: _*))
-            else df
-          pruned.drop(AdditiveBatchState.BucketCol)
-        case (df, None) => df
-      }
-      .map(_.filter(call_function(
-        "bloom_contains", lit(bytes), spanKey(col("span_h")))))
-      .reduce(_.unionByName(_))
+      .visibleUnion(s, new Path(s"$workDir/census"))
+      .filter(call_function(
+        "bloom_contains", lit(bos.toByteArray), spanKey(col("span_h"))))
     mergeAgg(partials)
       .filter(col("n_occurrences") >= 2L)
       .join(spans, Seq("span_h"), "left_semi")

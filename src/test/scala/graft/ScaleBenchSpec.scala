@@ -27,9 +27,8 @@ class ScaleBenchSpec extends AnyFunSuite {
       })
     }
     assert(!built, "a SparkSession was requested for an unknown workload")
-    for (name <- Seq("ann", "bpe", "cluster", "compaction", "dsir",
-        "dsir-emit", "lm", "mix", "pack", "span", "span-emit", "topic",
-        "floor"))
+    for (name <- Seq("ann", "bpe", "cluster", "dsir", "dsir-emit", "lm",
+        "mix", "pack", "span", "span-emit", "topic", "floor"))
       assert(e.getMessage.contains(s"$name "), s"'$name' missing: ${e.getMessage}")
     // a known workload missing its required argument fails the same way
     intercept[IllegalArgumentException] {

@@ -673,20 +673,23 @@ class PlanShapeSpec extends AnyFunSuite {
     // InferFiltersFromGenerate add `size(k) > 0 AND isnotnull(k)`, and
     // the optimizer inlines the kernel into both conjuncts — three
     // kernel calls per row. explode_outer + an isNotNull on the
-    // generated column keeps the inference off.
+    // generated column keeps the inference off. A filter over a plain
+    // alias of a kernel is pushed below its projection with the kernel
+    // inlined the same way (two calls per row).
     val docs = graft.sources.Records.table(spark, sfDir, "documents")
+    val kernels = Seq("minhash_lsh_bands(", "ngram_hashes(", "word_ngrams(")
     val plans = Seq(
       "minhash_lsh_bands(" -> graft.operators.Dedup.bandTable(
         graft.operators.Dedup.shingles(docs)),
-      "ngram_hashes(" -> graft.operators.Decontamination.ngramHashes(docs, 4))
+      "ngram_hashes(" -> graft.operators.Decontamination.ngramHashes(docs, 4),
+      "word_ngrams(" -> graft.operators.Dedup.shingles(docs))
     for ((kernel, df) <- plans) {
       val plan = df.queryExecution.optimizedPlan.toString
       assert(plan.contains(kernel), s"$kernel is not planned:\n$plan")
       val filterLines = plan.linesIterator
         .filter(_.replaceAll("^[\\s:+|-]+", "").startsWith("Filter"))
         .toSeq
-      val heavy = filterLines.filter(l =>
-        l.contains("minhash_lsh_bands(") || l.contains("ngram_hashes("))
+      val heavy = filterLines.filter(l => kernels.exists(l.contains))
       assert(heavy.isEmpty,
         s"$kernel evaluated inside a Filter:\n${heavy.mkString("\n")}\n$plan")
     }

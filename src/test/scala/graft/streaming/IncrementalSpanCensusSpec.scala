@@ -109,11 +109,9 @@ class IncrementalSpanCensusSpec extends AnyFunSuite {
   }
 
   private def partFileCount(dir: String): Int = {
-    // recursive: the bucketed compacted layout nests its part files
-    // inside kb=<b> partition directories
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-    try walk.filter(_.toString.endsWith(".parquet")).count().toInt
-    finally walk.close()
+    val ls = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
+    try ls.filter(_.toString.endsWith(".parquet")).count().toInt
+    finally ls.close()
   }
 
   test("compaction crash at every failpoint: the census stays EXACT, never a superset — over a MULTI-FILE compacted target") {
@@ -161,14 +159,13 @@ class IncrementalSpanCensusSpec extends AnyFunSuite {
     }
   }
 
-  test("bucketed compacted layout: pruned emission probe and merged census stay exact") {
+  test("emission over a compacted census: bounded emissions and merged census stay exact") {
     val docsDir = java.nio.file.Files
       .createTempDirectory("graft_d20b_docs_").toString
     val workDir = java.nio.file.Files
       .createTempDirectory("graft_d20b_work_").toString
     // absorb 4 monotone slices, emitting each delta; compact after the
-    // third arrival so the later probes face the kb-bucketed layout
-    // (compacted=2 pruned by the delta's bucket set + batch=3 plain)
+    // third arrival so the later probes read compacted=2 + batch=3
     for (slice <- 0 until 4) {
       writeSlice(docsDir, slice, (0 until 6).map { i =>
         val id = slice * 6L + i
@@ -183,14 +180,8 @@ class IncrementalSpanCensusSpec extends AnyFunSuite {
         spark.read.parquet(f"$docsDir/documents-$slice%02d.parquet"),
         SpanTokens)
     }
-    // the layout really is bucketed: modulus marker + kb= partition dirs
-    val cdir = new java.io.File(s"$workDir/census/compacted=2")
-    assert(cdir.isDirectory, partNames(workDir).toString)
-    assert(new java.io.File(cdir, "_kb").isFile,
-      "bucket-modulus marker missing from the compacted partition")
-    assert(cdir.listFiles().exists(_.getName.startsWith("kb=")),
-      s"no kb= bucket directories under $cdir")
-    // emissions that probed the bucketed state == pure-batch d17
+    assert(partNames(workDir) === Seq("batch=3", "compacted=2"))
+    // emissions that probed the compacted state == pure-batch d17
     val docs = spark.read.option("pathGlobFilter", "documents*.parquet")
       .parquet(docsDir)
     val viaBounded = IncrementalSpanCensus.emittedCorpus(spark, workDir)
@@ -200,10 +191,53 @@ class IncrementalSpanCensusSpec extends AnyFunSuite {
         SpanTokens)
       .orderBy("doc_id").collect().map(_.toSeq).toSeq
     assert(viaBounded === viaBatch,
-      "emission over the bucketed layout != pure-batch d17")
-    // the plain merged read (kb dropped) is exact too
+      "emission over the compacted census != pure-batch d17")
     assert(censusSet(workDir) === oracleSet(docsDir),
-      "merged census over the bucketed layout drifted")
+      "merged census over the compacted partition drifted")
+  }
+
+  test("empty compaction: a census of span-less docs compacts, reads back empty, and keeps absorbing") {
+    val docsDir = java.nio.file.Files
+      .createTempDirectory("graft_d18e_docs_").toString
+    val workDir = java.nio.file.Files
+      .createTempDirectory("graft_d18e_work_").toString
+    // every doc is shorter than the span width: both partials and the
+    // merge of them hold zero rows
+    writeSlice(docsDir, 0, Seq(0L -> "w0 w1", 1L -> "", 2L -> "w2"))
+    writeSlice(docsDir, 1, Seq(3L -> "w3 w4", 4L -> "w0"))
+    IncrementalSpanCensus.run(spark, docsDir, workDir,
+      spanTokens = SpanTokens)
+    IncrementalSpanCensus.compact(spark, workDir, upToBatch = 1L)
+    assert(partNames(workDir) === Seq("compacted=1"))
+    assert(IncrementalSpanCensus.census(spark, workDir).isEmpty,
+      "census of span-less docs is not empty")
+    assert(IncrementalSpanCensus.censusWithFirst(spark, workDir).isEmpty,
+      "censusWithFirst of span-less docs is not empty")
+    IncrementalSpanCensus.emitNewDocs(spark, workDir,
+      spark.read.parquet(s"$docsDir/documents-00.parquet",
+        s"$docsDir/documents-01.parquet"), SpanTokens)
+    // a later slice with real spans absorbs on top of the empty
+    // compacted partition, emits, and matches the batch oracles
+    writeSlice(docsDir, 2, (5L until 11L).map { id =>
+      id -> (0 until 6).map(j => s"w${(id + j) % 5}").mkString(" ")
+    })
+    IncrementalSpanCensus.run(spark, docsDir, workDir,
+      spanTokens = SpanTokens)
+    IncrementalSpanCensus.emitNewDocs(spark, workDir,
+      spark.read.parquet(s"$docsDir/documents-02.parquet"), SpanTokens)
+    assert(censusSet(workDir).nonEmpty)
+    assert(censusSet(workDir) === oracleSet(docsDir),
+      "census over an empty compacted partition drifted")
+    val docs = spark.read.option("pathGlobFilter", "documents*.parquet")
+      .parquet(docsDir)
+    val viaBounded = IncrementalSpanCensus.emittedCorpus(spark, workDir)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    val viaBatch = graft.operators.Dedup.spanDedupCorpus(docs,
+        graft.operators.Dedup.spanCensusWithFirst(docs, SpanTokens),
+        SpanTokens)
+      .orderBy("doc_id").collect().map(_.toSeq).toSeq
+    assert(viaBounded === viaBatch,
+      "emission over an empty compacted partition != pure-batch d17")
   }
 
   test("bounded emission: per-slice deltas == dedupAccumulated == batch d17; heals a crashed attempt; rejects non-monotone arrival") {
