@@ -129,18 +129,8 @@ object Bench {
         // the first streaming lifecycle entry
         val tmp = SessionTemp.dir("graft_warm_stream_")
         spark.range(8).write.mode("overwrite").parquet(s"$tmp/src")
-        val q = spark.readStream
-          .schema(spark.read.parquet(s"$tmp/src").schema)
-          .parquet(s"$tmp/src")
-          .writeStream
-          .foreachBatch { (b: org.apache.spark.sql.DataFrame,
-              _: java.lang.Long) =>
-            b.write.format("noop").mode("overwrite").save(); ()
-          }
-          .option("checkpointLocation", s"$tmp/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        ScaleBench.availableNowRows(spark, s"$tmp/src",
+          spark.read.parquet(s"$tmp/src").schema, s"$tmp/ckpt")
       } catch { case _: Throwable => }
     }
     // optional query-name filter (scale-stress runs bench a SUBSET on a

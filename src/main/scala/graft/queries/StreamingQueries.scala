@@ -18,6 +18,13 @@ import org.apache.spark.sql.functions._
  * checkpoint), and the SINK directory is read back as the result. The
  * DuckDB oracle recomputes the same transform relationally — so the gate
  * verifies the streaming path's output, not a batch re-implementation.
+ *
+ * The stateful file-stream entries (e3, d7, d8, e4, e6, e7) share one
+ * append lifecycle, [[appendLifecycle]]: each states only its query
+ * body, its fixture glob and its state policy. Every per-run directory
+ * (checkpoints, sinks, work dirs) is a fresh `SessionTemp.dir`, and the
+ * caches that hand out session-temp dirs rebuild an entry whose dir a
+ * `SessionTemp.cleanupNow()` removed.
  */
 object StreamingQueries {
 
@@ -32,6 +39,27 @@ object StreamingQueries {
     // S5 bounded range: view/0 only replicates offsets >= 2
     offsetRanges = Seq(OffsetRange("view", 0, 2L, Some(1000000L))))
 
+  /** `cache(key)` while its directory exists, else `build` (stored):
+    * `SessionTemp.cleanupNow()` may have removed a dir handed out by an
+    * earlier run. */
+  private def liveDir[K](cache: java.util.concurrent.ConcurrentHashMap[K, String],
+      key: K)(build: => String): String =
+    cache.compute(key, (_, d) =>
+      if (d != null && java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d))) d
+      else build)
+
+  /** The replicated sink by event id: the one read-back of k2 and its
+    * dynamic-source variants (the event id travels in header 0). */
+  private def replicatedByEventId(s: org.apache.spark.sql.SparkSession,
+      outDir: String): org.apache.spark.sql.DataFrame =
+    s.read.parquet(outDir)
+      .select(expr("cast(cast(headers[0].value as string) as long)")
+          .as("event_id"),
+        col("topic"),
+        col("partition").cast("long").as("dst_partition"),
+        col("offset"))
+      .orderBy("event_id")
+
   // The "source topic" dump is a fixture step (production reads the
   // broker): write it once per (session, data dir) and let repeated
   // runs re-stream it. Checkpoint + sink stay unique per run — reusing
@@ -43,22 +71,17 @@ object StreamingQueries {
     "k2_replication_pipeline",
     (s, dir) => {
       val base = graft.SessionTemp.dir("graft_k2_")
-      val srcDir = k2SrcCache.computeIfAbsent((s, dir), _ => {
+      val srcDir = liveDir(k2SrcCache, (s, dir)) {
         val d = graft.SessionTemp.dir("graft_k2_src_")
         Records.recordsFromEvents(Records.table(s, dir, "events"))
           .write.mode("overwrite").parquet(d)
         d
-      })
+      }
       val outDir = s"$base/out"
       val spec = k2Spec.copy(checkpointLocation = Some(s"$base/ckpt"))
-      val q = ReplicationPipeline.startFilePipeline(s, spec, srcDir, outDir)
-      q.awaitTermination()
-      s.read.parquet(outDir)
-        .select(col("event_id").cast("long").as("event_id"),
-          col("topic"),
-          col("partition").cast("long").as("dst_partition"),
-          col("offset"))
-        .orderBy("event_id")
+      ReplicationPipeline.startFilePipeline(s, spec, srcDir, outDir)
+        .awaitTermination()
+      replicatedByEventId(s, outDir)
     },
     Some(s"WITH ${Records.recordsSqlCte}\n" +
       """SELECT CAST(event_id AS BIGINT) AS event_id,
@@ -89,7 +112,6 @@ object StreamingQueries {
   // initial topics are never replayed or dropped across the change.
   private val s2SrcCache =
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
-  private val s2Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val s2Locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
   /** The shared (session, data dir)-cached topic-log fixture root used
@@ -98,7 +120,7 @@ object StreamingQueries {
   private def s2Root(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     import graft.sources.FileTopicLog
-    s2SrcCache.computeIfAbsent((s, dir), _ => {
+    liveDir(s2SrcCache, (s, dir)) {
         val d = graft.SessionTemp.dir("graft_s2_log_")
         val recs = logRecords(s, dir)
         recs.repartition(col("topic"), col("partition"))
@@ -134,7 +156,7 @@ object StreamingQueries {
             }
           }
         d
-      })
+      }
   }
 
   // S2 + S2B — ONE combined lifecycle run (gated once per (session,
@@ -166,7 +188,7 @@ object StreamingQueries {
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
   private def s2Scenario(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    s2ScenarioCache.computeIfAbsent((s, dir), _ => {
+    liveDir(s2ScenarioCache, (s, dir)) {
       import graft.sources.FileTopicLog
       import org.apache.spark.sql.expressions.Window
       val root = graft.SessionTemp.dir("graft_s2life_log_")
@@ -197,7 +219,7 @@ object StreamingQueries {
         .filter(col("topic") === victim && col("offset") < col("tp_half"))
         .count()
       FileTopicLog.setWhitelist(root, firstHalf)
-      val base = s"$e3TmpRoot/s2life_${s2Runs.incrementAndGet()}"
+      val base = graft.SessionTemp.dir("graft_s2life_")
       val q = s.readStream.format("graft-topiclog").option("path", root).load()
         .selectExpr("topic", "partition", "offset",
           "cast(key as string) AS user_id", "cast(value as string) AS props",
@@ -246,7 +268,7 @@ object StreamingQueries {
           "assignment changes must not restart the query")
       } finally q.stop()
       s"$base/sink"
-    })
+    }
 
   private def s2SinkRelation(s: org.apache.spark.sql.SparkSession,
       dir: String): org.apache.spark.sql.DataFrame =
@@ -264,21 +286,6 @@ object StreamingQueries {
         |FROM records
         |ORDER BY topic, partition, "offset"""".stripMargin))
 
-  // E3 — watermarked event-time windows, run as a REAL append-mode
-  // streaming query (AvailableNow over a file source): only windows the
-  // final watermark (max event time − 1 h, ms precision) has passed are
-  // emitted; the open tail windows stay in state. The oracle models the
-  // same cutoff relationally — so Spark's late-data/eviction semantics
-  // themselves sit under the hash gate.
-  //
-  // Harness-cost notes (this was the most expensive bench entry at
-  // 8.1 s, almost all of it machinery, not plan): the sink is a MEMORY
-  // sink (same append-mode eviction, no parquet round-trip and no
-  // read-back schema pass), the source schema is cached per directory
-  // (one footer read per session instead of per run), and checkpoints
-  // share one session temp root. Checkpoints stay UNIQUE per run — a
-  // reused checkpoint would resume past the committed offsets and emit
-  // nothing.
   /** State backend choice is per-pipeline, by STATE SHAPE (the
     * memory-vs-RocksDB tradeoff, SURVEY §2.1.1): the default HDFSBacked
     * store keeps every key on the JVM heap — the right backend for
@@ -294,6 +301,11 @@ object StreamingQueries {
   private[graft] val RocksDbProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
+  /** Event rows from which e4/e6/e7 move their state to RocksDB: every
+    * raw event crosses their state shuffle, and past ~1M events the
+    * concurrent heap-store tasks each pin a partition's state map. */
+  private val EventStateRocksDbRows = 1000000L
+
   /** Shuffle/state-store width for a stateful entry, sized to the STATE
     * (distinct keys ≈ corpus rows for dedup), not the session's
     * relational default: one store per shuffle partition is pure
@@ -301,79 +313,110 @@ object StreamingQueries {
     * data-sized state — measured at sf10 (500k dedup keys) widening
     * 4 → 16 cut d7 34 → 21 s and d8 53 → 30 s even on one JVM, and on a
     * real cluster the width is what spreads state across executors.
-    * ~125k keys per store, floor 4, capped at the core count;
-    * `spark.graft.stream.shuffle` (set on the parent session or via
-    * -D) overrides the computed width. */
+    * ~125k keys per store, floor 4, capped at the core count. */
   private def stateWidth(s: org.apache.spark.sql.SparkSession,
       stateKeys: Long): Int =
-    s.conf.getOption("spark.graft.stream.shuffle").map(_.toInt).getOrElse {
-      math.min(s.sparkContext.defaultParallelism.toLong,
-        math.max(4L, 4L * (stateKeys / 125000L))).toInt
-    }
+    math.min(s.sparkContext.defaultParallelism.toLong,
+      math.max(4L, 4L * (stateKeys / 125000L))).toInt
 
-  private def streamingSession(s: org.apache.spark.sql.SparkSession,
-      rocksDb: Boolean, width: Int): org.apache.spark.sql.SparkSession = {
-    // cloned session (own SQLConf + catalog) so neither the narrowed
-    // shuffle nor the state backend touches the caller's session
+  // fixture schema and parquet row count (footer metadata, no data
+  // read) per (data dir, glob): one probe per fixture per JVM
+  private val fixtureSchemas = new java.util.concurrent.ConcurrentHashMap[
+    (String, String), org.apache.spark.sql.types.StructType]()
+  private val fixtureRows =
+    new java.util.concurrent.ConcurrentHashMap[(String, String), java.lang.Long]()
+  private def fixture(s: org.apache.spark.sql.SparkSession, dir: String,
+      glob: String): org.apache.spark.sql.DataFrame =
+    s.read.option("pathGlobFilter", glob).parquet(dir)
+
+  /** The append lifecycle of the stateful file-stream entries (e3, d7,
+    * d8, e4, e6, e7), stated once:
+    *  - a cloned session (own SQLConf + catalog, so nothing planned in
+    *    the caller's session sees it) at the entry's state width and
+    *    backend;
+    *  - a file stream over `dir`'s `glob` files, ONE FILE per
+    *    micro-batch: the driver fixture is a single file (one batch),
+    *    while a time-sliced fixture (GenData.SplitEventsByTime) arrives
+    *    as N ordered slices and the watermark advances BETWEEN batches,
+    *    evicting closed state — the production arrival shape;
+    *  - `body`, given the cloned session and that stream's factory
+    *    (each call makes one more source: a stream-stream join takes
+    *    two), into one parquet sink + checkpoint in a fresh
+    *    session-temp dir (a reused checkpoint would resume past the
+    *    committed offsets and emit nothing);
+    *  - AvailableNow, await, and the sink read back in the caller's
+    *    session with the body's own schema (no footer schema pass).
+    *
+    * @param rocksDbFromRows the state policy. `None`: bounded state —
+    *   the heap store at the minimum width, no row count. `Some(n)`:
+    *   state that grows with the input — the width is sized to the
+    *   fixture's row count, and the state runs on RocksDB once that
+    *   count reaches `n` (`0`: always). */
+  private def appendLifecycle(s: org.apache.spark.sql.SparkSession,
+      dir: String, glob: String, entry: String,
+      rocksDbFromRows: Option[Long])(
+      body: (org.apache.spark.sql.SparkSession,
+        () => org.apache.spark.sql.DataFrame) => org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val rows = rocksDbFromRows.map(_ => fixtureRows.computeIfAbsent((dir, glob),
+      _ => java.lang.Long.valueOf(fixture(s, dir, glob).count())).longValue)
     val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", width.toString)
-    if (rocksDb)
+    ss.conf.set("spark.sql.shuffle.partitions",
+      stateWidth(s, rows.getOrElse(0L)).toString)
+    if (rocksDbFromRows.exists(n => rows.exists(_ >= n)))
       ss.conf.set("spark.sql.streaming.stateStore.providerClass", RocksDbProvider)
-    ss
+    val schema = fixtureSchemas.computeIfAbsent((dir, glob),
+      _ => fixture(s, dir, glob).schema)
+    val out = body(ss, () => ss.readStream.schema(schema)
+      .option("pathGlobFilter", glob)
+      .option("maxFilesPerTrigger", "1")
+      .parquet(dir))
+    val base = graft.SessionTemp.dir(s"graft_${entry}_")
+    out.writeStream.format("parquet")
+      .option("path", s"$base/out")
+      .option("checkpointLocation", s"$base/ckpt")
+      .outputMode("append")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+    s.read.schema(out.schema).parquet(s"$base/out")
   }
 
-  private val e3SchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private val e3Runs = new java.util.concurrent.atomic.AtomicLong(0)
-  private lazy val e3TmpRoot =
-    graft.SessionTemp.dir("graft_e3_")
+  /** `ts` as a timestamp, whichever parquet type the events fixture
+    * stores it as — the conversion [[Records.table]] applies to batch
+    * reads. */
+  private def eventTs(events: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame =
+    events.withColumn("ts", Records.tsToTimestamp(events.schema("ts").dataType))
+
+  // E3 — watermarked event-time windows, run as a REAL append-mode
+  // streaming query (AvailableNow over a file source): only windows the
+  // final watermark (max event time − 1 h, ms precision) has passed are
+  // emitted; the open tail windows stay in state. The oracle models the
+  // same cutoff relationally — so Spark's late-data/eviction semantics
+  // themselves sit under the hash gate.
+  //
+  // Harness-cost notes (this was the most expensive bench entry at
+  // 8.1 s, almost all of it machinery, not plan): the source schema is
+  // cached per (dir, glob), and the parquet sink is read back with the
+  // plan's schema, so no run pays a footer schema pass; the result is
+  // never collected to the driver. The window/event_type state is
+  // BOUNDED (hundreds of groups), the case the heap store and the
+  // minimum width are right for: each shuffle partition materializes
+  // one state store in the checkpoint, so a wide shuffle is pure fixed
+  // overhead.
   private val e3 = QueryDef(
     "e3_watermarked_windows",
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      // stream the fixture file directly (read-only); ts arrives as LONG
-      // nanos under the session's nanosAsLong setting, converted exactly
-      // like Records.table does for batch reads
-      val schema = e3SchemaCache.computeIfAbsent(dir,
-        d => s.read.option("pathGlobFilter", "events*.parquet")
-          .parquet(d).schema)
-      val runId = e3Runs.incrementAndGet()
-      val sinkTable = s"graft_e3_sink_$runId"
-      // the stateful agg materializes one state store per shuffle
-      // partition in the checkpoint; the window/event_type state is tiny
-      // (hundreds of groups), so 32 stores are pure fixed overhead.
-      // streamingSession: narrowed shuffle in a CLONED session — nothing
-      // planned concurrently in the caller's session sees the override,
-      // and the memory-sink temp view lands in the clone. Heap-backed
-      // state and the minimum width: the window/event_type groups are
-      // BOUNDED, the case the default store and a narrow shuffle are
-      // right for.
-      val ss = streamingSession(s, rocksDb = false, stateWidth(s, 0L))
-      val q = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir)
-        .withColumn("ts", Records.tsToTimestamp(schema("ts").dataType))
-        .withWatermark("ts", "1 hour")
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-        .select(col("window.start").cast("long").as("window_start"),
-          col("event_type"), col("n"))
-        .writeStream.format("memory")
-        .queryName(sinkTable)
-        .option("checkpointLocation", s"$e3TmpRoot/ckpt_$runId")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      // drain the memory sink and drop it — repeated runs must not
-      // accumulate result sets on the driver for the session's lifetime
-      val result = ss.table(sinkTable)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val out = s.createDataFrame(rows, result.schema)
-      ss.catalog.dropTempView(sinkTable)
-      out.orderBy("window_start", "event_type")
-    },
+    (s, dir) =>
+      appendLifecycle(s, dir, "events*.parquet", "e3",
+          rocksDbFromRows = None) { (_, events) =>
+        eventTs(events())
+          .withWatermark("ts", "1 hour")
+          .groupBy(window(col("ts"), "1 hour"), col("event_type"))
+          .agg(count(lit(1)).as("n"))
+          .select(col("window.start").cast("long").as("window_start"),
+            col("event_type"), col("n"))
+      }.orderBy("window_start", "event_type"),
     Some(
       """WITH mx AS (SELECT epoch_us(MAX(ts)) // 1000 AS max_ms FROM events),
         |w AS (SELECT CAST(FLOOR(epoch_us(ts) / 3600000000) * 3600 AS BIGINT)
@@ -395,48 +438,19 @@ object StreamingQueries {
   // is bounded with `dropDuplicatesWithinWatermark` over the ingest
   // timestamp + RocksDB state; the fixture has no event time, so this
   // entry documents the unbounded-state form the reference-scale
-  // pipeline would qualify with a watermark.
-  private val d7SchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  // corpus row count per data dir (parquet metadata count — no data
-  // read); dedup state keys ≈ rows, which sizes the state shuffle
-  private val d7RowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private def d7Rows(s: org.apache.spark.sql.SparkSession, dir: String): Long =
-    d7RowsCache.computeIfAbsent(dir,
-      d => s.read.parquet(s"$d/documents.parquet").count())
-  private val d7Runs = new java.util.concurrent.atomic.AtomicLong(0)
+  // pipeline would qualify with a watermark. RocksDB: the first-seen
+  // hash set grows with the corpus — the data-sized-state case the heap
+  // store cannot hold at 100 TB; the store count scales with the corpus
+  // too (dedup state keys ≈ rows).
   private val d7 = QueryDef(
     "d7_stream_dedup",
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = d7SchemaCache.computeIfAbsent(dir,
-        d => s.read.parquet(s"$d/documents.parquet").schema)
-      val runId = d7Runs.incrementAndGet()
-      val sinkTable = s"graft_d7_sink_$runId"
-      // RocksDB: the first-seen hash set grows with the corpus — the
-      // data-sized-state case the heap store cannot hold at 100 TB; the
-      // store count scales with the corpus too (one metadata-count job)
-      val ss = streamingSession(s, rocksDb = true,
-        stateWidth(s, d7Rows(s, dir)))
-      val q = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .select(md5(col("text").cast("binary")).as("content_md5"))
-        .dropDuplicates("content_md5")
-        .writeStream.format("memory")
-        .queryName(sinkTable)
-        .option("checkpointLocation", s"$e3TmpRoot/d7_ckpt_$runId")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      val result = ss.table(sinkTable)
-      val rows = java.util.Arrays.asList(result.collect(): _*)
-      val out = s.createDataFrame(rows, result.schema)
-      ss.catalog.dropTempView(sinkTable)
-      out.orderBy("content_md5")
-    },
+    (s, dir) =>
+      appendLifecycle(s, dir, "documents.parquet", "d7",
+          rocksDbFromRows = Some(0L)) { (_, docs) =>
+        docs()
+          .select(md5(col("text").cast("binary")).as("content_md5"))
+          .dropDuplicates("content_md5")
+      }.orderBy("content_md5"),
     Some(
       """SELECT DISTINCT md5(text) AS content_md5 FROM documents
         |ORDER BY content_md5""".stripMargin))
@@ -454,40 +468,22 @@ object StreamingQueries {
   // the full distinct set — which is what the relational oracle checks.
   // Reference analog: S7's bounded in-flight dedup state
   // (`uReplicator-Worker/.../worker/ConsumerIterator.java:56-86`).
-  private val d8SchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private val d8Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d8 = QueryDef(
     "d8_stream_dedup_wm",
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = d8SchemaCache.computeIfAbsent(dir,
-        d => s.read.parquet(s"$d/documents.parquet").schema)
-      val runId = d8Runs.incrementAndGet()
-      val base = s"$e3TmpRoot/d8_$runId"
-      val ss = streamingSession(s, rocksDb = true,
-        stateWidth(s, d7Rows(s, dir)))
-      val q = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(dir)
-        .select(md5(col("text").cast("binary")).as("content_md5"))
-        // deterministic per-key event time (hash-derived, 0–24 h range):
-        // duplicates of a key are indistinguishable rows, so first-seen
-        // emission order cannot leak into the output
-        .withColumn("ingest_ts", expr(
-          "timestamp_micros(pmod(xxhash64(content_md5), 86400000000L))"))
-        .withWatermark("ingest_ts", "1 hour")
-        .dropDuplicatesWithinWatermark("content_md5")
-        .select("content_md5")
-        .writeStream.format("parquet")
-        .option("path", s"$base/out")
-        .option("checkpointLocation", s"$base/ckpt")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$base/out").orderBy("content_md5")
-    },
+    (s, dir) =>
+      appendLifecycle(s, dir, "documents.parquet", "d8",
+          rocksDbFromRows = Some(0L)) { (_, docs) =>
+        docs()
+          .select(md5(col("text").cast("binary")).as("content_md5"))
+          // deterministic per-key event time (hash-derived, 0–24 h
+          // range): duplicates of a key are indistinguishable rows, so
+          // first-seen emission order cannot leak into the output
+          .withColumn("ingest_ts", expr(
+            "timestamp_micros(pmod(xxhash64(content_md5), 86400000000L))"))
+          .withWatermark("ingest_ts", "1 hour")
+          .dropDuplicatesWithinWatermark("content_md5")
+          .select("content_md5")
+      }.orderBy("content_md5"),
     Some(
       """SELECT DISTINCT md5(text) AS content_md5 FROM documents
         |ORDER BY content_md5""".stripMargin))
@@ -504,12 +500,10 @@ object StreamingQueries {
   // asserts the final table is exact; here the full pipeline (driver
   // fixture = one batch; a sliced fixture = one batch per slice) sits
   // under the DuckDB gate.
-  private val d12Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d12 = QueryDef(
     "d12_stream_incremental_dedup",
     (s, dir) => {
-      val runId = d12Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/d12_$runId"
+      val workDir = graft.SessionTemp.dir("graft_d12_")
       graft.streaming.IncrementalDedup.run(s, dir, workDir)
       graft.streaming.IncrementalDedup.kept(s, workDir)
         .orderBy("content_hash")
@@ -529,69 +523,28 @@ object StreamingQueries {
   // session: [t, t+gap) does not contain t+gap — note e1's batch lag
   // formulation uses > and would merge that edge case) and the same
   // ms-precision watermark cutoff as e3. State is the set of OPEN
-  // sessions inside the watermark horizon — bounded by active users, not
-  // corpus size, so the heap store and the minimum shuffle width are the
-  // right backend (d7/d8 hold the data-sized-state/RocksDB case).
-  private val e4SchemaCache =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
-  private val e4RowsCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-  private val e4Runs = new java.util.concurrent.atomic.AtomicLong(0)
+  // sessions inside the watermark horizon, but session_window has NO
+  // partial aggregation — every raw event crosses the state shuffle so
+  // sessions can merge in the store — so unlike e3 (windowed agg,
+  // map-side combined) the width scales with EVENT volume: at 100x (10M
+  // events) the 4-partition floor was a 93 s funnel. Width brings
+  // concurrency, and concurrent heap-store tasks each pin their
+  // partition's session map, so past ~1M events the state moves to
+  // RocksDB (native memory, spill-capable).
   private val e4 = QueryDef(
     "e4_stream_sessions",
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = e4SchemaCache.computeIfAbsent(dir,
-        d => s.read.option("pathGlobFilter", "events*.parquet")
-          .parquet(d).schema)
-      val runId = e4Runs.incrementAndGet()
-      // session_window has NO partial aggregation — every raw event
-      // crosses the state shuffle so sessions can merge in the store —
-      // so unlike e3 (windowed agg, map-side combined) the width here
-      // must scale with per-batch EVENT volume, not open-session state:
-      // at 100x (10M events) the 4-partition floor was a 93 s funnel.
-      // Width brings concurrency, and concurrent heap-store tasks each
-      // pin their partition's session map, so past ~1M events the state
-      // moves to RocksDB (native memory, spill-capable) and the emitted
-      // sessions go to a parquet sink, not a driver-memory table —
-      // the same durable-sink shape as d8. The parquet row count is
-      // metadata-only (footer stats), cached per fixture beside the
-      // schema.
-      val eventRows = e4RowsCache.computeIfAbsent(dir,
-        d => java.lang.Long.valueOf(
-          s.read.option("pathGlobFilter", "events*.parquet")
-            .parquet(d).count()))
-      val ss = streamingSession(s, rocksDb = eventRows >= 1000000L,
-        stateWidth(s, eventRows))
-      val outPath = s"$e3TmpRoot/e4_out_$runId"
-      // one FILE per micro-batch: the driver fixture is a single file
-      // (unchanged — one batch), but a time-sliced fixture
-      // (GenData.SplitEventsByTime) arrives as N ordered slices and the
-      // watermark then advances BETWEEN batches, evicting closed
-      // sessions — state holds one batch + open sessions, not the
-      // corpus. That is the production arrival shape; the single-batch
-      // run is the degenerate worst case (all state resident at once).
-      val q = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir)
-        .withColumn("ts", Records.tsToTimestamp(schema("ts").dataType))
-        .withWatermark("ts", "1 hour")
-        .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
-        .agg(count(lit(1)).as("n_events"))
-        .select(col("user_id").cast("long").as("user_id"),
-          col("session_window.start").cast("long").as("session_start"),
-          col("session_window.end").cast("long").as("session_end"),
-          col("n_events"))
-        .writeStream.format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", s"$e3TmpRoot/e4_ckpt_$runId")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outPath).orderBy("user_id", "session_start")
-    },
+    (s, dir) =>
+      appendLifecycle(s, dir, "events*.parquet", "e4",
+          rocksDbFromRows = Some(EventStateRocksDbRows)) { (_, events) =>
+        eventTs(events())
+          .withWatermark("ts", "1 hour")
+          .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
+          .agg(count(lit(1)).as("n_events"))
+          .select(col("user_id").cast("long").as("user_id"),
+            col("session_window.start").cast("long").as("session_start"),
+            col("session_window.end").cast("long").as("session_end"),
+            col("n_events"))
+      }.orderBy("user_id", "session_start"),
     Some(
       """WITH mx AS (SELECT epoch_us(MAX(ts)) // 1000 AS max_ms FROM events),
         |e AS (SELECT user_id, event_id, epoch_us(ts) AS us FROM events),
@@ -633,60 +586,37 @@ object StreamingQueries {
   // store, before folding). Width scales with event volume (all raw
   // events cross the state shuffle) and the state moves to RocksDB
   // past 1M events, as e4.
-  private val e6Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val e6 = QueryDef(
     "e6_stream_funnel",
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode, Trigger}
-      val schema = e4SchemaCache.computeIfAbsent(dir,
-        d => s.read.option("pathGlobFilter", "events*.parquet")
-          .parquet(d).schema)
-      val eventRows = e4RowsCache.computeIfAbsent(dir,
-        d => java.lang.Long.valueOf(
-          s.read.option("pathGlobFilter", "events*.parquet")
-            .parquet(d).count()))
-      val runId = e6Runs.incrementAndGet()
-      val ss = streamingSession(s, rocksDb = eventRows >= 1000000L,
-        stateWidth(s, eventRows))
-      import ss.implicits._
-      val outPath = s"$e3TmpRoot/e6_out_$runId"
-      val q = ss.readStream.schema(schema)
-        .option("pathGlobFilter", "events*.parquet")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(dir)
-        .withColumn("ts", Records.tsToTimestamp(schema("ts").dataType))
-        .select(col("user_id").cast("long").as("user_id"),
-          unix_micros(col("ts")).as("us"),
-          col("event_id").cast("long").as("event_id"), col("event_type"))
-        .as[(Long, Long, Long, String)]
-        .groupByKey(_._1)
-        .flatMapGroupsWithState[(Boolean, Boolean, Boolean), (Long, Long)](
-          OutputMode.Append, GroupStateTimeout.NoTimeout) { (user, events, state) =>
-          var (c, v, p) = state.getOption.getOrElse((false, false, false))
-          events.toSeq.sortBy(e => (e._2, e._3)).foreach { e =>
-            e._4 match {
-              case "click" => c = true
-              case "view" => if (c) v = true
-              case "purchase" => if (v) p = true
-              case _ =>
+    (s, dir) =>
+      appendLifecycle(s, dir, "events*.parquet", "e6",
+          rocksDbFromRows = Some(EventStateRocksDbRows)) { (ss, events) =>
+        import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+        import ss.implicits._
+        eventTs(events())
+          .select(col("user_id").cast("long").as("user_id"),
+            unix_micros(col("ts")).as("us"),
+            col("event_id").cast("long").as("event_id"), col("event_type"))
+          .as[(Long, Long, Long, String)]
+          .groupByKey(_._1)
+          .flatMapGroupsWithState[(Boolean, Boolean, Boolean), (Long, Long)](
+            OutputMode.Append, GroupStateTimeout.NoTimeout) { (user, evs, state) =>
+            var (c, v, p) = state.getOption.getOrElse((false, false, false))
+            evs.toSeq.sortBy(e => (e._2, e._3)).foreach { e =>
+              e._4 match {
+                case "click" => c = true
+                case "view" => if (c) v = true
+                case "purchase" => if (v) p = true
+                case _ =>
+              }
             }
+            state.update((c, v, p))
+            val stage = if (p) 3L else if (v) 2L else if (c) 1L else 0L
+            Iterator.single((user, stage))
           }
-          state.update((c, v, p))
-          val stage = if (p) 3L else if (v) 2L else if (c) 1L else 0L
-          Iterator.single((user, stage))
-        }
-        .toDF("user_id", "stage")
-        .writeStream.format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", s"$e3TmpRoot/e6_ckpt_$runId")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outPath)
-        .groupBy("user_id").agg(max("stage").as("stage"))
-        .orderBy("user_id")
-    },
+          .toDF("user_id", "stage")
+      }.groupBy("user_id").agg(max("stage").as("stage"))
+        .orderBy("user_id"),
     Some(
       """WITH e AS (
         |  SELECT user_id, event_id, event_type, epoch_us(ts) AS us FROM events),
@@ -723,49 +653,26 @@ object StreamingQueries {
   // not emission), so a single AvailableNow pass yields the full exact
   // join — the batch oracle. State is per-user rows inside a bounded
   // horizon, so width scales with event volume like e4, RocksDB past 1M.
-  private val e7Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val e7 = QueryDef(
     "e7_stream_join",
-    (s, dir) => {
-      import org.apache.spark.sql.streaming.Trigger
-      val schema = e4SchemaCache.computeIfAbsent(dir,
-        d => s.read.option("pathGlobFilter", "events*.parquet")
-          .parquet(d).schema)
-      val eventRows = e4RowsCache.computeIfAbsent(dir,
-        d => java.lang.Long.valueOf(
-          s.read.option("pathGlobFilter", "events*.parquet")
-            .parquet(d).count()))
-      val runId = e7Runs.incrementAndGet()
-      val ss = streamingSession(s, rocksDb = eventRows >= 1000000L,
-        stateWidth(s, eventRows))
-      val outPath = s"$e3TmpRoot/e7_out_$runId"
-      def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
-        ss.readStream.schema(schema)
-          .option("pathGlobFilter", "events*.parquet")
-          .option("maxFilesPerTrigger", "1")
-          .parquet(dir)
-          .withColumn("ts", Records.tsToTimestamp(schema("ts").dataType))
-          .filter(col("event_type") === tpe)
-          .select(col("user_id").cast("long").as(userAs),
-            col("event_id").cast("long").as(idAs), col("ts").as(tsAs))
-          .withWatermark(tsAs, "4 hours")
-      val q = side("purchase", "purchase_id", "pts", "p_user")
-        .join(side("view", "view_id", "vts", "v_user"),
-          expr("p_user = v_user AND pts >= vts AND " +
-            "pts <= vts + interval 2 hours"))
-        .select(col("p_user").as("user_id"), col("purchase_id"),
-          col("view_id"),
-          expr("(unix_micros(pts) - unix_micros(vts)) div 1000000")
-            .as("lag_s"))
-        .writeStream.format("parquet")
-        .option("path", outPath)
-        .option("checkpointLocation", s"$e3TmpRoot/e7_ckpt_$runId")
-        .outputMode("append")
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.read.parquet(outPath).orderBy("purchase_id", "view_id")
-    },
+    (s, dir) =>
+      appendLifecycle(s, dir, "events*.parquet", "e7",
+          rocksDbFromRows = Some(EventStateRocksDbRows)) { (_, events) =>
+        def side(tpe: String, idAs: String, tsAs: String, userAs: String) =
+          eventTs(events())
+            .filter(col("event_type") === tpe)
+            .select(col("user_id").cast("long").as(userAs),
+              col("event_id").cast("long").as(idAs), col("ts").as(tsAs))
+            .withWatermark(tsAs, "4 hours")
+        side("purchase", "purchase_id", "pts", "p_user")
+          .join(side("view", "view_id", "vts", "v_user"),
+            expr("p_user = v_user AND pts >= vts AND " +
+              "pts <= vts + interval 2 hours"))
+          .select(col("p_user").as("user_id"), col("purchase_id"),
+            col("view_id"),
+            expr("(unix_micros(pts) - unix_micros(vts)) div 1000000")
+              .as("lag_s"))
+      }.orderBy("purchase_id", "view_id"),
     Some(
       """WITH v AS (SELECT user_id, event_id AS view_id, epoch_us(ts) AS vus
         |      FROM events WHERE event_type = 'view'),
@@ -788,12 +695,10 @@ object StreamingQueries {
   // reads give layout-borne exactly-once, and compaction is the shared
   // crash-safe publish-then-delete (IncrementalNearDupSpec drives the
   // mid-stream crash and the sliced==unsliced equivalence).
-  private val d13Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d13 = QueryDef(
     "d13_stream_incremental_neardup",
     (s, dir) => {
-      val runId = d13Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/d13_$runId"
+      val workDir = graft.SessionTemp.dir("graft_d13_")
       graft.streaming.IncrementalNearDup.run(s, dir, workDir)
       graft.streaming.IncrementalNearDup.results(s, workDir)
         .orderBy("doc_id")
@@ -821,12 +726,10 @@ object StreamingQueries {
   // batch SQL and the verdicts are slicing-invariant. The durable
   // index holds per-cell minima (2 rows/vector), same layout-borne
   // exactly-once + crash-safe compaction as d12/d13.
-  private val d14Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d14 = QueryDef(
     "d14_stream_embedding_dedup",
     (s, dir) => {
-      val runId = d14Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/d14_$runId"
+      val workDir = graft.SessionTemp.dir("graft_d14_")
       graft.streaming.IncrementalEmbeddingDup.run(s, dir, workDir)
       graft.streaming.IncrementalEmbeddingDup.results(s, workDir)
         .orderBy("vec_id")
@@ -870,12 +773,10 @@ object StreamingQueries {
   // compaction failpoint, and sliced == unsliced equivalence). The
   // oracle is d16's census SQL, exact (no sampling), whole corpus at
   // once — batch slicing must be invisible.
-  private val d18Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d18 = QueryDef(
     "d18_stream_span_census",
     (s, dir) => {
-      val runId = d18Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/d18_$runId"
+      val workDir = graft.SessionTemp.dir("graft_d18_")
       graft.streaming.IncrementalSpanCensus.run(s, dir, workDir)
       graft.streaming.IncrementalSpanCensus.census(s, workDir)
         .orderBy("span_h")
@@ -903,12 +804,10 @@ object StreamingQueries {
   // deduplicated snapshots on any cadence). The oracle is d17's full
   // batch SQL over the same documents: incremental maintenance and
   // batch slicing must be invisible in the rewritten corpus.
-  private val d19Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d19 = QueryDef(
     "d19_stream_span_dedup",
     (s, dir) => {
-      val runId = d19Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/d19_$runId"
+      val workDir = graft.SessionTemp.dir("graft_d19_")
       graft.streaming.IncrementalSpanCensus.run(s, dir, workDir)
       graft.streaming.IncrementalSpanCensus.dedupAccumulated(s, workDir,
           Records.table(s, dir, "documents"))
@@ -939,12 +838,10 @@ object StreamingQueries {
   // (IncrementalSpanCensusSpec pins delta-emission ≡ accumulated ≡
   // batch, the crash-heal overwrite, and the loud non-monotone and
   // regressed-state rejections).
-  private val d20Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d20 = QueryDef(
     "d20_stream_span_emit",
     (s, dir) => {
-      val runId = d20Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/d20_$runId"
+      val workDir = graft.SessionTemp.dir("graft_d20_")
       val streamDir = s"$workDir/docs"
       java.nio.file.Files.createDirectories(
         java.nio.file.Paths.get(streamDir))
@@ -991,12 +888,10 @@ object StreamingQueries {
   // incremental maintenance and batch slicing must be invisible in
   // the sample (IncrementalDsirSpec drives the mid-stream crash,
   // every compaction failpoint, and the sampled-fit equivalence).
-  private val p17dRuns = new java.util.concurrent.atomic.AtomicLong(0)
   private val p17d = QueryDef(
     "p17d_stream_dsir",
     (s, dir) => {
-      val runId = p17dRuns.incrementAndGet()
-      val workDir = s"$e3TmpRoot/p17d_$runId"
+      val workDir = graft.SessionTemp.dir("graft_p17d_")
       graft.streaming.IncrementalDsir.run(s, dir, workDir)
       val d = Records.table(s, dir, "documents")
       graft.streaming.IncrementalDsir.resampleAccumulated(s, workDir,
@@ -1029,12 +924,10 @@ object StreamingQueries {
   // p17b chain — epochs, partials, and the rebase must be invisible
   // in the sample (IncrementalDsirSpec pins the frozen-epoch
   // incremental ≡ one-pass identity and the refresh crash matrix).
-  private val p17fRuns = new java.util.concurrent.atomic.AtomicLong(0)
   private val p17f = QueryDef(
     "p17f_stream_dsir_emit",
     (s, dir) => {
-      val runId = p17fRuns.incrementAndGet()
-      val workDir = s"$e3TmpRoot/p17f_$runId"
+      val workDir = graft.SessionTemp.dir("graft_p17f_")
       val d = Records.table(s, dir, "documents")
       val target = d.filter(col("source") === "src0")
       val pool = d.filter(col("source") =!= "src0")
@@ -1071,11 +964,10 @@ object StreamingQueries {
   // epoch churn must be invisible in the top-k (IncrementalAnnSpec
   // drives the mid-stream crash, every compaction failpoint, and the
   // epoch-displacement equivalence).
-  private val d21Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val d21 = QueryDef(
     "d21_stream_ann",
     (s, dir) => {
-      val workDir = s"$e3TmpRoot/d21_${d21Runs.incrementAndGet()}"
+      val workDir = graft.SessionTemp.dir("graft_d21_")
       graft.streaming.IncrementalAnn.run(s, dir, workDir, nCells = 8)
       val e = Records.table(s, dir, "embeddings")
         .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1101,13 +993,11 @@ object StreamingQueries {
   // be invisible in the curated mix (StreamCurationSpec drives the
   // mid-stream crash + restart and pins funnel-over-index ≡ the
   // all-batch p19 funnel).
-  private val p21Runs = new java.util.concurrent.atomic.AtomicLong(0)
   private val p21 = QueryDef(
     "p21_stream_curation",
     (s, dir) => {
       import s.implicits._
-      val runId = p21Runs.incrementAndGet()
-      val workDir = s"$e3TmpRoot/p21_$runId"
+      val workDir = graft.SessionTemp.dir("graft_p21_")
       graft.streaming.IncrementalDedup.run(s, dir, workDir)
       val kept = graft.streaming.IncrementalDedup.kept(s, workDir)
       val weights = (0 until 20)
@@ -1205,38 +1095,76 @@ object StreamingQueries {
     (s, dir) => s2SinkRelation(s, dir),
     Some(recordsOracle))
 
+  /** Append the `cond` slice of `recs` to the log at `root` and return
+    * its per-(topic, partition) row count — the staged floor that the
+    * k2c/k2d/k2e retention asserts check the log base against. */
+  private def stageCounted(recs: org.apache.spark.sql.DataFrame,
+      cond: org.apache.spark.sql.Column, root: String): Map[(String, Int), Long] = {
+    writeLog(recs.filter(cond), root)
+    recs.filter(cond).groupBy("topic", "partition").count().collect()
+      .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+  }
+
+  /** The k2d/k2e fixture: the record relation with per-TP stage cuts
+    * `t1`/`t2` at one and two thirds of each (topic, partition). */
+  private def recordsInThirds(s: org.apache.spark.sql.SparkSession,
+      dir: String, prefix: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    materializedOnce(logRecords(s, dir)
+      .withColumn("tp_n",
+        count(lit(1)).over(Window.partitionBy("topic", "partition")))
+      .withColumn("t1", (col("tp_n") / 3).cast("long"))
+      .withColumn("t2", (col("tp_n") * 2 / 3).cast("long")), prefix)
+  }
+
+  /** Poll (25 ms ticks, 30 s bound) until every TP's log base reached its
+    * `floor` count. The cut runs at a batch's source commit, which fires
+    * on the trigger tick AFTER the batch completes, so it can lag the
+    * data by a tick or two; Spark re-runs the cleanup every trigger, so
+    * the cut self-heals within ~one tick. Polling bounded instead of
+    * asserting against the scheduler's clock (the flake showed up only
+    * inside the 139-query driver session under load). The caller
+    * asserts the bases afterwards. */
+  private def awaitLogBases(root: String,
+      floor: Map[(String, Int), Long]): Unit = {
+    import graft.sources.FileTopicLog
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (floor.exists { case ((t, p), n) =>
+        FileTopicLog.startOffset(root, t, p) < n } &&
+        System.nanoTime < deadline)
+      Thread.sleep(25)
+  }
+
+  /** Every consumer group of the log at `root` with its recorded
+    * positions (for failure messages). */
+  private def groupState(root: String): Map[String, Map[String, Map[Int, Long]]] = {
+    import graft.sources.FileTopicLog
+    FileTopicLog.groups(root).map(g => g -> FileTopicLog.groupPositions(root, g)).toMap
+  }
+
   // K2b — the k2 replication pipeline with the DSv2 dynamic source as
   // its data plane: format("graft-topiclog") → the IDENTICAL
   // T1/T2/T5 + S5 transform chain → exactly-once parquet sink, under
   // k2's oracle SQL. Gates the custom reader's full record path
   // (binary key/value, headers, timestamps) through the production
   // pipeline, not just the s2 assignment demo.
-  private val k2bRuns = new java.util.concurrent.atomic.AtomicLong(0)
   private val k2b = QueryDef(
     "k2b_dynamic_replication",
     (s, dir) => {
       import graft.sources.FileTopicLog
       val root = s2Root(s, dir)
       val topics = eventTopics(s, dir)
-      val base = s"$e3TmpRoot/k2b_${k2bRuns.incrementAndGet()}"
+      val base = graft.SessionTemp.dir("graft_k2b_")
       // shares the s2 fixture root → same whitelist lock as s2 runs
       s2Locks.computeIfAbsent(root, _ => new Object).synchronized {
         FileTopicLog.setWhitelist(root, topics)
         val src = s.readStream.format("graft-topiclog")
           .option("path", root).load()
-        val spec = k2Spec.copy(name = "k2b")
-        val q = ReplicationPipeline.parquetSink(
-          ReplicationPipeline.transform(src, spec),
-          s"$base/out", s"$base/ckpt").start()
-        q.awaitTermination()
+        ReplicationPipeline.parquetSink(
+          ReplicationPipeline.transform(src, k2Spec.copy(name = "k2b")),
+          s"$base/out", s"$base/ckpt").start().awaitTermination()
       }
-      s.read.parquet(s"$base/out")
-        .select(expr("cast(cast(headers[0].value as string) as long)")
-            .as("event_id"),
-          col("topic"),
-          col("partition").cast("long").as("dst_partition"),
-          col("offset"))
-        .orderBy("event_id")
+      replicatedByEventId(s, s"$base/out")
     },
     k2.oracle)
 
@@ -1249,7 +1177,6 @@ object StreamingQueries {
   // mid-run `require` pins that every consumed TP's base offset really
   // advanced past its phase-1 prefix. Run-scoped log root: truncation
   // mutates the fixture, so the shared s2 root cannot be used.
-  private val k2cRuns = new java.util.concurrent.atomic.AtomicLong(0)
   private val k2c = QueryDef(
     "k2c_retention_replication",
     (s, dir) => {
@@ -1265,12 +1192,9 @@ object StreamingQueries {
       // so retention of batch 0 (the first halves) is only observable
       // after batch 1 has run — the phase-1 per-TP counts are the
       // deterministic floor the mid-run assert checks against
-      writeLog(recs.filter(col("offset") < col("tp_half")), root)
-      val half1 = recs.filter(col("offset") < col("tp_half"))
-        .groupBy("topic", "partition").count().collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val half1 = stageCounted(recs, col("offset") < col("tp_half"), root)
       FileTopicLog.setWhitelist(root, topics)
-      val base = s"$e3TmpRoot/k2c_${k2cRuns.incrementAndGet()}"
+      val base = graft.SessionTemp.dir("graft_k2c_")
       val src = s.readStream.format("graft-topiclog")
         .option("path", root)
         .option("truncateOnCommit", "true")
@@ -1290,13 +1214,7 @@ object StreamingQueries {
             s"retention must advance $t/$p base past the consumed prefix ($b < $n)")
         }
       } finally q.stop()
-      s.read.parquet(s"$base/out")
-        .select(expr("cast(cast(headers[0].value as string) as long)")
-            .as("event_id"),
-          col("topic"),
-          col("partition").cast("long").as("dst_partition"),
-          col("offset"))
-        .orderBy("event_id")
+      replicatedByEventId(s, s"$base/out")
     },
     k2.oracle)
 
@@ -1316,27 +1234,17 @@ object StreamingQueries {
   // Stages are thirds so both queries see multiple batches (a source
   // commit lands one batch late — stage N's commit fires while the
   // stage-N+1 batch is constructed).
-  private val k2dRuns = new java.util.concurrent.atomic.AtomicLong(0)
   private val k2d = QueryDef(
     "k2d_group_retention",
     (s, dir) => {
       import graft.sources.FileTopicLog
-      import org.apache.spark.sql.expressions.Window
       val root = graft.SessionTemp.dir("graft_k2d_log_")
-      val recs = materializedOnce(logRecords(s, dir)
-        .withColumn("tp_n",
-          count(lit(1)).over(Window.partitionBy("topic", "partition")))
-        .withColumn("t1", (col("tp_n") / 3).cast("long"))
-        .withColumn("t2", (col("tp_n") * 2 / 3).cast("long")),
-        "graft_k2d_recs_")
+      val recs = recordsInThirds(s, dir, "graft_k2d_recs_")
       val topics = eventTopics(s, dir)
-      writeLog(recs.filter(col("offset") < col("t1")), root)
-      val stageA = recs.filter(col("offset") < col("t1"))
-        .groupBy("topic", "partition").count().collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val stageA = stageCounted(recs, col("offset") < col("t1"), root)
       FileTopicLog.setWhitelist(root, topics)
       FileTopicLog.registerGroup(root, "slow")
-      val base = s"$e3TmpRoot/k2d_${k2dRuns.incrementAndGet()}"
+      val base = graft.SessionTemp.dir("graft_k2d_")
       val fastSrc = s.readStream.format("graft-topiclog")
         .option("path", root)
         .option("truncateOnCommit", "true")
@@ -1372,26 +1280,16 @@ object StreamingQueries {
           writeLog(recs.filter(col("offset") >= col("t2")), root)
           slow.processAllAvailable() // stage-C batch commits the A+B position
           fast.processAllAvailable() // stage-B commit → cut to min(own, slow)
-          // Both queries pick up stage C on independent 25 ms triggers,
-          // and a source commit (where the cut runs) fires on the tick
-          // AFTER its batch completes — so the fast query's cut can
-          // race the slow group's position commit by a tick or two.
-          // Spark re-runs the cleanup every trigger, so the cut
-          // self-heals within ~one tick; poll bounded instead of
-          // asserting against the scheduler's clock (the flake showed
-          // up only inside the 139-query driver session under load).
-          val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-          while (stageA.exists { case ((t, p), n) =>
-              FileTopicLog.startOffset(root, t, p) < n } &&
-              System.nanoTime < deadline)
-            Thread.sleep(25)
+          // both queries pick up stage C on independent 25 ms triggers,
+          // so the fast query's cut can race the slow group's position
+          // commit by a tick or two
+          awaitLogBases(root, stageA)
           // on a timeout the interesting question is WHICH link stalled:
           // the slow group's position publish, the fast cut, or a dead
           // query — put all three in the failure message
           def health = s"fastActive=${fast.isActive} fastEx=${fast.exception} " +
             s"slowActive=${slow.isActive} slowEx=${slow.exception} " +
-            s"groups=${FileTopicLog.groups(root).map(g =>
-              g -> FileTopicLog.groupPositions(root, g)).toMap}"
+            s"groups=${groupState(root)}"
           stageA.foreach { case ((t, p), n) =>
             val b = FileTopicLog.startOffset(root, t, p)
             val slowRec = FileTopicLog.groupPositions(root, "slow")
@@ -1403,13 +1301,7 @@ object StreamingQueries {
           }
         } finally slow.stop()
       } finally fast.stop()
-      s.read.parquet(s"$base/out")
-        .select(expr("cast(cast(headers[0].value as string) as long)")
-            .as("event_id"),
-          col("topic"),
-          col("partition").cast("long").as("dst_partition"),
-          col("offset"))
-        .orderBy("event_id")
+      replicatedByEventId(s, s"$base/out")
     },
     k2.oracle)
 
@@ -1429,35 +1321,24 @@ object StreamingQueries {
   // duplicating, or dropping anything. Expiry-vs-live-commit atomicity
   // is the group lock's job (GroupExpiryServiceSpec); here the policy
   // loop is exercised against a RUNNING query under the oracle.
-  private val k2eRuns = new java.util.concurrent.atomic.AtomicLong(0)
   private val k2e = QueryDef(
     "k2e_group_expiry",
     (s, dir) => {
       import graft.sources.FileTopicLog
-      import org.apache.spark.sql.expressions.Window
       val root = graft.SessionTemp.dir("graft_k2e_log_")
-      val recs = materializedOnce(logRecords(s, dir)
-        .withColumn("tp_n",
-          count(lit(1)).over(Window.partitionBy("topic", "partition")))
-        .withColumn("t1", (col("tp_n") / 3).cast("long"))
-        .withColumn("t2", (col("tp_n") * 2 / 3).cast("long")),
-        "graft_k2e_recs_")
+      val recs = recordsInThirds(s, dir, "graft_k2e_recs_")
       val topics = eventTopics(s, dir)
-      writeLog(recs.filter(col("offset") < col("t1")), root)
-      val stageA = recs.filter(col("offset") < col("t1"))
-        .groupBy("topic", "partition").count().collect()
-        .map(r => (r.getString(0), r.getInt(1)) -> r.getLong(2)).toMap
+      val stageA = stageCounted(recs, col("offset") < col("t1"), root)
       FileTopicLog.setWhitelist(root, topics)
       FileTopicLog.registerGroup(root, "abandoned")
-      val base = s"$e3TmpRoot/k2e_${k2eRuns.incrementAndGet()}"
+      val base = graft.SessionTemp.dir("graft_k2e_")
       val src = s.readStream.format("graft-topiclog")
         .option("path", root)
         .option("truncateOnCommit", "true")
         .option("groupId", "fast")
         .load()
-      val q = graft.streaming.ReplicationPipeline.parquetSink(
-          graft.streaming.ReplicationPipeline.transform(src,
-            k2Spec.copy(name = "k2e")),
+      val q = ReplicationPipeline.parquetSink(
+          ReplicationPipeline.transform(src, k2Spec.copy(name = "k2e")),
           s"$base/out", s"$base/ckpt", availableNow = false)
         .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("25 milliseconds"))
         .start()
@@ -1483,30 +1364,17 @@ object StreamingQueries {
             "the live query's own group never ages while committing")
         // the cut runs at each batch's source commit, so the release
         // shows at the commit AFTER the next data lands — write stage
-        // C, drain, and poll bounded (commits lag their batch by a
-        // trigger tick, the k2d adjudication)
+        // C, drain, and wait for the bases
         writeLog(recs.filter(col("offset") >= col("t2")), root)
         q.processAllAvailable()
-        val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
-        while (stageA.exists { case ((t, p), n) =>
-            FileTopicLog.startOffset(root, t, p) < n } &&
-            System.nanoTime < deadline)
-          Thread.sleep(25)
+        awaitLogBases(root, stageA)
         stageA.foreach { case ((t, p), n) =>
           require(FileTopicLog.startOffset(root, t, p) >= n,
             s"retention must advance past the released pin at $t/$p; " +
-              s"qActive=${q.isActive} qEx=${q.exception} groups=" +
-              s"${FileTopicLog.groups(root).map(g =>
-                g -> FileTopicLog.groupPositions(root, g)).toMap}")
+              s"qActive=${q.isActive} qEx=${q.exception} groups=${groupState(root)}")
         }
       } finally q.stop()
-      s.read.parquet(s"$base/out")
-        .select(expr("cast(cast(headers[0].value as string) as long)")
-            .as("event_id"),
-          col("topic"),
-          col("partition").cast("long").as("dst_partition"),
-          col("offset"))
-        .orderBy("event_id")
+      replicatedByEventId(s, s"$base/out")
     },
     k2.oracle)
 

@@ -116,8 +116,18 @@ final class PipelineManager(spark: SparkSession) {
   def query(name: String): Option[StreamingQuery] = queries.get(name)
   def running: Seq[String] = queries.keys.toSeq.sorted
 
-  /** Wait for all running availableNow pipelines to drain. */
-  def awaitAll(): Unit = queries.values.foreach(_.awaitTermination())
+  /** Wait for all running availableNow pipelines to drain. A restart
+    * (supervisor, whitelister) can replace a route's handle while we
+    * wait: the stopped handle's wait returns normally, so the registered
+    * handles are re-read under the lock after each wait, until every
+    * route's current handle has terminated. */
+  def awaitAll(): Unit = {
+    var pending = synchronized(queries.values.toSeq)
+    while (pending.nonEmpty) {
+      pending.foreach(_.awaitTermination())
+      pending = synchronized(queries.values.filter(_.isActive).toSeq)
+    }
+  }
 
   /** V1-style status view: one JSON object per pipeline. */
   def statusJson: String = {

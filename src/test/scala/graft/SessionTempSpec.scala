@@ -26,6 +26,23 @@ class SessionTempSpec extends AnyFunSuite {
     assert(c.getParent != root || Files.exists(c.getParent))
   }
 
+  test("streaming entries stay correct across a mid-run cleanupNow") {
+    val spark = SparkTestSession.spark
+    def rows(name: String): Seq[String] =
+      queries.Catalog.byName(name).fn(spark, SparkTestSession.sfDir)
+        .collect().map(_.toString).toSeq
+    val entries = Seq("k2_replication_pipeline", "d12_stream_incremental_dedup")
+    val before = entries.map(rows)
+    val root = SessionTemp.rootOption.get
+    SessionTemp.cleanupNow()
+    // the cached fixture dirs under the removed root are rebuilt, and
+    // every per-run dir lands under the new root
+    val after = entries.map(rows)
+    assert(after == before)
+    assert(before.forall(_.nonEmpty))
+    assert(!Files.exists(root), s"$root was recreated after cleanupNow")
+  }
+
   test("cleanupNow is idempotent") {
     SessionTemp.cleanupNow()
     SessionTemp.cleanupNow()

@@ -66,6 +66,10 @@ class GraftControllerSpec extends AnyFunSuite {
           s"$base/out", sp.checkpointLocation.get).start()
       }
       ctrl.manager.awaitAll()
+      // a failed route leaves an empty sink, and reading it fails with
+      // an unrelated schema-inference error: name the route's own first
+      val routeError = ctrl.manager.query("route-a").flatMap(_.exception)
+      assert(routeError.isEmpty, s"route-a failed: $routeError")
       assert(spark.read.parquet(s"$base/out").count() == 10) // click only
 
       // REST mutation flows into the manager's spec (CAS path)

@@ -116,6 +116,47 @@ class SupervisionSpec extends AnyFunSuite {
     }
   }
 
+  test("awaitAll waits for the replacement of a route restarted mid-drain") {
+    val base = graft.SessionTemp.dir("graft_await_")
+    val srcDir = s"$base/src"; val outDir = s"$base/out"
+    // 12 one-file slices read one per trigger: the drain spans 12 batches
+    val slices = 12
+    for (i <- 0 until slices)
+      (0 until 10).map(o => ("k", s"v$i-$o", "click", o % 2, (i * 10 + o).toLong))
+        .toDF("k", "v", "topic", "partition", "offset")
+        .select(col("k").cast("binary").as("key"),
+          col("v").cast("binary").as("value"),
+          col("topic"), col("partition"), col("offset"))
+        .coalesce(1).write.mode("append").parquet(srcDir)
+    val manager = new PipelineManager(spark)
+    try {
+      val first = manager.start(spec("await", s"$base/ckpt")) { sp =>
+        val schema = spark.read.parquet(srcDir).schema
+        val src = ReplicationPipeline.fileSource(spark, srcDir, schema,
+          maxFilesPerTrigger = Some(1))
+        ReplicationPipeline.parquetSink(
+          ReplicationPipeline.transform(src, sp), outDir, s"$base/ckpt").start()
+      }
+      // a second thread restarts the route after its first batch, while
+      // the main thread is already waiting in awaitAll
+      val restarted = new AtomicBoolean(false)
+      val restarter = new Thread(() => {
+        while (first.lastProgress == null && first.isActive) Thread.sleep(10)
+        restarted.set(manager.restart("await").isDefined)
+      })
+      restarter.start()
+      manager.awaitAll()
+      restarter.join()
+      assert(restarted.get)
+      val active = manager.running.flatMap(manager.query).filter(_.isActive)
+      assert(active.isEmpty,
+        s"awaitAll returned with active queries ${active.map(_.id)}")
+      val out = spark.read.parquet(outDir)
+      assert(out.count() == slices * 10L)
+      assert(out.select("value").distinct().count() == slices * 10L)
+    } finally manager.shutdown()
+  }
+
   test("V2: state backup dumps parseable JSON with specs and status") {
     val dir = tempDir("graft_v2_")
     val manager = new PipelineManager(spark)
