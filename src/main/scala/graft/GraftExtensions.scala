@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{ArrayExceptSorted, BigramBuckets, BloomContains, BottomKDistinct, BpeSegment, DsirScore, DsirScoreN, DsirScoreUniBi, KafkaMurmur2Partition, MinHashLshBands, NgramBuckets, NgramHashes, RepetitionStats, SimHash16, SpanCut, SpanCutPositions, SpanHashes, SpanHashesPos, UnibigramBuckets, VecDot, VecSumAgg, WordNGrams}
+import graft.functions.{ArrayExceptSorted, BloomContains, BottomKDistinct, BpeSegment, DsirBuckets, DsirScore, KafkaMurmur2Partition, MinHashLshBands, NgramHashes, RepetitionStats, SimHash16, SpanCut, SpanCutPositions, SpanHashes, SpanHashesPos, VecDot, VecSumAgg, WordNGrams}
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
@@ -15,10 +15,10 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
  * (murmur2-exact Kafka default partitioner, [[graft.functions.Murmur2]])
  * and the sketch kernels ([[graft.functions.Sketches]]) —
  * `minhash_lsh_bands(shingles)`, `simhash16(tokens)`, `vec_dot(a, b)`,
- * the n-gram family `word_ngrams` / `ngram_hashes` / `ngram_buckets` /
- * `bigram_buckets` / `unibigram_buckets`, the span family `span_hashes`
- * / `span_hashes_pos` / `span_cut` / `span_cut_positions`, the DSIR
- * scorers `dsir_score` / `dsir_score_n` / `dsir_score_unibi`,
+ * the n-gram pair `word_ngrams` / `ngram_hashes`, the span family
+ * `span_hashes` / `span_hashes_pos` / `span_cut` / `span_cut_positions`,
+ * the two DSIR kernels `dsir_buckets(text, buckets, unigrams)` and
+ * `dsir_score(text, lr, unigrams)` (bigrams, or unigrams then bigrams),
  * `bpe_segment`, `repetition_stats`, `bloom_contains`,
  * `array_except_sorted`, plus the aggregates `bottom_k_distinct`
  * (BottomK.scala) and `vec_sum` (VecSum.scala) — the per-row hot loops
@@ -60,20 +60,12 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       c => SpanHashesPos(c.head, c(1), c(2)))
     inject(ext, "span_cut_positions", 3, classOf[SpanCutPositions],
       c => SpanCutPositions(c.head, c(1), c(2)))
-    inject(ext, "bigram_buckets", 2, classOf[BigramBuckets],
-      c => BigramBuckets(c.head, c(1)))
-    inject(ext, "dsir_score", 2, classOf[DsirScore],
-      c => DsirScore(c.head, c(1)))
-    inject(ext, "ngram_buckets", 3, classOf[NgramBuckets],
-      c => NgramBuckets(c.head, c(1), c(2)))
-    inject(ext, "dsir_score_n", 3, classOf[DsirScoreN],
-      c => DsirScoreN(c.head, c(1), c(2)))
+    inject(ext, "dsir_buckets", 3, classOf[DsirBuckets],
+      c => DsirBuckets(c.head, c(1), c(2)))
+    inject(ext, "dsir_score", 3, classOf[DsirScore],
+      c => DsirScore(c.head, c(1), c(2)))
     inject(ext, "bpe_segment", 2, classOf[BpeSegment],
       c => BpeSegment(c.head, c(1)))
-    inject(ext, "unibigram_buckets", 2, classOf[UnibigramBuckets],
-      c => UnibigramBuckets(c.head, c(1)))
-    inject(ext, "dsir_score_unibi", 2, classOf[DsirScoreUniBi],
-      c => DsirScoreUniBi(c.head, c(1)))
     inject(ext, "vec_dot", 2, classOf[VecDot], c => VecDot(c.head, c(1)))
     inject(ext, "repetition_stats", 1, classOf[RepetitionStats],
       c => RepetitionStats(c.head))

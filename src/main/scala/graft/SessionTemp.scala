@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 /** One JVM-scoped scratch root for every materialize-before-reuse site
@@ -45,6 +45,18 @@ object SessionTemp {
     }
     current = None
   }
+
+  /** `cache(key)` while every path `landed(cached)` names still exists,
+    * else `build` (stored): [[cleanupNow]] may have removed what an
+    * earlier run landed under the root. Paths are plain or `file:`
+    * URIs (a parquet frame's `inputFiles`). */
+  def live[K, V](cache: java.util.concurrent.ConcurrentHashMap[K, V],
+      key: K)(landed: V => Seq[String])(build: => V): V =
+    cache.compute(key, (_, v) =>
+      if (v != null && landed(v).forall(exists)) v else build)
+
+  private def exists(path: String): Boolean =
+    Files.exists(Paths.get(new org.apache.hadoop.fs.Path(path).toUri.getPath))
 
   /** Current root if one has been created and not cleaned (for specs). */
   private[graft] def rootOption: Option[Path] = lock.synchronized {

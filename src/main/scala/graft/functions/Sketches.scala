@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, QuaternaryExpression, TernaryExpression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, DoubleType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -64,9 +64,9 @@ object Sketches {
     * long — the JVM twin of
     * `cast(conv(substring(md5(x),1,15),16,10) as bigint)`: bytes 0..6
     * plus the high nibble of byte 7. ONE implementation shared by
-    * every windowed-digest loop (spanWindows, bigramBuckets,
-    * dsirScore) so the span gate, the DSIR bucket space and the DuckDB
-    * substr(md5,1,15) contract cannot drift apart. */
+    * every windowed-digest loop (spanWindows, dsirWindows) so the span
+    * gate, the DSIR bucket space and the DuckDB substr(md5,1,15)
+    * contract cannot drift apart. */
   private def digest60(d: Array[Byte]): Long = {
     var v = 0L
     var i = 0
@@ -239,145 +239,81 @@ object Sketches {
   def spanHashesPos(text: UTF8String, n: Int, mod: Long): ArrayData =
     spanWindows(text, n, mod, withPos = true)
 
-  /** Every adjacent-token bigram's DSIR bucket (60-bit md5 of
-    * "a b" mod `buckets`) in ONE pass — the fit-side kernel behind
-    * [[graft.operators.Dsir.bucketCounts]]. Bit-identical to the
-    * tokenize → transform → md5 → conv → pmod lambda chain
-    * ([[graft.operators.Dsir.bigramBucketsExpr]]; DsirSpec pins the
-    * parity): the window bytes feed md5 straight from the shared
-    * [[TokenBuf]], no per-bigram string building. Fewer than 2 tokens
-    * → empty array. */
-  def bigramBuckets(text: UTF8String, buckets: Int): ArrayData =
-    ngramBuckets(text, 2, buckets)
-
-  /** [[bigramBuckets]] generalized to n-token windows (n = 1 gives the
-    * per-token unigram buckets of the paper-faithful DSIR feature
-    * space; the bigram kernel is the n = 2 instance — same bytes, same
-    * md5, bit-identical). Fewer than n tokens (or n < 1, buckets < 1)
-    * → empty array. */
-  def ngramBuckets(text: UTF8String, n: Int, buckets: Int): ArrayData = {
-    if (buckets < 1 || n < 1)
-      return new GenericArrayData(Array.empty[Any])
-    val toks = spaceTokens(text)
-    val m = toks.size - n + 1
-    if (m <= 0) return new GenericArrayData(Array.empty[Any])
+  /** The one DSIR window loop behind [[dsirBuckets]] and [[dsirScore]]:
+    * one [[TokenBuf]] over `toks`, then the bucket (60-bit md5 of the
+    * window's space-joined tokens mod `buckets`) of every unigram
+    * window when `unigrams` (the oracle's `list_concat(uni, bi)`
+    * order), then of every adjacent-token bigram window. The window
+    * bytes feed md5 straight from the shared buffer — no per-window
+    * string building. */
+  private def dsirWindows(toks: java.util.ArrayList[String], buckets: Int,
+      unigrams: Boolean): Array[Long] = {
+    val nTok = toks.size
+    val out = new Array[Long](
+      (if (unigrams) nTok else 0) + math.max(nTok - 1, 0))
+    if (out.isEmpty) return out
     val tb = new TokenBuf(toks)
     val md = Md5.get()
-    val out = new Array[Any](m)
-    var i = 0
-    while (i < m) {
-      md.reset()
-      md.update(tb.buf, tb.starts(i), tb.ends(i + n - 1) - tb.starts(i))
-      out(i) = digest60(md.digest()) % buckets
-      i += 1
+    var k = 0
+    var n = if (unigrams) 1 else 2
+    while (n <= 2) {
+      var i = 0
+      while (i + n <= nTok) {
+        md.reset()
+        md.update(tb.buf, tb.starts(i), tb.ends(i + n - 1) - tb.starts(i))
+        out(k) = digest60(md.digest()) % buckets
+        k += 1
+        i += 1
+      }
+      n += 1
     }
-    new GenericArrayData(out)
+    out
   }
+
+  /** Every DSIR feature bucket of one doc in ONE pass — the fit-side
+    * kernel behind [[graft.operators.Dsir.bucketCounts]]: the unigram
+    * buckets first when `unigrams` (the paper-faithful unigram ∪
+    * bigram bag), then every bigram's. Bigram-only is bit-identical to
+    * the tokenize → transform → md5 → conv → pmod lambda chain
+    * ([[graft.operators.Dsir.bigramBucketsExpr]]; DsirSpec pins the
+    * parity). No window (or `buckets < 1`) → empty array. */
+  def dsirBuckets(text: UTF8String, buckets: Int,
+      unigrams: Boolean): ArrayData =
+    UnsafeArrayData.fromPrimitiveArray(
+      if (buckets < 1) Array.emptyLongArray
+      else dsirWindows(spaceTokens(text), buckets, unigrams))
 
   /** The DSIR per-doc score in ONE pass: fold the dense log-ratio
-    * array over every bigram bucket, left-to-right (the same
-    * summation order as the `aggregate` lambda fold it replaces —
-    * DsirSpec pins bit-equality). Returns (n_bigrams, logw); fewer
-    * than 2 tokens → (0, 0.0), the fold's zero. The lr array rides as
-    * a LITERAL argument (the span_cut probe discipline — never a
-    * joined column). */
-  def dsirScore(text: UTF8String,
-      lr: ArrayData): org.apache.spark.sql.catalyst.InternalRow =
-    dsirScoreN(text, 2, lr)
-
-  /** [[dsirScore]] generalized to n-token windows — the scoring twin
-    * of [[ngramBuckets]] (n = 1 folds unigram features; the bigram
-    * kernel is the n = 2 instance, bit-identical). A doc shorter than
-    * n tokens folds to (0, 0.0). */
-  def dsirScoreN(text: UTF8String, n: Int,
-      lr: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
+    * array over the doc's [[dsirBuckets]] stream. Returns
+    * (n_features, logw); with `unigrams` the score is the unigram fold
+    * plus the bigram fold, each summed left-to-right (the stated
+    * cross-engine order), and bigram-only it is the bigram fold alone
+    * — the summation order of the `aggregate` lambda fold it replaces
+    * (DsirSpec pins bit-equality). No window → (0, 0.0), the fold's
+    * zero. The lr array rides as a LITERAL argument (the span_cut
+    * probe discipline — never a joined column). */
+  def dsirScore(text: UTF8String, lr: ArrayData,
+      unigrams: Boolean): org.apache.spark.sql.catalyst.InternalRow = {
     val buckets = lr.numElements()
     val toks = spaceTokens(text)
-    val m = if (n < 1) 0 else toks.size - n + 1
-    if (m <= 0 || buckets < 1) {
-      return new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(Array[Any](0L, 0.0))
+    val fs =
+      if (buckets < 1) Array.emptyLongArray
+      else dsirWindows(toks, buckets, unigrams)
+    def fold(from: Int, until: Int): Double = {
+      var w = 0.0
+      var i = from
+      while (i < until) {
+        w += lr.getDouble(fs(i).toInt)
+        i += 1
+      }
+      w
     }
-    val tb = new TokenBuf(toks)
-    val md = Md5.get()
-    var w = 0.0
-    var i = 0
-    while (i < m) {
-      md.reset()
-      md.update(tb.buf, tb.starts(i), tb.ends(i + n - 1) - tb.starts(i))
-      w += lr.getDouble((digest60(md.digest()) % buckets).toInt)
-      i += 1
-    }
+    val nUni = if (unigrams) math.min(toks.size, fs.length) else 0
+    val logw =
+      if (unigrams) fold(0, nUni) + fold(nUni, fs.length)
+      else fold(0, fs.length)
     new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any](m.toLong, w))
-  }
-
-  /** The combined unigram ∪ bigram DSIR feature stream in ONE pass —
-    * one tokenize, one [[TokenBuf]], unigram windows then bigram
-    * windows (the oracle's `list_concat(uni, bi)` order). Equals
-    * `concat(ngramBuckets(t,1,B), ngramBuckets(t,2,B))` element for
-    * element at half the per-row tokenization/buffer cost. */
-  def unibigramBuckets(text: UTF8String, buckets: Int): ArrayData = {
-    if (buckets < 1) return new GenericArrayData(Array.empty[Any])
-    val toks = spaceTokens(text)
-    val n1 = toks.size
-    if (n1 == 0) return new GenericArrayData(Array.empty[Any])
-    val n2 = n1 - 1
-    val tb = new TokenBuf(toks)
-    val md = Md5.get()
-    val out = new Array[Any](n1 + math.max(n2, 0))
-    var i = 0
-    while (i < n1) {
-      md.reset()
-      md.update(tb.buf, tb.starts(i), tb.ends(i) - tb.starts(i))
-      out(i) = digest60(md.digest()) % buckets
-      i += 1
-    }
-    i = 0
-    while (i < n2) {
-      md.reset()
-      md.update(tb.buf, tb.starts(i), tb.ends(i + 1) - tb.starts(i))
-      out(n1 + i) = digest60(md.digest()) % buckets
-      i += 1
-    }
-    new GenericArrayData(out)
-  }
-
-  /** The combined unigram ∪ bigram DSIR score in ONE pass: the two
-    * window widths fold over the same [[TokenBuf]] (each left-to-right
-    * — identical arithmetic to summing the two [[dsirScoreN]] folds,
-    * which is what the p17e spec/oracle state). Returns
-    * (n_features = unigrams + bigrams, logw = uniFold + biFold). */
-  def dsirScoreUniBi(text: UTF8String,
-      lr: ArrayData): org.apache.spark.sql.catalyst.InternalRow = {
-    val buckets = lr.numElements()
-    val toks = spaceTokens(text)
-    val n1 = toks.size
-    if (n1 == 0 || buckets < 1) {
-      return new org.apache.spark.sql.catalyst.expressions
-        .GenericInternalRow(Array[Any](0L, 0.0))
-    }
-    val n2 = n1 - 1
-    val tb = new TokenBuf(toks)
-    val md = Md5.get()
-    var w1 = 0.0
-    var i = 0
-    while (i < n1) {
-      md.reset()
-      md.update(tb.buf, tb.starts(i), tb.ends(i) - tb.starts(i))
-      w1 += lr.getDouble((digest60(md.digest()) % buckets).toInt)
-      i += 1
-    }
-    var w2 = 0.0
-    i = 0
-    while (i < n2) {
-      md.reset()
-      md.update(tb.buf, tb.starts(i), tb.ends(i + 1) - tb.starts(i))
-      w2 += lr.getDouble((digest60(md.digest()) % buckets).toInt)
-      i += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions
-      .GenericInternalRow(Array[Any]((n1 + math.max(n2, 0)).toLong, w1 + w2))
+      .GenericInternalRow(Array[Any](fs.length.toLong, logw))
   }
 
   /** BPE merge application over one token in a tight JVM loop — the
@@ -1195,156 +1131,90 @@ case class ArrayExceptSorted(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** `bigram_buckets(text STRING, buckets INT) -> ARRAY<BIGINT>` — every
-  * adjacent-token bigram's DSIR feature bucket in one kernel call
-  * ([[Sketches.bigramBuckets]]), replacing the tokenize → transform →
+/** The analysis-time contract of the two DSIR kernels: (STRING,
+  * `mid`, BOOLEAN literal). A wrong `mid` type would otherwise pass
+  * analysis and fail at execution (interpreted: ClassCastException;
+  * codegen: the generated Java doesn't compile and silently falls
+  * back) — the vec_dot/span_cut pattern. `unigrams` picks the feature
+  * space, so it is a constant of the query, never a column. */
+private object DsirKernelArgs {
+  import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+  def check(e: TernaryExpression, midOk: DataType => Boolean,
+      midSql: String): TypeCheckResult =
+    (e.first.dataType, e.second.dataType, e.third.dataType) match {
+      case (StringType, m, BooleanType) if midOk(m) && e.third.foldable =>
+        TypeCheckResult.TypeCheckSuccess
+      case (a, b, c) =>
+        TypeCheckResult.TypeCheckFailure(
+          s"${e.prettyName} requires (STRING, $midSql, BOOLEAN literal) " +
+            s"arguments, got ${a.catalogString}, ${b.catalogString} and " +
+            s"${c.catalogString}" +
+            (if (e.third.foldable) "" else " (unigrams is not a literal)"))
+    }
+}
+
+/** `dsir_buckets(text STRING, buckets INT, unigrams BOOLEAN) ->
+  * ARRAY<BIGINT>` — the doc's DSIR feature buckets in one kernel call
+  * ([[Sketches.dsirBuckets]]: unigrams first when `unigrams`, then
+  * every adjacent-token bigram), replacing the tokenize → transform →
   * md5 → conv → pmod lambda chain that Catalyst's interpreted
   * higher-order functions keep outside whole-stage codegen. */
-case class BigramBuckets(left: Expression, right: Expression)
-    extends BinaryExpression {
+case class DsirBuckets(first: Expression, second: Expression,
+    third: Expression) extends TernaryExpression {
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "bigram_buckets"
-
-  // a string/BIGINT buckets argument would otherwise pass analysis and
-  // fail at execution (interpreted: ClassCastException; codegen: the
-  // generated Java doesn't compile and silently falls back) — make the
-  // contract an analysis error, the vec_dot/span_cut pattern
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"bigram_buckets requires (STRING, INT) arguments, got " +
-            s"${l.catalogString} and ${r.catalogString}")
-    }
-
-  override protected def nullSafeEval(text: Any, buckets: Any): Any =
-    Sketches.bigramBuckets(text.asInstanceOf[UTF8String],
-      buckets.asInstanceOf[Number].intValue)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, b) =>
-      s"graft.functions.Sketches.bigramBuckets($t, $b)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): BigramBuckets =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `dsir_score(text STRING, lr ARRAY<DOUBLE>) ->
-  * STRUCT<n_bigrams BIGINT, logw DOUBLE>` — the DSIR per-doc score in
-  * one kernel call ([[Sketches.dsirScore]]): hash each bigram, fold
-  * the dense log-ratio literal left-to-right, return the count and the
-  * sum without materializing a bucket array per row. */
-case class DsirScore(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_bigrams", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("logw", DoubleType,
-        nullable = false)))
-  override def prettyName: String = "dsir_score"
-
-  // same analysis-time contract as bigram_buckets: a non-DOUBLE lr
-  // array would ClassCast in a task (or break the generated Java)
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dsir_score requires (STRING, ARRAY<DOUBLE>) arguments, got " +
-            s"${l.catalogString} and ${r.catalogString}")
-    }
-
-  override protected def nullSafeEval(text: Any, lr: Any): Any =
-    Sketches.dsirScore(text.asInstanceOf[UTF8String],
-      lr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, l) =>
-      s"graft.functions.Sketches.dsirScore($t, $l)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DsirScore =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `unibigram_buckets(text STRING, buckets INT) -> ARRAY<BIGINT>` —
-  * the combined unigram ∪ bigram DSIR feature stream in one kernel
-  * call ([[Sketches.unibigramBuckets]]): equal to
-  * `concat(ngram_buckets(text,1,B), ngram_buckets(text,2,B))` at one
-  * tokenize per row instead of two. */
-case class UnibigramBuckets(left: Expression, right: Expression)
-    extends BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "unibigram_buckets"
+  override def prettyName: String = "dsir_buckets"
 
   override def checkInputDataTypes():
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"unibigram_buckets requires (STRING, INT) arguments, got " +
-            s"${l.catalogString} and ${r.catalogString}")
-    }
+    DsirKernelArgs.check(this, _ == IntegerType, "INT")
 
-  override protected def nullSafeEval(text: Any, buckets: Any): Any =
-    Sketches.unibigramBuckets(text.asInstanceOf[UTF8String],
-      buckets.asInstanceOf[Number].intValue)
+  override protected def nullSafeEval(text: Any, buckets: Any,
+      unigrams: Any): Any =
+    Sketches.dsirBuckets(text.asInstanceOf[UTF8String],
+      buckets.asInstanceOf[Number].intValue,
+      unigrams.asInstanceOf[Boolean])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, b) =>
-      s"graft.functions.Sketches.unibigramBuckets($t, $b)")
+    defineCodeGen(ctx, ev, (t, b, u) =>
+      s"graft.functions.Sketches.dsirBuckets($t, $b, $u)")
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): UnibigramBuckets =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(f: Expression,
+      s: Expression, t: Expression): DsirBuckets = copy(f, s, t)
 }
 
-/** `dsir_score_unibi(text STRING, lr ARRAY<DOUBLE>) ->
-  * STRUCT<n_features BIGINT, logw DOUBLE>` — the combined unigram ∪
-  * bigram DSIR score in one kernel call ([[Sketches.dsirScoreUniBi]]):
-  * identical arithmetic to `dsir_score_n(t,1,lr) + dsir_score_n(t,2,lr)`
-  * at one tokenize per row. */
-case class DsirScoreUniBi(left: Expression, right: Expression)
-    extends BinaryExpression {
+/** `dsir_score(text STRING, lr ARRAY<DOUBLE>, unigrams BOOLEAN) ->
+  * STRUCT<n_features BIGINT, logw DOUBLE>` — the DSIR per-doc score in
+  * one kernel call ([[Sketches.dsirScore]]): hash each feature window,
+  * fold the dense log-ratio literal, return the count and the sum
+  * without materializing a bucket array column per row. */
+case class DsirScore(first: Expression, second: Expression,
+    third: Expression) extends TernaryExpression {
   override def dataType: DataType =
     org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n_features", LongType,
         nullable = false),
       org.apache.spark.sql.types.StructField("logw", DoubleType,
         nullable = false)))
-  override def prettyName: String = "dsir_score_unibi"
+  override def prettyName: String = "dsir_score"
 
   override def checkInputDataTypes():
       org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (StringType, ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dsir_score_unibi requires (STRING, ARRAY<DOUBLE>) arguments, " +
-            s"got ${l.catalogString} and ${r.catalogString}")
-    }
+    DsirKernelArgs.check(this, {
+      case ArrayType(DoubleType, _) => true
+      case _ => false
+    }, "ARRAY<DOUBLE>")
 
-  override protected def nullSafeEval(text: Any, lr: Any): Any =
-    Sketches.dsirScoreUniBi(text.asInstanceOf[UTF8String],
-      lr.asInstanceOf[ArrayData])
+  override protected def nullSafeEval(text: Any, lr: Any,
+      unigrams: Any): Any =
+    Sketches.dsirScore(text.asInstanceOf[UTF8String],
+      lr.asInstanceOf[ArrayData], unigrams.asInstanceOf[Boolean])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (t, l) =>
-      s"graft.functions.Sketches.dsirScoreUniBi($t, $l)")
+    defineCodeGen(ctx, ev, (t, l, u) =>
+      s"graft.functions.Sketches.dsirScore($t, $l, $u)")
 
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): DsirScoreUniBi =
-    copy(left = newLeft, right = newRight)
+  override protected def withNewChildrenInternal(f: Expression,
+      s: Expression, t: Expression): DsirScore = copy(f, s, t)
 }
 
 /** `bpe_segment(token STRING, merges ARRAY<STRING>) -> ARRAY<STRING>`
@@ -1421,74 +1291,4 @@ case class BpeSegment(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BpeSegment =
     copy(left = newLeft, right = newRight)
-}
-
-/** `ngram_buckets(text STRING, n INT, buckets INT) -> ARRAY<BIGINT>` —
-  * [[BigramBuckets]] generalized to n-token windows
-  * ([[Sketches.ngramBuckets]]; n = 1 emits the unigram feature stream
-  * of the paper-faithful DSIR feature space, n = 2 is bit-identical to
-  * `bigram_buckets`). */
-case class NgramBuckets(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "ngram_buckets"
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, IntegerType, IntegerType) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"ngram_buckets requires (STRING, INT, INT) arguments, got " +
-            s"${a.catalogString}, ${b.catalogString} and ${c.catalogString}")
-    }
-
-  override protected def nullSafeEval(text: Any, n: Any, buckets: Any): Any =
-    Sketches.ngramBuckets(text.asInstanceOf[UTF8String],
-      n.asInstanceOf[Number].intValue, buckets.asInstanceOf[Number].intValue)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n, b) =>
-      s"${ev.value} = graft.functions.Sketches.ngramBuckets($t, $n, $b);")
-
-  override protected def withNewChildrenInternal(f: Expression,
-      s: Expression, t: Expression): NgramBuckets = copy(f, s, t)
-}
-
-/** `dsir_score_n(text STRING, n INT, lr ARRAY<DOUBLE>) ->
-  * STRUCT<n_features BIGINT, logw DOUBLE>` — [[DsirScore]] generalized
-  * to n-token windows ([[Sketches.dsirScoreN]]; the unigram+bigram
-  * score is the n = 1 and n = 2 folds added, each left-to-right). */
-case class DsirScoreN(first: Expression, second: Expression,
-    third: Expression) extends TernaryExpression {
-  override def dataType: DataType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_features", LongType,
-        nullable = false),
-      org.apache.spark.sql.types.StructField("logw", DoubleType,
-        nullable = false)))
-  override def prettyName: String = "dsir_score_n"
-
-  override def checkInputDataTypes():
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (StringType, IntegerType, ArrayType(DoubleType, _)) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"dsir_score_n requires (STRING, INT, ARRAY<DOUBLE>) arguments, " +
-            s"got ${a.catalogString}, ${b.catalogString} and ${c.catalogString}")
-    }
-
-  override protected def nullSafeEval(text: Any, n: Any, lr: Any): Any =
-    Sketches.dsirScoreN(text.asInstanceOf[UTF8String],
-      n.asInstanceOf[Number].intValue, lr.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (t, n, l) =>
-      s"${ev.value} = graft.functions.Sketches.dsirScoreN($t, $n, $l);")
-
-  override protected def withNewChildrenInternal(f: Expression,
-      s: Expression, t: Expression): DsirScoreN = copy(f, s, t)
 }

@@ -17,13 +17,16 @@ import org.apache.spark.sql.functions._
  *
  * The math: features are word bigrams hashed into `buckets` buckets
  * (the engine-wide salted-md5 gate reduced mod B — reproducible on any
- * engine, any partitioning). This is a deliberate SIMPLIFICATION of
- * the paper's feature space — Xie et al. hash unigrams AND bigrams
- * into the bucket domain; this wing hashes bigrams only (same
- * estimator, same resampling, one fewer feature stream per doc), and
- * SURVEY.md names the deviation where it cites the paper. Both corpora fit an add-one-smoothed
- * multinomial over the bucket domain; a document's log importance
- * weight is
+ * engine, any partitioning). By default this is a deliberate
+ * SIMPLIFICATION of the paper's feature space — Xie et al. hash
+ * unigrams AND bigrams into the bucket domain; the default wing hashes
+ * bigrams only (same estimator, same resampling, one fewer feature
+ * stream per doc), and SURVEY.md names the deviation where it cites the
+ * paper. `includeUnigrams = true` (on [[bucketCounts]],
+ * [[importanceLogRatios]] and [[importanceWeights]]) restores the
+ * paper-faithful unigram ∪ bigram bag, unigrams first (p17e). Both
+ * corpora fit an add-one-smoothed multinomial over the bucket domain; a
+ * document's log importance weight is
  *
  *   log w(d) = Σ_{g ∈ bigrams(d)} [ ln p̂_target(b(g)) − ln p̂_raw(b(g)) ]
  *
@@ -60,7 +63,7 @@ object Dsir {
     * A doc with fewer than 2 tokens gets an empty array (Spark's
     * `sequence(1, 0)` infers a DESCENDING step and would emit [1, 0] —
     * the p16b guard). This is the REFERENCE form the codegen'd
-    * `bigram_buckets` kernel is pinned bit-identical to (DsirSpec);
+    * `dsir_buckets(…, false)` kernel is pinned bit-identical to (DsirSpec);
     * the operator paths below call the kernel — Catalyst evaluates
     * `transform` lambdas through the interpreted walker, outside
     * whole-stage codegen. */
@@ -76,24 +79,19 @@ object Dsir {
 
   /** (bucket, cnt) over a corpus — corpus-sized scan, bucket-bounded
     * output (≤ `buckets` rows after the aggregation), the per-row
-    * bigram hashing one codegen'd `bigram_buckets` kernel call
-    * (null text folds to the empty-doc path). With
-    * `includeUnigrams = true` the feature stream is the paper-faithful
-    * unigram ∪ bigram bag (Xie et al. hash both into one bucket
-    * domain) via the combined `unibigram_buckets` kernel — one
-    * tokenize per row for both window widths (spec-pinned equal to
-    * concatenating the two `ngram_buckets` streams) — still one
-    * corpus pass, still bucket-bounded. */
+    * feature hashing one codegen'd `dsir_buckets` kernel call (null
+    * text folds to the empty-doc path). With `includeUnigrams = true`
+    * the feature stream is the paper-faithful unigram ∪ bigram bag
+    * (Xie et al. hash both into one bucket domain) — the same kernel,
+    * one tokenize per row for both window widths, still one corpus
+    * pass, still bucket-bounded. */
   def bucketCounts(corpus: DataFrame, buckets: Int,
       includeUnigrams: Boolean = false): DataFrame = {
     require(buckets > 0, "buckets must be positive")
-    val t = coalesce(col("text"), lit(""))
-    val feats =
-      if (includeUnigrams)
-        call_function("unibigram_buckets", t, lit(buckets))
-      else call_function("bigram_buckets", t, lit(buckets))
     corpus
-      .select(explode(feats).as("bucket"))
+      .select(explode(call_function("dsir_buckets",
+        coalesce(col("text"), lit("")), lit(buckets),
+        lit(includeUnigrams))).as("bucket"))
       .groupBy("bucket").agg(count(lit(1)).as("cnt"))
   }
 
@@ -156,14 +154,21 @@ object Dsir {
     * where `logw` is the fold of `lr` over the doc's bigram buckets —
     * ONE corpus scan, zero shuffle, no join, one codegen'd `dsir_score`
     * kernel call per row (hash each bigram, fold the dense log-ratio
-    * LITERAL left-to-right — no per-row bucket array, and the literal
-    * rides the task binary, the span_cut probe discipline). The
-    * summation order matches the reference `aggregate` fold exactly
-    * (DsirSpec pins bit-equality); cross-engine agreement is the x14
-    * float envelope. A doc with no bigrams (or null text) scores 0,
-    * n_bigrams 0. */
+    * LITERAL left-to-right — no per-row bucket array column, and the
+    * literal rides the task binary, the span_cut probe discipline).
+    * The summation order matches the reference `aggregate` fold
+    * exactly (DsirSpec pins bit-equality); cross-engine agreement is
+    * the x14 float envelope. A doc with no bigrams (or null text)
+    * scores 0, n_bigrams 0.
+    *
+    * `includeUnigrams = true` scores the paper-faithful unigram ∪
+    * bigram space (fit `lr` with the same flag): the same one kernel
+    * call per row, logw = unigram fold + bigram fold (each
+    * left-to-right — the stated cross-engine order), output
+    * (idCol, n_features, logw) with n_features = unigrams + bigrams. */
   def importanceWeights(raw: DataFrame, lr: Array[Double],
-      idCol: String = "doc_id"): DataFrame = {
+      idCol: String = "doc_id",
+      includeUnigrams: Boolean = false): DataFrame = {
     require(lr.nonEmpty, "log-ratio table must be non-empty")
     // the chain defines __sc internally — an idCol named after it
     // would collide far from the cause (the p16 carryCols guard,
@@ -172,30 +177,11 @@ object Dsir {
       s"idCol $idCol collides with the scoring chain's own column")
     raw
       .select(col(idCol), call_function("dsir_score",
-        coalesce(col("text"), lit("")), typedLit(lr.toSeq)).as("__sc"))
+        coalesce(col("text"), lit("")), typedLit(lr.toSeq),
+        lit(includeUnigrams)).as("__sc"))
       .select(col(idCol),
-        col("__sc.n_bigrams").as("n_bigrams"),
-        col("__sc.logw").as("logw"))
-  }
-
-  /** [[importanceWeights]] over the paper-faithful unigram ∪ bigram
-    * feature space (fit the `lr` table with `includeUnigrams = true`):
-    * still ONE corpus scan, zero shuffle, no join — one combined
-    * `dsir_score_unibi` kernel fold per row (one tokenize for both
-    * window widths; arithmetic identical to summing the n = 1 and
-    * n = 2 `dsir_score_n` folds — the stated cross-engine order,
-    * spec-pinned). Output (idCol, n_features, logw) where
-    * n_features = unigram count + bigram count. */
-  def importanceWeightsUniBi(raw: DataFrame, lr: Array[Double],
-      idCol: String = "doc_id"): DataFrame = {
-    require(lr.nonEmpty, "log-ratio table must be non-empty")
-    require(idCol.toLowerCase(java.util.Locale.ROOT) != "__sc",
-      s"idCol $idCol collides with the scoring chain's own column")
-    raw
-      .select(col(idCol), call_function("dsir_score_unibi",
-        coalesce(col("text"), lit("")), typedLit(lr.toSeq)).as("__sc"))
-      .select(col(idCol),
-        col("__sc.n_features").as("n_features"),
+        col("__sc.n_features")
+          .as(if (includeUnigrams) "n_features" else "n_bigrams"),
         col("__sc.logw").as("logw"))
   }
 

@@ -287,8 +287,10 @@ object PipelineQueries {
     * (session, data dir): the first reader pays the signature pass,
     * the second re-reads the tiny landed table. */
   // CACHE CONTRACT: keys are (session, dir) and entries live until the
-  // cap; fixture dirs are immutable during a run (regenerating a dir
-  // mid-session would serve stale pairs). The cap bounds the map, not
+  // cap, or until `SessionTemp.cleanupNow()` removes the landed pair
+  // files (the next reader then rebuilds the entry); fixture dirs are
+  // immutable during a run (regenerating a dir mid-session would serve
+  // stale pairs). The cap bounds the map, not
   // the disk: on overflow the map restarts, but the evicted entries'
   // landed parquet dirs stay until SessionTemp removes them at JVM exit
   // (a frame handed out before the eviction may still be scanning its
@@ -299,7 +301,7 @@ object PipelineQueries {
   private def minhashPairsShared(s: SparkSession, dir: String): DataFrame =
     pairsCache.synchronized {
       if (pairsCache.size > 8) pairsCache.clear()
-      pairsCache.computeIfAbsent((s, dir), _ => {
+      graft.SessionTemp.live(pairsCache, (s, dir))(_.inputFiles.toSeq) {
         // persist the shingle table for the pair build only:
         // nearDupPairs lands the pair table in session-temp parquet,
         // after which the corpus-sized shingle blocks are dropped — the
@@ -310,7 +312,7 @@ object PipelineQueries {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try minhashPairs(s, dir, sh)
         finally sh.unpersist()
-      })
+      }
     }
 
   private val d3 = QueryDef(
@@ -3547,11 +3549,12 @@ object PipelineQueries {
   // bigrams into one bucket domain; the engine's default wing is
   // bigram-only (a stated simplification — SURVEY names it where it
   // cites the paper). This entry gates the full unigram ∪ bigram form
-  // so the fidelity option is proven, not prose: the fit explodes two
-  // concatenated ngram_buckets kernel streams in the SAME corpus scan
-  // (still bucket-bounded), and scoring is two dsir_score_n folds per
-  // row summed in-row (unigrams first — the stated cross-engine
-  // order) — still one scan, zero shuffle, no join.
+  // so the fidelity option is proven, not prose: the fit explodes the
+  // unigram-then-bigram dsir_buckets stream in the SAME corpus scan
+  // (still bucket-bounded), and scoring is one dsir_score call per row
+  // whose unigram and bigram folds are summed in-row (unigrams first —
+  // the stated cross-engine order) — still one scan, zero shuffle, no
+  // join.
   private val p17e = QueryDef(
     "p17e_dsir_unibigram",
     (s, dir) => {
@@ -3560,8 +3563,8 @@ object PipelineQueries {
         d.filter(col("source") === "src0"),
         d.filter(col("source") =!= "src0"), buckets = 4096,
         includeUnigrams = true)
-      graft.operators.Dsir.importanceWeightsUniBi(
-          d.filter(col("source") =!= "src0"), lr)
+      graft.operators.Dsir.importanceWeights(
+          d.filter(col("source") =!= "src0"), lr, includeUnigrams = true)
         .orderBy("doc_id")
     },
     Some(

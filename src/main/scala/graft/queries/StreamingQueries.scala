@@ -39,15 +39,6 @@ object StreamingQueries {
     // S5 bounded range: view/0 only replicates offsets >= 2
     offsetRanges = Seq(OffsetRange("view", 0, 2L, Some(1000000L))))
 
-  /** `cache(key)` while its directory exists, else `build` (stored):
-    * `SessionTemp.cleanupNow()` may have removed a dir handed out by an
-    * earlier run. */
-  private def liveDir[K](cache: java.util.concurrent.ConcurrentHashMap[K, String],
-      key: K)(build: => String): String =
-    cache.compute(key, (_, d) =>
-      if (d != null && java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d))) d
-      else build)
-
   /** The replicated sink by event id: the one read-back of k2 and its
     * dynamic-source variants (the event id travels in header 0). */
   private def replicatedByEventId(s: org.apache.spark.sql.SparkSession,
@@ -71,7 +62,7 @@ object StreamingQueries {
     "k2_replication_pipeline",
     (s, dir) => {
       val base = graft.SessionTemp.dir("graft_k2_")
-      val srcDir = liveDir(k2SrcCache, (s, dir)) {
+      val srcDir = graft.SessionTemp.live(k2SrcCache, (s, dir))(Seq(_)) {
         val d = graft.SessionTemp.dir("graft_k2_src_")
         Records.recordsFromEvents(Records.table(s, dir, "events"))
           .write.mode("overwrite").parquet(d)
@@ -120,7 +111,7 @@ object StreamingQueries {
   private def s2Root(s: org.apache.spark.sql.SparkSession,
       dir: String): String = {
     import graft.sources.FileTopicLog
-    liveDir(s2SrcCache, (s, dir)) {
+    graft.SessionTemp.live(s2SrcCache, (s, dir))(Seq(_)) {
         val d = graft.SessionTemp.dir("graft_s2_log_")
         val recs = logRecords(s, dir)
         recs.repartition(col("topic"), col("partition"))
@@ -188,7 +179,7 @@ object StreamingQueries {
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
   private def s2Scenario(s: org.apache.spark.sql.SparkSession,
       dir: String): String =
-    liveDir(s2ScenarioCache, (s, dir)) {
+    graft.SessionTemp.live(s2ScenarioCache, (s, dir))(Seq(_)) {
       import graft.sources.FileTopicLog
       import org.apache.spark.sql.expressions.Window
       val root = graft.SessionTemp.dir("graft_s2life_log_")

@@ -115,10 +115,9 @@ object IncrementalDsir {
       buckets: Int = 4096, idCol: String = "doc_id",
       includeUnigrams: Boolean = false): DataFrame = {
     val lr = logRatios(s, workDir, target, buckets, includeUnigrams)
-    val scored =
-      if (includeUnigrams) Dsir.importanceWeightsUniBi(pool, lr, idCol)
-      else Dsir.importanceWeights(pool, lr, idCol)
-    Dsir.gumbelResample(scored.select(col(idCol), col("logw")),
+    Dsir.gumbelResample(
+      Dsir.importanceWeights(pool, lr, idCol, includeUnigrams)
+        .select(col(idCol), col("logw")),
       k, idCol = idCol)
   }
 
@@ -202,11 +201,10 @@ object IncrementalDsir {
     * (idCol, logw, g, epoch_fp), ≤ k rows. */
   private def scoredPartial(pool: DataFrame, lr: Array[Double], k: Int,
       includeUnigrams: Boolean, idCol: String = "doc_id"): DataFrame = {
-    val scored =
-      if (includeUnigrams) Dsir.importanceWeightsUniBi(pool, lr, idCol)
-      else Dsir.importanceWeights(pool, lr, idCol)
-    Dsir.gumbelResample(scored.select(col(idCol), col("logw")), k,
-        idCol = idCol)
+    Dsir.gumbelResample(
+        Dsir.importanceWeights(pool, lr, idCol, includeUnigrams)
+          .select(col(idCol), col("logw")),
+        k, idCol = idCol)
       .withColumn("epoch_fp", lit(lrFp(lr)))
   }
 

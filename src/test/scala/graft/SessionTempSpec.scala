@@ -31,7 +31,8 @@ class SessionTempSpec extends AnyFunSuite {
     def rows(name: String): Seq[String] =
       queries.Catalog.byName(name).fn(spark, SparkTestSession.sfDir)
         .collect().map(_.toString).toSeq
-    val entries = Seq("k2_replication_pipeline", "d12_stream_incremental_dedup")
+    val entries = Seq("k2_replication_pipeline", "d12_stream_incremental_dedup",
+      "d3_minhash_lsh", "d6_dedup_keeplist")
     val before = entries.map(rows)
     val root = SessionTemp.rootOption.get
     SessionTemp.cleanupNow()

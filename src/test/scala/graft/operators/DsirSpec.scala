@@ -3,7 +3,7 @@ package graft.operators
 import java.security.MessageDigest
 
 import graft.SparkTestSession
-import org.apache.spark.sql.functions.{call_function, col, concat, lit, typedLit}
+import org.apache.spark.sql.functions.{call_function, col, lit, typedLit}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** DSIR (p17/p17b) against a plain-Scala reference: the hashed-bigram
@@ -138,11 +138,12 @@ class DsirSpec extends AnyFunSuite {
 
   // ---- the paper-faithful unigram ∪ bigram feature space (p17e) ----
 
-  private def refFeats(text: String): Seq[Long] = {
-    val ts = text.split(' ').filter(_.nonEmpty)
-    // unigrams first, then bigrams — the stated cross-engine order
-    ts.map(t => h60(t) % B).toSeq ++ refBuckets(text)
-  }
+  private def refUnigrams(text: String): Seq[Long] =
+    text.split(' ').filter(_.nonEmpty).map(t => h60(t) % B).toSeq
+
+  // unigrams first, then bigrams — the stated cross-engine order
+  private def refFeats(text: String): Seq[Long] =
+    refUnigrams(text) ++ refBuckets(text)
 
   private def refLogRatiosUniBi(target: Seq[String],
       raw: Seq[String]): Array[Double] = {
@@ -159,47 +160,52 @@ class DsirSpec extends AnyFunSuite {
     }
   }
 
-  test("ngram_buckets generalizes bigram_buckets: n=2 bit-identical, n=1 is the unigram stream") {
-    val df = fuzzDocs(20, 40).toDF("doc_id", "text")
-    val both = df.select(col("doc_id"),
-        call_function("bigram_buckets", col("text"), lit(B)).as("bi"),
-        call_function("ngram_buckets", col("text"), lit(2), lit(B)).as("n2"),
-        call_function("ngram_buckets", col("text"), lit(1), lit(B)).as("n1"))
-      .collect()
-    both.foreach { r =>
-      assert(r.getSeq[Long](1) == r.getSeq[Long](2),
-        s"doc ${r.getLong(0)}: ngram_buckets(2) != bigram_buckets")
+  test("dsir_buckets == the plain-Scala feature streams, element for element") {
+    val docsSeq = fuzzDocs(20, 40)
+    val got = docsSeq.toDF("doc_id", "text").select(col("doc_id"),
+        call_function("dsir_buckets", col("text"), lit(B), lit(false)).as("bi"),
+        call_function("dsir_buckets", col("text"), lit(B), lit(true)).as("ub"))
+      .collect().map(r => r.getLong(0) -> (r.getSeq[Long](1), r.getSeq[Long](2)))
+      .toMap
+    assert(got.size == docsSeq.size)
+    docsSeq.foreach { case (id, text) =>
+      val (bi, ub) = got(id)
+      assert(bi == refBuckets(text), s"doc $id: bigram stream diverges")
+      // unigrams first, then bigrams — the stated cross-engine order
+      assert(ub == refFeats(text), s"doc $id: unigram+bigram stream diverges")
+      assert(ub.take(refUnigrams(text).size) == refUnigrams(text),
+        s"doc $id: unigram stream diverges")
     }
-    val want = fuzzDocs(20, 40).toMap
-    both.foreach { r =>
-      val ts = want(r.getLong(0)).split(' ').filter(_.nonEmpty)
-      assert(r.getSeq[Long](3) == ts.map(t => h60(t) % B).toSeq,
-        s"doc ${r.getLong(0)}: unigram stream diverges")
-    }
+    // an empty bucket domain has no features, in either space
+    val none = Seq((1L, "a b c")).toDF("doc_id", "text").select(
+        call_function("dsir_buckets", col("text"), lit(0), lit(true)),
+        call_function("dsir_score", col("text"),
+          typedLit(Seq.empty[Double]), lit(true)))
+      .head()
+    assert(none.getSeq[Long](0).isEmpty)
+    assert(none.getStruct(1).getLong(0) == 0L &&
+      none.getStruct(1).getDouble(1) == 0.0)
   }
 
-  test("combined unibigram kernels ≡ the two-call ngram forms, bit-exact") {
-    val df = fuzzDocs(23, 40).toDF("doc_id", "text")
-    val lrLit = typedLit(Seq.tabulate(B)(i => (i % 7) * 0.25 - 0.5))
-    val rows = df.select(col("doc_id"),
-        call_function("unibigram_buckets", col("text"), lit(B)).as("ub"),
-        concat(call_function("ngram_buckets", col("text"), lit(1), lit(B)),
-          call_function("ngram_buckets", col("text"), lit(2), lit(B)))
-          .as("two"),
-        call_function("dsir_score_unibi", col("text"), lrLit).as("s"),
-        call_function("dsir_score_n", col("text"), lit(1), lrLit).as("s1"),
-        call_function("dsir_score_n", col("text"), lit(2), lrLit).as("s2"))
-      .collect()
-    rows.foreach { r =>
-      assert(r.getSeq[Long](1) == r.getSeq[Long](2),
-        s"doc ${r.getLong(0)}: combined bucket stream diverges")
-      val s = r.getStruct(3)
-      val s1 = r.getStruct(4)
-      val s2 = r.getStruct(5)
-      assert(s.getLong(0) == s1.getLong(0) + s2.getLong(0),
-        s"doc ${r.getLong(0)}: n_features")
-      assert(s.getDouble(1) == s1.getDouble(1) + s2.getDouble(1),
-        s"doc ${r.getLong(0)}: combined fold != sum of folds (bit-exact)")
+  test("dsir_score == the plain-Scala unigram + bigram folds, bit-exact") {
+    val docsSeq = fuzzDocs(23, 40)
+    val lr = Array.tabulate(B)(i => (i % 7) * 0.25 - 0.5)
+    val lrLit = typedLit(lr.toSeq)
+    val got = docsSeq.toDF("doc_id", "text").select(col("doc_id"),
+        call_function("dsir_score", col("text"), lrLit, lit(true)).as("s"),
+        call_function("dsir_score", col("text"), lrLit, lit(false)).as("s2"))
+      .collect().map(r => r.getLong(0) -> (r.getStruct(1), r.getStruct(2)))
+      .toMap
+    def fold(bs: Seq[Long]): Double =
+      bs.foldLeft(0.0)((acc, b) => acc + lr(b.toInt))
+    docsSeq.foreach { case (id, text) =>
+      val (s, s2) = got(id)
+      assert(s.getLong(0) == refFeats(text).size, s"doc $id: n_features")
+      assert(s.getDouble(1) == fold(refUnigrams(text)) + fold(refBuckets(text)),
+        s"doc $id: unigram+bigram score != uni fold + bi fold (bit-exact)")
+      assert(s2.getLong(0) == refBuckets(text).size, s"doc $id: n_bigrams")
+      assert(s2.getDouble(1) == fold(refBuckets(text)),
+        s"doc $id: bigram score != bi fold (bit-exact)")
     }
   }
 
@@ -213,15 +219,15 @@ class DsirSpec extends AnyFunSuite {
       lr.zip(want).zipWithIndex.foreach { case ((g, w), b) =>
         assert(math.abs(g - w) <= 1e-12, s"seed $seed bucket $b: $g vs $w")
       }
-      val got = Dsir.importanceWeightsUniBi(r.toDF("doc_id", "text"), lr)
+      val got = Dsir.importanceWeights(r.toDF("doc_id", "text"), lr,
+          includeUnigrams = true)
         .collect().map(x => x.getLong(0) -> (x.getLong(1), x.getDouble(2)))
         .toMap
       r.foreach { case (id, text) =>
         val fs = refFeats(text)
         assert(got(id)._1 == fs.size, s"seed $seed doc $id n_features")
         // reference sums unigram fold then bigram fold, like the rows
-        val uni = fs.take(text.split(' ').count(_.nonEmpty))
-          .foldLeft(0.0)((a, b) => a + lr(b.toInt))
+        val uni = refUnigrams(text).foldLeft(0.0)((a, b) => a + lr(b.toInt))
         val bi = refWeight(text, lr)
         assert(math.abs(got(id)._2 - (uni + bi)) <= 1e-12,
           s"seed $seed doc $id logw")
@@ -268,30 +274,39 @@ class DsirSpec extends AnyFunSuite {
   }
 
   test("kernel type contracts surface at ANALYSIS time, not in a task") {
-    val d = Seq((1L, "a b c")).toDF("doc_id", "text")
-    // bigram_buckets with a string buckets argument
-    val e1 = intercept[org.apache.spark.sql.AnalysisException] {
-      d.select(call_function("bigram_buckets", col("text"), lit("7")))
-        .collect()
+    val d = Seq((1L, "a b c", true)).toDF("doc_id", "text", "flag")
+    val lr8 = typedLit(Seq.fill(8)(0.0))
+    def rejected(name: String, c: org.apache.spark.sql.Column): Unit = {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        d.select(c).collect()
+      }
+      assert(e.getMessage.contains(name), e.getMessage)
     }
-    assert(e1.getMessage.contains("bigram_buckets"), e1.getMessage)
-    // bigram_buckets with a BIGINT buckets argument (the silent
+    // dsir_buckets with a string buckets argument
+    rejected("dsir_buckets",
+      call_function("dsir_buckets", col("text"), lit("7"), lit(false)))
+    // dsir_buckets with a BIGINT buckets argument (the silent
     // codegen-fallback hazard the advice named)
-    val e2 = intercept[org.apache.spark.sql.AnalysisException] {
-      d.select(call_function("bigram_buckets", col("text"), lit(7L)))
-        .collect()
-    }
-    assert(e2.getMessage.contains("bigram_buckets"), e2.getMessage)
+    rejected("dsir_buckets",
+      call_function("dsir_buckets", col("text"), lit(7L), lit(true)))
     // dsir_score with a float lr array
-    val e3 = intercept[org.apache.spark.sql.AnalysisException] {
-      d.select(call_function("dsir_score", col("text"),
-        typedLit(Seq(1.0f, 2.0f)))).collect()
+    rejected("dsir_score", call_function("dsir_score", col("text"),
+      typedLit(Seq(1.0f, 2.0f)), lit(false)))
+    // unigrams must be a BOOLEAN literal: not a string, not a column
+    rejected("dsir_buckets",
+      call_function("dsir_buckets", col("text"), lit(8), lit("true")))
+    rejected("dsir_score",
+      call_function("dsir_score", col("text"), lr8, lit(1)))
+    rejected("dsir_buckets",
+      call_function("dsir_buckets", col("text"), lit(8), col("flag")))
+    rejected("dsir_score",
+      call_function("dsir_score", col("text"), lr8, col("flag")))
+    // the blessed signatures still analyze and run, in both spaces
+    for (u <- Seq(false, true)) {
+      assert(d.select(call_function("dsir_buckets", col("text"), lit(8),
+        lit(u))).count() == 1L)
+      assert(d.select(call_function("dsir_score", col("text"), lr8,
+        lit(u))).count() == 1L)
     }
-    assert(e3.getMessage.contains("dsir_score"), e3.getMessage)
-    // the blessed signatures still analyze and run
-    assert(d.select(call_function("bigram_buckets", col("text"), lit(8)))
-      .count() == 1L)
-    assert(d.select(call_function("dsir_score", col("text"),
-      typedLit(Seq.fill(8)(0.0)))).count() == 1L)
   }
 }

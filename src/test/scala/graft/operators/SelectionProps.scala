@@ -12,6 +12,12 @@ import org.scalacheck.Prop.forAll
   * everything, and exact-boundary budgets. */
 object SelectionProps extends Properties("Selection") {
   private lazy val spark = SparkTestSession.spark
+
+  // every case runs real Spark jobs — one of the suite's heaviest
+  // Props (build.sbt's graftSuiteSeconds), so 30 cases, not 100
+  override def overrideParameters(
+      p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(30)
   import spark.implicits._
 
   private val corpusGen = for {

@@ -10,6 +10,12 @@ import org.scalacheck.Prop.forAll
   * double matches) checked mechanically across signs and widths. */
 object BandJoinRewriteProps extends Properties("BandJoinRewrite") {
   private lazy val spark = SparkTestSession.spark
+
+  // every case runs real Spark jobs — one of the suite's heaviest
+  // Props (build.sbt's graftSuiteSeconds), so 30 cases, not 100
+  override def overrideParameters(
+      p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(30)
   import spark.implicits._
 
   private val table = Gen.listOfN(40, Gen.choose(-2000L, 2000L))

@@ -16,6 +16,12 @@ import org.scalacheck.Prop.forAll
   * enough that the top-10 cut frequently lands inside a tie run. */
 object Bm25Props extends Properties("Bm25") {
   private lazy val spark = SparkTestSession.spark
+
+  // every case runs real Spark jobs — one of the suite's heaviest
+  // Props (build.sbt's graftSuiteSeconds), so 30 cases, not 100
+  override def overrideParameters(
+      p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(30)
   import org.apache.spark.sql.functions._
 
   private val queryTerms: Seq[(Long, String)] = Seq(

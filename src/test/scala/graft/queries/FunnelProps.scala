@@ -14,6 +14,12 @@ import org.scalacheck.Prop.forAll
   * c/v/p events at all (must still count as active). */
 object FunnelProps extends Properties("Funnel") {
   private lazy val spark = SparkTestSession.spark
+
+  // every case runs real Spark jobs — one of the suite's heaviest
+  // Props (build.sbt's graftSuiteSeconds), so 30 cases, not 100
+  override def overrideParameters(
+      p: org.scalacheck.Test.Parameters): org.scalacheck.Test.Parameters =
+    p.withMinSuccessfulTests(30)
   import spark.implicits._
   import org.apache.spark.sql.functions._
 

@@ -24,6 +24,13 @@ class PlanShapeSpec extends AnyFunSuite {
     if (cut >= 0) p.substring(0, cut) else p
   }
 
+  /** The final-plan lines that call `kernel` inside a whole-stage
+    * codegen stage (the `*(n)` operator prefix) — an interpreted
+    * fallback would show the call without the prefix. */
+  private def codegenCalls(plan: String, kernel: String): Seq[String] =
+    plan.linesIterator
+      .filter(l => l.contains(s"$kernel(") && l.contains("*(")).toSeq
+
   /** Executed plans of every query d3 runs while it is built and
     * collected, in a fresh session so its session-keyed pair cache
     * starts cold. d3 lands its LSH pair table in a write of its own,
@@ -776,8 +783,8 @@ class PlanShapeSpec extends AnyFunSuite {
       s"scoring must be a per-row fold against a literal, not a join:\n$plan")
     assert(!plan.contains("HashAggregate"),
       s"scoring must not re-aggregate the corpus (fold is in-row):\n$plan")
-    assert(plan.contains("dsir_score"),
-      s"codegen'd scoring kernel missing (interpreted HOF fallback?):\n$plan")
+    assert(codegenCalls(plan, "dsir_score").exists(_.contains(", false)")),
+      s"codegen'd bigram scoring kernel missing (interpreted HOF fallback?):\n$plan")
   }
 
   test("p17e: unigram+bigram scoring keeps p17's shape — join-free, one combined in-row kernel fold") {
@@ -786,8 +793,8 @@ class PlanShapeSpec extends AnyFunSuite {
       s"scoring must be per-row folds against a literal, not a join:\n$plan")
     assert(!plan.contains("HashAggregate"),
       s"scoring must not re-aggregate the corpus:\n$plan")
-    assert(plan.contains("dsir_score_unibi"),
-      s"combined scoring kernel missing (one tokenize per row):\n$plan")
+    assert(codegenCalls(plan, "dsir_score").exists(_.contains(", true)")),
+      s"codegen'd unigram+bigram scoring kernel missing (one call per row):\n$plan")
   }
 
   test("p17b: Gumbel resample is a partial top-k, join-free") {

@@ -38,12 +38,17 @@ class GraftControllerSpec extends AnyFunSuite {
     records(Seq("click", "view")).write.parquet(s"$base/src")
     val view = Seq(("w1", "click", 0, "ONLINE"), ("w1", "click", 1, "ONLINE"))
       .toDF("instance", "topic", "partition", "state")
+    // the destination shows `view` only once the click-only drain is
+    // checked: the 1-s whitelister would otherwise add it to route-a
+    // (and restart the route) while the drain is still running
+    @volatile var dstHasView = false
     val ctrl = new GraftController(
       spark,
       srcObserver = TopicCatalogObserver.fromRecords(() =>
         spark.read.parquet(s"$base/src")),
       dstObserver = new TopicCatalogObserver(() =>
-        Seq(("click", 2), ("view", 2)).toDF("topic", "num_partitions")),
+        (Seq(("click", 2)) ++ (if (dstHasView) Seq(("view", 2)) else Nil))
+          .toDF("topic", "num_partitions")),
       idealView = () => view,
       externalView = () => view,
       backupDir = s"$base/backup")
@@ -71,6 +76,7 @@ class GraftControllerSpec extends AnyFunSuite {
       val routeError = ctrl.manager.query("route-a").flatMap(_.exception)
       assert(routeError.isEmpty, s"route-a failed: $routeError")
       assert(spark.read.parquet(s"$base/out").count() == 10) // click only
+      dstHasView = true
 
       // REST mutation flows into the manager's spec (CAS path)
       val (sc, _) = call("POST", s"$baseUrl/topics?pipeline=route-a&topic=extra")

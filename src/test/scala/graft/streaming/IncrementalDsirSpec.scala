@@ -338,7 +338,8 @@ class IncrementalDsirSpec extends AnyFunSuite {
         target, pool, k = 8, buckets = Buckets, includeUnigrams = true)
       .collect().map(_.toSeq).toSeq
     val viaBatch = graft.operators.Dsir.gumbelResample(
-        graft.operators.Dsir.importanceWeightsUniBi(pool, batchLr)
+        graft.operators.Dsir.importanceWeights(pool, batchLr,
+            includeUnigrams = true)
           .select(col("doc_id"), col("logw")), k = 8)
       .collect().map(_.toSeq).toSeq
     assert(viaStream === viaBatch, "unigram streaming resample != batch")
