@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
 
 import graft.operators.{Bpe, Clustering, Dedup, Dsir, LanguageModel, Packing,
   Selection, Similarity, TextAnalysis}
-import graft.sources.{FileTopicLog, Records}
+import graft.sources.{DynamicTopicLogStream, FileTopicLog, Records, TopicLogOffset}
 import graft.streaming.{IncrementalDsir, IncrementalSpanCensus}
 
 /** Scale curves for the library's operators and streaming modules: one
@@ -57,7 +57,8 @@ import graft.streaming.{IncrementalDsir, IncrementalSpanCensus}
   * span-emit  <docs> [deltaRows=5000] [mainSlices=4]      docs delta_rows emit_bounded_sec
   *                                                        emit_accumulated_sec
   * topic      [iters=40] [--stream]                       metric=topiclog_metadata_walk tp_ratio
-  *                                                        tps_<n>{…} wide_256{…} iters;
+  *                                                        tps_<n>{…cut_walk_ms commit_return_ms…}
+  *                                                        wide_256{…} iters;
   *                                                        metric=topiclog_stream_drain_1000tp …
   * floor      <sfDir>                                     metric=lifecycle_floor fresh_sec
   *                                                        resume_nodata_sec resume_1file_sec
@@ -695,7 +696,10 @@ object ScaleBench {
     * `allhot_*` (every topic appends between walks; exact vs TTL
     * listing), `cut_walk` (a real truncating retention walk retiring
     * one record per TP, one [[FileTopicLog.truncateTopic]] per topic),
-    * and the retention cut computation over every partition (one group
+    * `commit_return` (how long a `truncateOnCommit`
+    * [[DynamicTopicLogStream.commit]] that triggers that walk takes to
+    * return to its caller), and the retention cut computation over
+    * every partition (one group
     * snapshot vs per-partition re-reads). Pure filesystem — no Spark.
     * `--stream` then drains 1000 TPs through the real streaming
     * source. */
@@ -757,6 +761,32 @@ object ScaleBench {
       }
       require(FileTopicLog.startOffset(root, topics.last, parts - 1) == iters + 2,
         "every walk must retire one record per TP")
+      // what the same walk costs the caller of a truncating source's
+      // commit (Spark's walCommit): each commit retires one more record
+      // per TP, and the next commit waits, off the clock, for the cut
+      val commitReturn = {
+        topics.foreach(t => (0 until parts).foreach(p =>
+          FileTopicLog.append(root, t, p, (0 until iters + 2).map(topicRec))))
+        val stream = new DynamicTopicLogStream(root, None,
+          truncateOnCommit = true)
+        var at = (iters + 2).toLong
+        var sec = 0.0
+        try (0 until iters + 2).foreach { i =>
+          at += 1
+          val pos = TopicLogOffset(
+            topics.map(t => t -> (0 until parts).map(p => p -> at).toMap).toMap)
+          val took = timed(stream.commit(pos))._2
+          if (i >= 2) sec += took // the first two warm
+          val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+          while (topics.exists(t => (0 until parts).exists(p =>
+              FileTopicLog.startOffset(root, t, p) < at))) {
+            require(System.nanoTime() < deadline,
+              s"the cleaner did not reach the committed cut $at")
+            Thread.sleep(1)
+          }
+        } finally stream.stop()
+        sec * 1e3 / iters
+      }
       Seq("g1", "g2", "g3").foreach { g =>
         FileTopicLog.registerGroup(root, g)
         FileTopicLog.commitGroup(root, g,
@@ -772,7 +802,7 @@ object ScaleBench {
           FileTopicLog.retentionCut(root, t, p, 1L): Unit))
       }
       (nTopics * parts,
-        f""""$label":{"uncached_ms":$uncached%.3f,"steady_ms":$steady%.3f,"dirty1_ms":$dirty%.3f,"allhot_exact_ms":$hotExact%.3f,"allhot_ttl_ms":$hotTtl%.3f,"cut_walk_ms":$cutWalk%.3f,"cut_snapshot_ms":$cutSnap%.3f,"cut_perpart_ms":$cutPer%.3f}""")
+        f""""$label":{"uncached_ms":$uncached%.3f,"steady_ms":$steady%.3f,"dirty1_ms":$dirty%.3f,"allhot_exact_ms":$hotExact%.3f,"allhot_ttl_ms":$hotTtl%.3f,"cut_walk_ms":$cutWalk%.3f,"commit_return_ms":$commitReturn%.3f,"cut_snapshot_ms":$cutSnap%.3f,"cut_perpart_ms":$cutPer%.3f}""")
     }
     val ratio = out(2)._1.toDouble / out.head._1
     println(f"""{"metric":"topiclog_metadata_walk","unit":"ms_per_walk","tp_ratio":$ratio%.0f,${out.map(_._2).mkString(",")},"iters":$iters}""")

@@ -756,8 +756,7 @@ object PipelineQueries {
     (s, dir) => {
       val e = emb(s, dir).select(col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
-      val idx = sys.env.get("GRAFT_SIM5_INDEX_DIR").getOrElse(
-        graft.SessionTemp.dir("graft_sim5_idx_"))
+      val idx = graft.SessionTemp.dir("graft_sim5_idx_")
       val fp = graft.operators.Retrieval.pathFingerprint(
         s"$dir/embeddings.parquet")
       graft.operators.Similarity.ensureIvfIndex(e, idx, fp, nCells = 8)
@@ -2951,19 +2950,10 @@ object PipelineQueries {
   private val x15b = QueryDef(
     "x15b_bm25_indexed",
     (s, dir) => {
-      // GRAFT_X15B_INDEX_DIR pins the index location so later query
-      // sets REUSE it (the actual amortization surface — and how the
-      // probe-only steady state is measured); unset, each call builds
-      // into its own session-temp dir. Reuse is guarded by the
-      // fingerprinted `_built` marker (Retrieval.ensureIndex): a
-      // regenerated/switched fixture changes the documents.parquet
-      // fingerprint and forces a rebuild instead of silently serving
-      // top-k from the stale corpus; a half-written index (crash
-      // mid-build) has no marker and rebuilds. nBuckets is
-      // corpus-scaled (Retrieval.adaptiveBuckets) so bucket files stay
-      // near fixed size as the corpus grows.
-      val idx = sys.env.get("GRAFT_X15B_INDEX_DIR").getOrElse(
-        graft.SessionTemp.dir("graft_x15b_idx_"))
+      // each call builds a fresh index in its own session-temp dir;
+      // nBuckets is corpus-scaled (Retrieval.adaptiveBuckets) so bucket
+      // files stay near fixed size as the corpus grows.
+      val idx = graft.SessionTemp.dir("graft_x15b_idx_")
       val fp = graft.operators.Retrieval.pathFingerprint(
         s"$dir/documents.parquet")
       graft.operators.Retrieval.ensureIndex(docs(s, dir), idx, fp)

@@ -1109,10 +1109,11 @@ object StreamingQueries {
   }
 
   /** Poll (25 ms ticks, 30 s bound) until every TP's log base reached its
-    * `floor` count. The cut runs at a batch's source commit, which fires
-    * on the trigger tick AFTER the batch completes, so it can lag the
-    * data by a tick or two; Spark re-runs the cleanup every trigger, so
-    * the cut self-heals within ~one tick. Polling bounded instead of
+    * `floor` count. A batch's source commit fires on the trigger tick
+    * AFTER the batch completes and hands the cut to the stream's cleaner
+    * thread, which runs it behind that trigger; a cut that raced a
+    * group's position publish is re-run by the next idle trigger. So the
+    * base lags the data by a tick or two. Polling bounded instead of
     * asserting against the scheduler's clock (the flake showed up only
     * inside the 139-query driver session under load). The caller
     * asserts the bases afterwards. */

@@ -299,8 +299,8 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
       t -> (startPos.getOrElse(t, Map.empty[Int, Long]) ++
         advanced.getOrElse(t, Map.empty[Int, Long]))
     }.toMap)
-    // IDLE-TICK RETENTION HEAL (Kafka's log-cleaner analog). The cut
-    // normally runs at commit time, but commit fires only after a DATA
+    // IDLE-TICK RETENTION HEAL. The cut normally runs on the cleaner
+    // thread after each commit, but commit fires only after a DATA
     // batch — and this query's final commit can race another group's
     // position publish by a tick, computing the min against a stale
     // (lower) position. With no further data there is no further
@@ -310,10 +310,13 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
     // r14). When a tick plans NO new rows, re-run the cut from the
     // last durably-committed position (never beyond it) against the
     // CURRENT group snapshot: self-healing within one trigger, data
-    // batches unaffected (active streams stay commit-driven).
+    // batches unaffected (active streams stay commit-driven). The heal
+    // runs synchronously, not on the cleaner: `processAllAvailable`
+    // returns after an idle tick's `latestOffset`, so callers that read
+    // the base right after it see the healed cut.
     if (truncateOnCommit && next.positions == startPos)
       lastCommitted.foreach { pos =>
-        try publishAndCut(pos, publish = false)
+        try cut(pos, heal = true)
         catch {
           case t: Throwable if scala.util.control.NonFatal(t) =>
             System.err.println(
@@ -367,6 +370,59 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
   override def createReaderFactory(): PartitionReaderFactory =
     new TopicLogReaderFactory
 
+  /** A position known DURABLY PROCESSED by this query — the idle-tick
+    * cleaner's input (never cut beyond it). Fed from two signals, both
+    * safe and monotone: `commit(end)` (Spark's own source-commit, which
+    * fires only when a SUCCESSOR batch runs), and `planInputPartitions`'
+    * `start` — when batch N is scheduled, batch N−1's sink commit is
+    * already durable (the engine is sequential: commits/N−1 precedes
+    * offsets/N), so N's start positions are cut-safe one batch EARLIER
+    * than commit() reports them. */
+  @volatile private var lastCommitted: Option[Map[String, Map[Int, Long]]] = None
+
+  /** (positions, group snapshot) of the last completed idle-tick heal.
+    * The heal exists to close ONE stale-min race after traffic stops;
+    * once it has run against a given (position, snapshot) pair the cut
+    * is a fixed point, so a fast continuous trigger on an idle stream
+    * must not re-run the per-TP truncation scans every tick — only
+    * when a group (re)commits or the committed position moves. */
+  @volatile private var lastIdleHeal:
+    Option[(Map[String, Map[Int, Long]], Seq[Map[String, Map[Int, Long]]])] =
+    None
+
+  /** One retention pass: cut every TP of `pos` to its safe cut, one
+    * [[FileTopicLog.truncateTopic]] walk per topic. One group snapshot
+    * per pass, not per partition — the min over a stale-by-milliseconds
+    * snapshot is only ever lower (more conservative), and per-partition
+    * re-reads would re-list `_groups` + re-parse every group file
+    * thousands of times at reference-scale assignments. The snapshot
+    * AND the cuts run under the group lock, serializing with
+    * registerGroup: "from registration the group blocks retention"
+    * holds exactly — no window where a just-registered group is
+    * invisible to an in-flight cut. Not cheap to hold: on a 4-core VM
+    * the walk takes 127–137 ms at 288 TPs and ~600 ms at 1000 TPs
+    * (`ScaleBench topic` `cut_walk_ms`), which is why a data commit
+    * hands the pass to the [[RetentionCleaner]] instead of running it
+    * on Spark's thread. `heal` marks the idle-tick pass, memoized on
+    * (position, snapshot) through `lastIdleHeal`. */
+  private def cut(pos: Map[String, Map[Int, Long]], heal: Boolean): Unit =
+    FileTopicLog.withGroupsLock(root) {
+      val snap = FileTopicLog.groupSnapshot(root)
+      if (!heal || !lastIdleHeal.contains((pos, snap))) {
+        pos.foreach { case (t, ps) =>
+          FileTopicLog.truncateTopic(root, t, ps.map { case (p, off) =>
+            p -> FileTopicLog.retentionCut(snap, root, t, p, off)
+          })
+        }
+        // a data commit moves positions; force the next idle tick to
+        // heal once against the fresh state, then settle.
+        lastIdleHeal = if (heal) Some((pos, snap)) else None
+      }
+    }
+
+  private val cleaner = new RetentionCleaner[Map[String, Map[Int, Long]]](
+    s"graft-topiclog-cleaner $root", cut(_, heal = false))
+
   /** Retention hook (`.option("truncateOnCommit", "true")`): once Spark
     * has durably committed a batch, records below the SAFE cut are
     * retired from the log — Kafka's `delete` cleanup driven by consumer
@@ -378,74 +434,99 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
     * query can never delete records a slower registered group has not
     * read. With no groups registered the cut is this query's own
     * position (single-consumer retention). A query that sets `groupId`
-    * also publishes its own positions here on every commit. */
-  /** A position known DURABLY PROCESSED by this query — the idle-tick
-    * cleaner's input (never cut beyond it). Fed from two signals, both
-    * safe and monotone: `commit(end)` (Spark's own source-commit, which
-    * fires only when a SUCCESSOR batch runs), and `planInputPartitions`'
-    * `start` — when batch N is scheduled, batch N−1's sink commit is
-    * already durable (the engine is sequential: commits/N−1 precedes
-    * offsets/N), so N's start positions are cut-safe one batch EARLIER
-    * than commit() reports them. */
-  @volatile private var lastCommitted: Option[Map[String, Map[Int, Long]]] = None
-
-  /** One group snapshot per pass, not per partition — the min over a
-    * stale-by-milliseconds snapshot is only ever lower (more
-    * conservative), and per-partition re-reads would re-list `_groups`
-    * + re-parse every group file thousands of times at reference-scale
-    * assignments. Publish AND cuts run under the group lock,
-    * serializing with registerGroup: "from registration the group
-    * blocks retention" holds exactly — no window where a
-    * just-registered group is invisible to an in-flight cut. Cheap to
-    * hold: ~ms even at 1000-TP assignments (see `ScaleBench topic`). */
-  /** (positions, group snapshot) of the last completed idle-tick heal.
-    * The heal exists to close ONE stale-min race after traffic stops;
-    * once it has run against a given (position, snapshot) pair the cut
-    * is a fixed point, so a fast continuous trigger on an idle stream
-    * must not re-run the per-TP truncation scans every tick — only
-    * when a group (re)commits or the committed position moves. */
-  @volatile private var lastIdleHeal:
-    Option[(Map[String, Map[Int, Long]], Seq[Map[String, Map[Int, Long]]])] =
-    None
-
-  private def publishAndCut(pos: Map[String, Map[Int, Long]],
-      publish: Boolean): Unit =
-    FileTopicLog.withGroupsLock(root) {
-      if (publish) groupId.foreach(g => FileTopicLog.commitGroup(root, g, pos))
-      val snap = FileTopicLog.groupSnapshot(root)
-      if (publish || !lastIdleHeal.contains((pos, snap))) {
-        pos.foreach { case (t, ps) =>
-          FileTopicLog.truncateTopic(root, t, ps.map { case (p, off) =>
-            p -> FileTopicLog.retentionCut(snap, root, t, p, off)
-          })
-        }
-        // a data commit moves positions; force the next idle tick to
-        // heal once against the fresh state, then settle.
-        lastIdleHeal = if (publish) None else Some((pos, snap))
-      }
-    }
-
+    * also publishes its own positions here on every commit.
+    *
+    * Only the publish runs on the caller's thread. Spark calls `commit`
+    * inside the next trigger's `walCommit`, so the retention walk would
+    * sit on every trigger's critical path; instead the position goes to
+    * this stream's [[RetentionCleaner]], which cuts behind the trigger
+    * (the reference likewise lets retention lag consumer progress). A
+    * deferred cut is strictly conservative: retention only lags. */
   override def commit(end: Offset): Unit = try {
     val pos = end.asInstanceOf[TopicLogOffset].positions
     lastCommitted = Some(pos)
-    if (truncateOnCommit) publishAndCut(pos, publish = true)
-    else groupId.foreach(g => FileTopicLog.commitGroup(root, g, pos))
+    groupId.foreach(g => FileTopicLog.commitGroup(root, g, pos))
+    if (truncateOnCommit) cleaner.request(pos)
   } catch {
     // Source.commit is advisory cleanup in Spark's contract — position
-    // publishing and retention are retried verbatim on the next
-    // trigger's commit, and a lower-than-reality published position or
-    // a deferred cut is strictly conservative (retention only lags).
+    // publishing is retried verbatim on the next trigger's commit, and
+    // a lower-than-reality published position is strictly conservative.
     // Throwing here instead kills the WHOLE streaming query over a
     // transient filesystem hiccup in a maintenance pass — the
     // reference's cleanup paths log-and-continue for the same reason.
     // NonFatal only: an OOM or fatal VM error must still propagate.
     case t: Throwable if scala.util.control.NonFatal(t) =>
       System.err.println(
-        s"[graft-topiclog] commit-time retention/offset publish failed " +
+        s"[graft-topiclog] commit-time offset publish failed " +
           s"(retrying next trigger): $t")
       t.printStackTrace()
   }
-  override def stop(): Unit = ()
+
+  /** Runs the pending cut to completion and joins the cleaner, so no
+    * cut of this stream touches the log after the query stops. */
+  override def stop(): Unit = cleaner.stop()
+}
+
+/** A stream's retention cleaner (Kafka's log-cleaner thread analog):
+  * one named daemon thread, started by the first request, that runs
+  * `pass` on the newest requested position. A request never waits for
+  * a pass. It replaces the one pending position, so requests that land
+  * while a pass runs coalesce: a burst of N costs at most two passes,
+  * the last at the newest position. A pass that fails NonFatal is
+  * logged; the next request retries with a position at least as new.
+  * `stop()` lets the pending pass finish, then joins the thread;
+  * requests after it are dropped (no cut runs once the query stopped). */
+private final class RetentionCleaner[P](name: String, pass: P => Unit) {
+  private var pending: Option[P] = None
+  private var stopping = false
+  private var thread: Thread = _
+
+  def request(p: P): Unit = synchronized {
+    if (!stopping) {
+      pending = Some(p)
+      if (thread == null) {
+        thread = new Thread(() => run(), name)
+        thread.setDaemon(true)
+        thread.start()
+      }
+      notifyAll()
+    }
+  }
+
+  /** The next position to cut, or None once stopping with nothing left. */
+  private def take(): Option[P] = synchronized {
+    while (pending.isEmpty && !stopping) wait()
+    val p = pending
+    pending = None
+    p
+  }
+
+  private def run(): Unit = {
+    var p = take()
+    while (p.nonEmpty) {
+      try pass(p.get)
+      catch {
+        case t: Throwable if scala.util.control.NonFatal(t) =>
+          System.err.println(
+            s"[graft-topiclog] retention pass failed (retrying on the " +
+              s"next commit): $t")
+      }
+      p = take()
+    }
+  }
+
+  def stop(): Unit = {
+    val t = synchronized { stopping = true; notifyAll(); thread }
+    if (t != null) {
+      // an interrupt must not cut the join short: the caller's promise
+      // is that no pass runs after stop() returns
+      var interrupted = false
+      while (t.isAlive)
+        try t.join()
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+    }
+  }
 }
 
 final case class TopicLogRange(

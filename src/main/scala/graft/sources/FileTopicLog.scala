@@ -40,7 +40,13 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
  * swapping `.count`, then deletes the old epoch — publish-then-delete,
  * the same crash-safe shape as the dedup index compaction
  * ([[graft.streaming.BatchedParquetIndex]]). A crash at any point leaves
- * either the old or the new epoch committed, never a torn mix.
+ * either the old or the new epoch committed, never a torn mix. A
+ * truncating source (`truncateOnCommit`) cuts behind its triggers: each
+ * commit publishes the position and hands it to one cleaner thread per
+ * stream, which walks the log while the next batch runs. So, as in
+ * Kafka, `base` lags consumer progress, by the walk in flight plus at
+ * most one pending position; once traffic stops, the next idle trigger
+ * re-runs the cut on its own thread.
  *
  * ONE writer per partition (Kafka's own contract — appends AND
  * truncation); any number of readers. A writer that crashed mid-append
@@ -791,8 +797,8 @@ object FileTopicLog {
   // truncation may come from different JVMs — a bench registering while
   // a pipeline commits). In-process: a per-root ReentrantLock, both
   // because overlapping FileLocks in one JVM throw instead of blocking
-  // and because the commit path re-enters (commit() holds the lock
-  // around commitGroup + snapshot + truncate).
+  // and because a holder may re-enter (call commitGroup or
+  // registerGroup while holding the lock).
   private val groupsJvmLocks =
     new java.util.concurrent.ConcurrentHashMap[String,
       java.util.concurrent.locks.ReentrantLock]()

@@ -586,6 +586,95 @@ class DynamicTopicLogSpec extends AnyFunSuite {
       "an all-no-op walk takes no listing")
   }
 
+  /** Start a thread that takes the root's group lock and runs `body`
+    * under it; returns once the lock is held. */
+  private def lockHolder(root: String)(body: => Unit): Thread = {
+    val held = new java.util.concurrent.CountDownLatch(1)
+    val th = new Thread(() => FileTopicLog.withGroupsLock(root) {
+      held.countDown(); body
+    })
+    th.setDaemon(true); th.start()
+    assert(held.await(30, java.util.concurrent.TimeUnit.SECONDS))
+    th
+  }
+
+  private def awaitBase(root: String, at: Long): Unit = {
+    val deadline = System.nanoTime + 30L * 1000 * 1000 * 1000
+    while (FileTopicLog.startOffset(root, "t", 0) < at &&
+        System.nanoTime < deadline)
+      Thread.sleep(10)
+  }
+
+  private def cleanerAlive(root: String): Boolean = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.exists(th =>
+      th.getName == s"graft-topiclog-cleaner $root" && th.isAlive)
+  }
+
+  private def cutAt(at: Long): TopicLogOffset =
+    TopicLogOffset(Map("t" -> Map(0 -> at)))
+
+  test("a truncating commit returns while the group lock is held; the cleaner cuts after") {
+    // Spark calls commit inside the next trigger's walCommit: the
+    // retention walk (which takes the group lock) must not run there
+    val root = freshRoot()
+    FileTopicLog.append(root, "t", 0, (0 until 10).map(rec))
+    val holder = lockHolder(root)(Thread.sleep(3000))
+    val stream = new DynamicTopicLogStream(root, None, truncateOnCommit = true)
+    try {
+      val t0 = System.nanoTime
+      stream.commit(cutAt(6L))
+      val ms = (System.nanoTime - t0) / 1e6
+      assert(ms < 1000, s"commit waited $ms ms for the group lock")
+      holder.join()
+      awaitBase(root, 6L)
+      assert(FileTopicLog.startOffset(root, "t", 0) === 6L,
+        "the cleaner reaches the committed cut once the lock is free")
+    } finally stream.stop()
+  }
+
+  test("commits that land while a cut waits coalesce into at most two walks") {
+    val root = freshRoot()
+    FileTopicLog.append(root, "t", 0, (0 until 20).map(rec))
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = lockHolder(root)(release.await(30, java.util.concurrent.TimeUnit.SECONDS): Unit)
+    val stream = new DynamicTopicLogStream(root, None, truncateOnCommit = true)
+    val listings0 = FileTopicLog.sweepListings.get()
+    try {
+      (1 to 10).foreach(i => stream.commit(cutAt(i.toLong)))
+      release.countDown()
+      holder.join()
+      awaitBase(root, 10L)
+    } finally stream.stop()
+    val walks = FileTopicLog.sweepListings.get() - listings0
+    assert(walks >= 1 && walks <= 2,
+      s"ten queued commits took $walks walks; the cleaner keeps only the newest")
+    assert(FileTopicLog.startOffset(root, "t", 0) === 10L,
+      "the last walk reaches the newest committed position")
+  }
+
+  test("stop() finishes the pending cut and joins the cleaner thread") {
+    val root = freshRoot()
+    FileTopicLog.append(root, "t", 0, (0 until 10).map(rec))
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val holder = lockHolder(root)(release.await(30, java.util.concurrent.TimeUnit.SECONDS): Unit)
+    val stream = new DynamicTopicLogStream(root, None, truncateOnCommit = true)
+    stream.commit(cutAt(4L))
+    stream.commit(cutAt(7L)) // pending behind the blocked first pass
+    assert(cleanerAlive(root), "the first commit starts the cleaner")
+    val releaser = new Thread(() => { Thread.sleep(200); release.countDown() })
+    releaser.setDaemon(true); releaser.start()
+    stream.stop() // returns only after both passes ran
+    assert(FileTopicLog.startOffset(root, "t", 0) === 7L,
+      "stop() runs the pending cut to completion")
+    assert(!cleanerAlive(root), "stop() joins the cleaner thread")
+    holder.join()
+    stream.commit(cutAt(9L))
+    Thread.sleep(100)
+    assert(FileTopicLog.startOffset(root, "t", 0) === 7L,
+      "no cut touches the log after the stream stopped")
+  }
+
   test("a capped backlog of 2x the cap drains in exactly two full batches") {
     // 3 topics x 8 partitions with odd counts 3, 5, …, 49 (624 rows)
     // under a 312-row cap: every floor share is half a row short, so
