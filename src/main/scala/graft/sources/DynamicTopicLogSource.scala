@@ -313,13 +313,19 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
     // batches unaffected (active streams stay commit-driven). The heal
     // runs synchronously, not on the cleaner: `processAllAvailable`
     // returns after an idle tick's `latestOffset`, so callers that read
-    // the base right after it see the healed cut.
+    // the base right after it see the healed cut. An interrupt is
+    // `stop()` ending the query mid-heal (the group lock's
+    // `FileChannel.lock` is interruptible): nothing is lost, so keep
+    // the flag for Spark and return without a failure line.
     if (truncateOnCommit && next.positions == startPos)
       lastCommitted.foreach { pos =>
         try cut(pos, heal = true)
         catch {
+          case _: java.nio.channels.FileLockInterruptionException |
+              _: java.nio.channels.ClosedByInterruptException =>
+            Thread.currentThread().interrupt()
           case t: Throwable if scala.util.control.NonFatal(t) =>
-            System.err.println(
+            if (!Thread.currentThread().isInterrupted) System.err.println(
               s"[graft-topiclog] idle-tick retention pass failed " +
                 s"(retrying next trigger): $t")
         }

@@ -766,13 +766,18 @@ object FileTopicLog {
     * partition): the per-batch metadata read. `listingStalenessMs > 0`
     * lets the partition-set discovery reuse listings that recent
     * (bounded staleness — see [[partitionsOf]]); counts are always
-    * read exact. */
+    * read exact. The whitelist is read again after the counts and only
+    * topics in both reads are kept: a removal followed by an append to
+    * the removed topic must never yield the post-removal count. */
   def endOffsets(root: String,
-      listingStalenessMs: Long = 0L): Map[String, Map[Int, Long]] =
-    whitelist(root).map { t =>
+      listingStalenessMs: Long = 0L): Map[String, Map[Int, Long]] = {
+    val counts = whitelist(root).map { t =>
       t -> partitionsOf(root, t, listingStalenessMs)
         .map(p => p -> committedCount(root, t, p)).toMap
     }.toMap
+    val still = whitelist(root).toSet
+    counts.filter { case (t, _) => still(t) }
+  }
 
   // ---- consumer-group committed positions (retention governance) ----
   //

@@ -93,15 +93,8 @@ object IncrementalAnn {
       id: Long): Option[(DataFrame, String)] = {
     val root = new Path(s"$workDir/centroids")
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    val ns = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .flatMap(n => try Some(n.drop(6).toLong)
-        catch { case _: NumberFormatException => None })
-      .filter(_ <= id)
-    if (ns.isEmpty) None
-    else {
-      val df = s.read.parquet(s"$workDir/centroids/batch=${ns.max}")
+    StateCommit.parts(fs, root).filter(_.id <= id).lastOption.flatMap { p =>
+      val df = s.read.parquet(p.path.toString)
       val rows = df.collect()
       // an EMPTY frozen table (all batches so far empty/zero-norm) is
       // "no epoch yet" — callers must re-freeze, never assign against
@@ -111,10 +104,10 @@ object IncrementalAnn {
   }
 
   /** Derive + persist the centroid table as of batch `upTo` from the
-    * seed state — PUBLISH-RENAMED so a crash mid-write can never leave
-    * a half-written table where [[centroidsAt]] would read it (the
-    * derivation is replay-deterministic: partials ≤ upTo are never
-    * touched by a later batch, and a compaction that folded them
+    * seed state through [[StateCommit.publish]], so a crash mid-write
+    * never leaves a half-written table where [[centroidsAt]] would read
+    * it (the derivation is replay-deterministic: partials ≤ upTo are
+    * never touched by a later batch, and a compaction that folded them
     * published identical content). Returns (table, fp). */
   private def freezeCentroids(s: SparkSession, workDir: String,
       upTo: Long, nCells: Int): (DataFrame, String) = {
@@ -123,13 +116,9 @@ object IncrementalAnn {
         seedMerge(nCells)))
     val root = new Path(s"$workDir/centroids")
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new Path(root, s"_tmp_$upTo")
-    val target = new Path(root, s"batch=$upTo")
-    cents.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(target, true)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
-    val df = s.read.parquet(target.toString)
+    StateCommit.publish(fs, root, s"batch=$upTo")(tmp =>
+      cents.coalesce(1).write.mode("overwrite").parquet(tmp.toString))
+    val df = s.read.parquet(new Path(root, s"batch=$upTo").toString)
     (df, centroidFp(df.collect()))
   }
 
@@ -166,7 +155,7 @@ object IncrementalAnn {
     * publish-rename committed ([[AdditiveBatchState.compact]]), and a
     * replay re-derives the identical centroid table first. */
   def compact(s: SparkSession, workDir: String, upToBatch: Long,
-      nCells: Int = 8, failpoint: String = "",
+      nCells: Int = 8, failpoint: Failpoint = Failpoint.Off,
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes): Unit = {
     val seedRoot = new Path(s"$workDir/seed")
     val fs = seedRoot.getFileSystem(s.sparkContext.hadoopConfiguration)

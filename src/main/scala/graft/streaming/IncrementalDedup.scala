@@ -79,7 +79,7 @@ object IncrementalDedup {
     * partitions are harmless to the left_anti join, which is what makes
     * every crash point leave a usable superset. */
   def compactIndex(s: SparkSession, workDir: String, upToBatch: Long,
-      failpoint: String = "",
+      failpoint: Failpoint = Failpoint.Off,
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes): Unit =
     BatchedParquetIndex.compact(s, s"$workDir/index", upToBatch, failpoint,
       keyCols = Seq("content_hash"), targetFileBytes = targetFileBytes)

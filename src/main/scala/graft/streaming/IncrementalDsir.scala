@@ -19,7 +19,7 @@ import graft.operators.{Dsir, Sampling}
   * exactly one batch, so per-batch (bucket, cnt) partials are ADDITIVE
   * — the merged model is a sum, never a distinct-merge. The partials
   * therefore live in [[AdditiveBatchState]]'s layout (per-batch
-  * overwrite partitions, reader preference rule, publish-rename
+  * overwrite partitions, reader preference rule, [[StateCommit]]
   * compaction commit): every crash point leaves the visible model
   * exactly correct, and a double-counted bucket partial would be a
   * WRONG model, not a conservative one. Each partial is
@@ -127,7 +127,7 @@ object IncrementalDsir {
     * session-width floor sets the file count (`defaultParallelism`
     * small files); the shared path keeps the commit protocol uniform. */
   def compact(s: SparkSession, workDir: String, upToBatch: Long,
-      failpoint: String = "",
+      failpoint: Failpoint = Failpoint.Off,
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes): Unit =
     AdditiveBatchState.compact(s, new Path(s"$workDir/model"), upToBatch,
       mergeAgg, keyCols = Seq("bucket"), targetFileBytes = targetFileBytes,
@@ -160,22 +160,22 @@ object IncrementalDsir {
       .digest(canon.getBytes("UTF-8")).map("%02x".format(_)).mkString
   }
 
-  /** Persist a frozen epoch's log-ratio table (bucket, lr) —
-    * publish-renamed so a crash can never expose a half-written
-    * table. */
-  private def persistEpochLr(s: SparkSession, workDir: String,
-      boundary: Long, lr: Array[Double]): Unit = {
+  /** Persist a frozen epoch's log-ratio table (bucket, lr) as
+    * `epochlr/batch=<boundary>` through [[StateCommit.publish]], so a
+    * crash never exposes a half-written table and a republish at the
+    * same boundary keeps the previous table readable until the swap. */
+  private[streaming] def persistEpochLr(s: SparkSession, workDir: String,
+      boundary: Long, lr: Array[Double],
+      failpoint: Failpoint = Failpoint.Off): Unit = {
     import s.implicits._
     val root = new Path(s"$workDir/epochlr")
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tmp = new Path(root, s"_tmp_$boundary")
-    val target = new Path(root, s"batch=$boundary")
-    lr.zipWithIndex.map { case (v, b) => (b.toLong, v) }.toSeq
-      .toDF("bucket", "lr")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    fs.delete(target, true)
-    if (!fs.rename(tmp, target))
-      throw new java.io.IOException(s"rename $tmp -> $target failed")
+    StateCommit.publish(fs, root, s"batch=$boundary", failpoint,
+        "epoch publish") { tmp =>
+      lr.zipWithIndex.map { case (v, b) => (b.toLong, v) }.toSeq
+        .toDF("bucket", "lr")
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    }
   }
 
   /** The latest persisted epoch's log-ratio table (and its boundary),
@@ -184,16 +184,10 @@ object IncrementalDsir {
       workDir: String): Option[(Array[Double], Long)] = {
     val root = new Path(s"$workDir/epochlr")
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return None
-    val ns = fs.listStatus(root).map(_.getPath.getName)
-      .filter(_.startsWith("batch="))
-      .flatMap(n => try Some(n.drop(6).toLong)
-        catch { case _: NumberFormatException => None })
-    if (ns.isEmpty) None
-    else {
-      val rows = s.read.parquet(s"$workDir/epochlr/batch=${ns.max}")
+    StateCommit.parts(fs, root).lastOption.map { p =>
+      val rows = s.read.parquet(p.path.toString)
         .collect().map(r => r.getLong(0).toInt -> r.getDouble(1)).toMap
-      Some((Array.tabulate(rows.size)(rows), ns.max))
+      (Array.tabulate(rows.size)(rows), p.id)
     }
   }
 
@@ -256,7 +250,8 @@ object IncrementalDsir {
     * emission lifecycle, paid per refresh instead of per emission. */
   def refreshEpoch(s: SparkSession, workDir: String, target: DataFrame,
       pool: DataFrame, k: Int, buckets: Int = 4096,
-      includeUnigrams: Boolean = false, failpoint: String = ""): Unit = {
+      includeUnigrams: Boolean = false,
+      failpoint: Failpoint = Failpoint.Off): Unit = {
     val lr = logRatios(s, workDir, target, buckets, includeUnigrams)
     val topkRoot = new Path(s"$workDir/topk")
     val boundary = math.max(

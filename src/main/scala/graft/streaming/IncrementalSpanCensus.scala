@@ -21,14 +21,14 @@ import org.apache.spark.sql.functions._
   *    idempotent under checkpoint replay exactly like
   *    [[IncrementalDedup]] (same batch id ⇒ same file set ⇒ same
   *    partial, overwritten in place);
-  *  - but compaction CANNOT use [[BatchedParquetIndex]]'s
-  *    duplicate-tolerant publish-then-delete (a crash between publish
-  *    and delete would leave rows counted TWICE). Instead the READER
-  *    enforces a preference rule: partitions with id ≤ the highest
-  *    published `compacted=<n>` are invisible — so publishing the
-  *    merged partition IS the commit point, and every crash point
-  *    (before publish, after publish, mid-delete) leaves the visible
-  *    census exactly correct, never a superset.
+  *  - compaction commits through [[StateCommit]] (publish, then
+  *    sweep) like the dedup index, but its reads CANNOT tolerate
+  *    duplicates (a crash between publish and sweep would leave rows
+  *    counted TWICE). Instead [[AdditiveBatchState]]'s READER enforces a
+  *    preference rule: the partitions the highest `compacted=<n>` hides
+  *    are invisible — so publishing the merged partition IS the commit
+  *    point, and every failpoint leaves the visible census exactly
+  *    correct, never a superset.
   *
   * At 100 TB the per-batch partial is batch-span-vocabulary-sized
   * (map-side partials absorb within-batch repeats); the merged census
@@ -122,13 +122,13 @@ object IncrementalSpanCensus {
       censusWithFirst(s, workDir), spanTokens)
 
   /** Sum-merge every visible partition with id ≤ `upToBatch` into ONE
-    * `compacted=<upToBatch>` partition, then delete the sources.
-    * Crash-safe by publish-then-delete + the reader's preference rule
-    * (see object Scaladoc): the rename IS the commit — before it the
-    * tmp is `_`-invisible, after it every source with id ≤ upToBatch
-    * is reader-invisible whether or not its delete completed. A re-run
-    * that finds the target published skips the merge and finishes the
-    * deletions. `failpoint` injects test crashes.
+    * `compacted=<upToBatch>` partition, then sweep the sources.
+    * Crash-safe by [[StateCommit]]'s publish + the reader's preference
+    * rule (see object Scaladoc): the publish IS the commit — before it
+    * the tmp is `_`-invisible, after it every source with id ≤
+    * upToBatch is reader-invisible whether or not the sweep completed.
+    * A re-run that finds the target published skips the merge and
+    * finishes the sweep. `failpoint` injects test crashes.
     *
     * The merged partition is hash-partitioned and sorted on `span_h`
     * into `max(n, defaultParallelism)` files, n scaled to the source
@@ -141,7 +141,7 @@ object IncrementalSpanCensus {
     * Clustering by span_h means the NEXT compaction's merge of this
     * partition shuffles rows that are already co-located. */
   def compact(s: SparkSession, workDir: String, upToBatch: Long,
-      failpoint: String = "",
+      failpoint: Failpoint = Failpoint.Off,
       targetFileBytes: Long = BatchedParquetIndex.DefaultTargetFileBytes): Unit =
     AdditiveBatchState.compact(s, new Path(s"$workDir/census"), upToBatch,
       mergeAgg, keyCols = Seq("span_h"), targetFileBytes = targetFileBytes,
@@ -200,15 +200,8 @@ object IncrementalSpanCensus {
   private def emittedParts(s: SparkSession,
       workDir: String): Seq[(Long, Path)] = {
     val root = emittedRoot(workDir)
-    val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.map(_.getPath)
-      .flatMap { p =>
-        val n = p.getName
-        if (!n.startsWith("batch=")) None
-        else try Some((n.drop(6).toLong, p))
-        catch { case _: NumberFormatException => None }
-      }.sortBy(_._1)
+    StateCommit.parts(root.getFileSystem(s.sparkContext.hadoopConfiguration),
+      root).map(p => (p.id, p.path))
   }
 
   /** True when an emitted partition finished its parquet job commit:

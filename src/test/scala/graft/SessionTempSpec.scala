@@ -74,4 +74,23 @@ class SessionTempSpec extends AnyFunSuite {
       finally walk.close()
     assert(offenders.isEmpty, s"route these through SessionTemp: $offenders")
   }
+
+  test("only StateCommit renames in streaming; no failpoint string remains in src/main") {
+    import scala.jdk.CollectionConverters._
+    def sources(root: String): List[java.nio.file.Path] = {
+      val walk = Files.walk(Paths.get(root))
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    val renames = sources("src/main/scala/graft/streaming")
+      .filter(_.getFileName.toString != "StateCommit.scala")
+      .filter(p => Files.readString(p).contains(".rename("))
+    assert(renames.isEmpty, s"publish through StateCommit: $renames")
+    val literals = sources("src/main").filter { p =>
+      val src = Files.readString(p)
+      Seq("before-publish", "after-publish", "mid-delete")
+        .exists(f => src.contains("\"" + f + "\""))
+    }
+    assert(literals.isEmpty, s"name these through Failpoint: $literals")
+  }
 }

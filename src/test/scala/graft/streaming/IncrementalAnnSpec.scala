@@ -118,7 +118,8 @@ class IncrementalAnnSpec extends AnyFunSuite {
   }
 
   test("compaction (= epoch rebuild) crash at every failpoint: probe stays EXACT; after recovery all rows serve persisted") {
-    for (failpoint <- Seq("before-publish", "after-publish", "mid-delete")) {
+    for (failpoint <- Seq(Failpoint.BeforePublish, Failpoint.AfterPublish,
+        Failpoint.MidDelete)) {
       val docsDir = java.nio.file.Files
         .createTempDirectory("graft_d21x_docs_").toString
       val workDir = java.nio.file.Files

@@ -111,7 +111,8 @@ class IncrementalDedupSpec extends AnyFunSuite {
   }
 
   test("compaction crash at every failpoint: the index never loses a hash") {
-    for (failpoint <- Seq("before-publish", "after-publish", "mid-delete")) {
+    for (failpoint <- Seq(Failpoint.BeforePublish, Failpoint.AfterPublish,
+        Failpoint.MidDelete)) {
       val docsDir = java.nio.file.Files
         .createTempDirectory(s"graft_d12x_docs_").toString
       val workDir = java.nio.file.Files

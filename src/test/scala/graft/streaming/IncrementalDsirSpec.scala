@@ -104,7 +104,8 @@ class IncrementalDsirSpec extends AnyFunSuite {
   }
 
   test("compaction crash at every failpoint: the model stays EXACT, never a superset") {
-    for (failpoint <- Seq("before-publish", "after-publish", "mid-delete")) {
+    for (failpoint <- Seq(Failpoint.BeforePublish, Failpoint.AfterPublish,
+        Failpoint.MidDelete)) {
       val docsDir = java.nio.file.Files
         .createTempDirectory("graft_p17dx_docs_").toString
       val workDir = java.nio.file.Files
@@ -147,7 +148,7 @@ class IncrementalDsirSpec extends AnyFunSuite {
     val before = modelMap(workDir)
     intercept[RuntimeException] {
       IncrementalDsir.compact(spark, workDir, upToBatch = 3L,
-        failpoint = "mid-delete")
+        failpoint = Failpoint.MidDelete)
     }
     // crash left compacted=3 published plus ≥1 stale (invisible) partial
     assert(partNames(workDir).exists(_.startsWith("batch=")),
@@ -201,7 +202,8 @@ class IncrementalDsirSpec extends AnyFunSuite {
   }
 
   test("refreshEpoch rebases to the full-model emission; crash matrix at every failpoint stays emittable or fails loudly") {
-    for (failpoint <- Seq("before-publish", "after-publish", "mid-delete")) {
+    for (failpoint <- Seq(Failpoint.BeforePublish, Failpoint.AfterPublish,
+        Failpoint.MidDelete)) {
       val docsDir = java.nio.file.Files
         .createTempDirectory("graft_p17fr_docs_").toString
       val workDir = java.nio.file.Files
@@ -221,7 +223,7 @@ class IncrementalDsirSpec extends AnyFunSuite {
       val expected = IncrementalDsir.resampleAccumulated(spark, workDir,
         target, pool, k = 10, buckets = Buckets)
         .collect().map(_.toSeq).toSeq
-      if (failpoint == "before-publish") {
+      if (failpoint == Failpoint.BeforePublish) {
         // new epoch persisted, rebase NOT published: the state mixes
         // epochs — emitting must fail loudly, never mix two models
         assert(!IncrementalDsir.emissionFresh(spark, workDir),
@@ -252,14 +254,55 @@ class IncrementalDsirSpec extends AnyFunSuite {
       // delete-then-rename that opens a no-state window
       intercept[RuntimeException] {
         IncrementalDsir.refreshEpoch(spark, workDir, target, pool,
-          k = 10, buckets = Buckets, failpoint = "before-publish")
+          k = 10, buckets = Buckets, failpoint = Failpoint.BeforePublish)
       }
       assert(IncrementalDsir.emissionFresh(spark, workDir),
         s"[$failpoint] republish crash hid the live rebase")
       assert(IncrementalDsir.resampleIncremental(spark, workDir, k = 10)
         .collect().map(_.toSeq).toSeq === expected,
         s"[$failpoint] republish crash changed the emission")
+      // a republish crash INSIDE the swap (old rebase retired, new one
+      // still a tmp dir) also leaves the previous rebase emittable, and
+      // a later slice merges onto it instead of being emitted alone
+      intercept[RuntimeException] {
+        IncrementalDsir.refreshEpoch(spark, workDir, target, pool,
+          k = 10, buckets = Buckets, failpoint = Failpoint.Retired)
+      }
+      assert(IncrementalDsir.resampleIncremental(spark, workDir, k = 10)
+        .collect().map(_.toSeq).toSeq === expected,
+        s"[$failpoint] retire-window crash changed the emission")
+      writeSlice(docsDir, 4, Seq(
+        (48L, "w1 w2 w3 w1 w2 w4", "src1"),
+        (49L, "w9 w10 w0 w2", "src2")))
+      IncrementalDsir.runScored(spark, docsDir, workDir, target, k = 10,
+        buckets = Buckets)
+      val (lr, _) = IncrementalDsir.currentEpochLr(spark, workDir).get
+      val onePass = graft.operators.Dsir.gumbelResample(
+          graft.operators.Dsir.importanceWeights(
+              docs(docsDir).filter(col("source") =!= "src0"), lr)
+            .select(col("doc_id"), col("logw")), k = 10)
+        .collect().map(_.toSeq).toSeq
+      assert(IncrementalDsir.resampleIncremental(spark, workDir, k = 10)
+        .collect().map(_.toSeq).toSeq === onePass,
+        s"[$failpoint] slice after a retire-window crash lost the rebase")
     }
+  }
+
+  test("an epoch-lr republish crashed inside the swap reads the previous table back") {
+    val workDir = graft.SessionTemp.dir("graft_epochlr_retire_")
+    IncrementalDsir.persistEpochLr(spark, workDir, 3L, Array(0.5, -0.5))
+    val crashed = intercept[RuntimeException] {
+      IncrementalDsir.persistEpochLr(spark, workDir, 3L, Array(1.0, -1.0),
+        failpoint = Failpoint.Retired)
+    }
+    assert(crashed.getMessage.contains("injected epoch publish crash"))
+    val (lr, boundary) = IncrementalDsir.currentEpochLr(spark, workDir).get
+    assert(lr.toSeq === Seq(0.5, -0.5) && boundary === 3L,
+      "the retired table is the committed one until the swap")
+    IncrementalDsir.persistEpochLr(spark, workDir, 3L, Array(1.0, -1.0))
+    assert(IncrementalDsir.currentEpochLr(spark, workDir).get._1.toSeq ===
+      Seq(1.0, -1.0))
+    assert(new java.io.File(s"$workDir/epochlr").list().toSeq === Seq("batch=3"))
   }
 
   test("runScored crash after batch-1 writes, restart: emission ≡ the frozen-epoch one-pass; after refresh ≡ batch p17b") {

@@ -119,7 +119,8 @@ class IncrementalSpanCensusSpec extends AnyFunSuite {
     // whole crash matrix runs against a multi-file compacted partition
     // (the 100-TB layout, where the merge is never one task)
     val target = 1024L
-    for (failpoint <- Seq("before-publish", "after-publish", "mid-delete")) {
+    for (failpoint <- Seq(Failpoint.BeforePublish, Failpoint.AfterPublish,
+        Failpoint.MidDelete)) {
       val docsDir = java.nio.file.Files
         .createTempDirectory("graft_d18x_docs_").toString
       val workDir = java.nio.file.Files
