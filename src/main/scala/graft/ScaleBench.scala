@@ -57,7 +57,10 @@ import graft.streaming.{IncrementalDsir, IncrementalSpanCensus}
   * span-emit  <docs> [deltaRows=5000] [mainSlices=4]      docs delta_rows emit_bounded_sec
   *                                                        emit_accumulated_sec
   * topic      [iters=40] [--stream]                       metric=topiclog_metadata_walk tp_ratio
-  *                                                        tps_<n>{…cut_walk_ms commit_return_ms…}
+  *                                                        tps_<n>{uncached_ms steady_ms dirty1_ms
+  *                                                        allhot_exact_ms cut_walk_ms
+  *                                                        commit_return_ms cut_snapshot_ms
+  *                                                        cut_perpart_ms}
   *                                                        wide_256{…} iters;
   *                                                        metric=topiclog_stream_drain_1000tp …
   * floor      <sfDir>                                     metric=lifecycle_floor fresh_sec
@@ -677,10 +680,7 @@ object ScaleBench {
       parts.map { p =>
         val cf = d.resolve(s"p$p.count")
         if (!Files.exists(cf)) 0L
-        else {
-          val s = new String(Files.readAllBytes(cf), StandardCharsets.UTF_8).trim
-          if (s.startsWith("{")) om.readTree(s).get("end").asLong() else s.toLong
-        }
+        else om.readTree(Files.readAllBytes(cf)).get("end").asLong()
       }.sum
     }.sum
   }
@@ -693,9 +693,10 @@ object ScaleBench {
     * 4-partition topics (`tps_<n>`) and one 256-partition topic
     * (`wide_256`): `uncached` (the pre-cache baseline), `steady` (no
     * commits between walks), `dirty1` (one TP commits between walks),
-    * `allhot_*` (every topic appends between walks; exact vs TTL
-    * listing), `cut_walk` (a real truncating retention walk retiring
-    * one record per TP, one [[FileTopicLog.truncateTopic]] per topic),
+    * `allhot_exact` (every topic appends between walks, so every
+    * listing is re-read), `cut_walk` (a real truncating retention walk
+    * retiring one record per TP, one [[FileTopicLog.truncateTopic]] per
+    * topic),
     * `commit_return` (how long a `truncateOnCommit`
     * [[DynamicTopicLogStream.commit]] that triggers that walk takes to
     * return to its caller), and the retention cut computation over
@@ -742,9 +743,6 @@ object ScaleBench {
         sec * 1e3 / iters
       }
       val hotExact = timeHotWalk { FileTopicLog.endOffsets(root): Unit }
-      val hotTtl = timeHotWalk {
-        FileTopicLog.endOffsets(root, listingStalenessMs = 60000L): Unit
-      }
       // the walk must SEE the commits the dirty loop made (cache
       // coherence under measurement, not just speed)
       val end = FileTopicLog.endOffsets(root)
@@ -802,7 +800,7 @@ object ScaleBench {
           FileTopicLog.retentionCut(root, t, p, 1L): Unit))
       }
       (nTopics * parts,
-        f""""$label":{"uncached_ms":$uncached%.3f,"steady_ms":$steady%.3f,"dirty1_ms":$dirty%.3f,"allhot_exact_ms":$hotExact%.3f,"allhot_ttl_ms":$hotTtl%.3f,"cut_walk_ms":$cutWalk%.3f,"commit_return_ms":$commitReturn%.3f,"cut_snapshot_ms":$cutSnap%.3f,"cut_perpart_ms":$cutPer%.3f}""")
+        f""""$label":{"uncached_ms":$uncached%.3f,"steady_ms":$steady%.3f,"dirty1_ms":$dirty%.3f,"allhot_exact_ms":$hotExact%.3f,"cut_walk_ms":$cutWalk%.3f,"commit_return_ms":$commitReturn%.3f,"cut_snapshot_ms":$cutSnap%.3f,"cut_perpart_ms":$cutPer%.3f}""")
     }
     val ratio = out(2)._1.toDouble / out.head._1
     println(f"""{"metric":"topiclog_metadata_walk","unit":"ms_per_walk","tp_ratio":$ratio%.0f,${out.map(_._2).mkString(",")},"iters":$iters}""")

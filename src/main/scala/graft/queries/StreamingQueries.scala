@@ -87,68 +87,24 @@ object StreamingQueries {
         |  AND NOT (topic = 'view' AND partition = 0 AND "offset" < 2)
         |ORDER BY event_id""".stripMargin))
 
-  // S2 — IN-FLIGHT TOPIC ASSIGNMENT through the custom DSv2 source
-  // (graft.sources.DynamicTopicLogProvider): the fixture record table is
-  // written once per (session, data dir) as a FileTopicLog (one
-  // append-only log per (topic, partition), executor-side via
-  // foreachPartition after a (topic, partition) repartition — TP-complete
-  // tasks, offset-ordered appends). The entry then runs ONE streaming
-  // query whose whitelist starts as the lexicographic first half of the
-  // topics and is widened to all topics WHILE THE QUERY RUNS — a
-  // `require` pins that the runId never changed, i.e. the assignment
-  // mutation really happened in flight (reference S2,
-  // `worker/ConsumerFetcherThread.java:183-240`), not via the
-  // restart path. The oracle is the full record relation: correct iff
-  // the late-added topics arrive complete (from offset 0) AND the
-  // initial topics are never replayed or dropped across the change.
+  // The shared topic-log fixture: the record table written once per
+  // (session, data dir) as a FileTopicLog (one append-only log per
+  // (topic, partition)) through [[writeLog]]'s idempotent appendAt, so a
+  // task retry or speculative duplicate re-offering a run appends
+  // nothing. k2b replicates from it; s2/s2b use the run-scoped
+  // [[s2Scenario]] log instead, because their mid-run staged appends
+  // need a root no other entry reads.
   private val s2SrcCache =
     new java.util.concurrent.ConcurrentHashMap[(org.apache.spark.sql.SparkSession, String), String]()
   private val s2Locks =
     new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  /** The shared (session, data dir)-cached topic-log fixture root used
-    * by k2b (s2/s2b moved to the run-scoped [[s2Scenario]] log in round
-    * 12 — mid-run staged appends need a root no other entry reads). */
   private def s2Root(s: org.apache.spark.sql.SparkSession,
-      dir: String): String = {
-    import graft.sources.FileTopicLog
+      dir: String): String =
     graft.SessionTemp.live(s2SrcCache, (s, dir))(Seq(_)) {
-        val d = graft.SessionTemp.dir("graft_s2_log_")
-        val recs = logRecords(s, dir)
-        recs.repartition(col("topic"), col("partition"))
-          .sortWithinPartitions("topic", "partition", "offset")
-          .foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-            // rows arrive TP-contiguous and offset-ordered; stream each
-            // run straight into append — O(1) task memory at any scale.
-            // Appends go to an ATTEMPT-SCOPED scratch root and are then
-            // atomically promoted (commit-last .count move): a task
-            // retry or speculative duplicate re-writing its run cannot
-            // double-append into the shared log — it either finds the
-            // partition published and skips, or publishes identical
-            // bytes (the input is deterministic per TP).
-            val attempt = graft.SessionTemp.dir("graft_s2_attempt_")
-            val bit = it.buffered
-            while (bit.hasNext) {
-              val t = bit.head.getAs[String]("topic")
-              val p = bit.head.getAs[Int]("partition")
-              val run = new Iterator[FileTopicLog.LogRecord] {
-                def hasNext: Boolean = bit.hasNext &&
-                  bit.head.getAs[String]("topic") == t &&
-                  bit.head.getAs[Int]("partition") == p
-                def next(): FileTopicLog.LogRecord = {
-                  val r = bit.next()
-                  FileTopicLog.LogRecord(
-                    r.getAs[Array[Byte]]("key"), r.getAs[Array[Byte]]("value"),
-                    r.getAs[Long]("ts_ms"),
-                    headers = Seq("event_id" -> r.getAs[Array[Byte]]("eid")))
-                }
-              }
-              FileTopicLog.append(attempt, t, p, run)
-              FileTopicLog.promote(attempt, d, t, p)
-            }
-          }
-        d
-      }
-  }
+      val d = graft.SessionTemp.dir("graft_s2_log_")
+      writeLog(logRecords(s, dir), d)
+      d
+    }
 
   // S2 + S2B — ONE combined lifecycle run (gated once per (session,
   // data dir), both oracle entries re-read its sink): the full
@@ -1147,7 +1103,8 @@ object StreamingQueries {
       val root = s2Root(s, dir)
       val topics = eventTopics(s, dir)
       val base = graft.SessionTemp.dir("graft_k2b_")
-      // shares the s2 fixture root → same whitelist lock as s2 runs
+      // the shared fixture root has one whitelist: runs that set it
+      // take turns
       s2Locks.computeIfAbsent(root, _ => new Object).synchronized {
         FileTopicLog.setWhitelist(root, topics)
         val src = s.readStream.format("graft-topiclog")

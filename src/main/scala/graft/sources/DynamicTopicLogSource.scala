@@ -47,10 +47,13 @@ import org.apache.spark.unsafe.types.UTF8String
  *    `[start, end)` ranges, and the log's `.count` commit point means a
  *    planned range only ever covers fully-written records.
  *
+ * Options: `path` (the log root, required), `maxRowsPerTrigger`,
+ * `truncateOnCommit` and `groupId`; any other key fails at `load()`.
+ *
  * Scale: per micro-batch the driver reads O(#topic-partitions) metadata
- * (whitelist + counts); record bytes are read executor-side, one
- * [[InputPartition]] per (topic, partition) delta — the same
- * parallelism contract as the Kafka source's topic-partition splits.
+ * (whitelist + counts); record bytes are read executor-side, the
+ * (topic, partition) deltas packed onto at most 2× default-parallelism
+ * [[InputPartition]]s (see `planInputPartitions`).
  */
 class DynamicTopicLogProvider extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-topiclog"
@@ -58,34 +61,39 @@ class DynamicTopicLogProvider extends TableProvider with DataSourceRegister {
     DynamicTopicLog.schema
   override def getTable(schema: StructType, partitioning: Array[Transform],
       properties: util.Map[String, String]): Table = {
-    val root = Option(properties.get("path")).getOrElse(
+    import scala.jdk.CollectionConverters._
+    // Spark hands a TableProvider without SessionConfigSupport exactly
+    // the reader's options (plus `path`), so a key outside the four below
+    // is a caller's typo or a retired option: fail at load() instead of
+    // silently running without it.
+    val unknown = properties.keySet.asScala.toSeq.sorted
+      .filterNot(k => DynamicTopicLog.Options.exists(_.equalsIgnoreCase(k)))
+    require(unknown.isEmpty,
+      s"graft-topiclog: unknown option(s) ${unknown.mkString(", ")}; " +
+        s"supported: ${DynamicTopicLog.Options.mkString(", ")}")
+    val opts = new CaseInsensitiveStringMap(properties)
+    val root = Option(opts.get("path")).getOrElse(
       throw new IllegalArgumentException(
         "graft-topiclog requires .option(\"path\", <log root>)"))
-    val maxRows = Option(properties.get("maxRowsPerTrigger")).map(_.toLong)
+    // the R1 static rate cap, tightened at runtime by the log's rate file
+    val maxRows = Option(opts.get("maxRowsPerTrigger")).map(_.toLong)
+    // retention: cut the log behind this query's committed position
     val truncateOnCommit =
-      Option(properties.get("truncateOnCommit")).exists(_.toBoolean)
-    // the reference worker's fetcher-count knob (how many consumer
-    // threads share a route's TPs): caps how many tasks a micro-batch
-    // fans out to; default 2x cluster parallelism
-    val maxTasks = Option(properties.get("maxTasksPerBatch")).map(_.toInt)
-    maxTasks.foreach(n => require(n > 0, "maxTasksPerBatch must be positive"))
+      Option(opts.get("truncateOnCommit")).exists(_.toBoolean)
     // the reference's consumer-group identity (ZK group offsets,
     // `W/ZookeeperCheckpointManager.java:73-130`): a query that sets it
     // publishes its committed positions under the log root and is
     // thereby protected from a truncating peer's retention
-    val groupId = Option(properties.get("groupId"))
-    // bounded-staleness partition discovery (metadata.max.age.ms analog;
-    // 0 = exact): under continuous ingest the per-trigger dir re-list is
-    // ~60% of a 1000-TP walk, and a partition surfacing one trigger
-    // late is indistinguishable from one created a trigger later
-    val listingTtl = Option(properties.get("listingTtlMs")).map(_.toLong)
-      .getOrElse(0L)
-    new DynamicTopicLogTable(root, maxRows, truncateOnCommit, maxTasks,
-      groupId, listingTtl)
+    val groupId = Option(opts.get("groupId"))
+    new DynamicTopicLogTable(root, maxRows, truncateOnCommit, groupId)
   }
 }
 
 object DynamicTopicLog {
+  /** Every option `graft-topiclog` reads (matched case-insensitively). */
+  val Options: Seq[String] =
+    Seq("path", "maxRowsPerTrigger", "truncateOnCommit", "groupId")
+
   /** Canonical record schema — field-for-field the Kafka source's. */
   val schema: StructType = StructType(Seq(
     StructField("key", BinaryType),
@@ -101,8 +109,7 @@ object DynamicTopicLog {
 }
 
 final class DynamicTopicLogTable(root: String, maxRows: Option[Long],
-    truncateOnCommit: Boolean = false, maxTasks: Option[Int] = None,
-    groupId: Option[String] = None, listingTtlMs: Long = 0L)
+    truncateOnCommit: Boolean = false, groupId: Option[String] = None)
     extends Table with SupportsRead {
   override def name(): String = s"graft-topiclog($root)"
   override def schema(): StructType = DynamicTopicLog.schema
@@ -113,8 +120,7 @@ final class DynamicTopicLogTable(root: String, maxRows: Option[Long],
       override def build(): Scan = new Scan {
         override def readSchema(): StructType = DynamicTopicLog.schema
         override def toMicroBatchStream(checkpointLocation: String): MicroBatchStream =
-          new DynamicTopicLogStream(root, maxRows, truncateOnCommit,
-            maxTasks, groupId, listingTtlMs)
+          new DynamicTopicLogStream(root, maxRows, truncateOnCommit, groupId)
       }
     }
 }
@@ -149,8 +155,7 @@ object TopicLogOffset {
 }
 
 final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
-    truncateOnCommit: Boolean = false, maxTasks: Option[Int] = None,
-    groupId: Option[String] = None, listingTtlMs: Long = 0L)
+    truncateOnCommit: Boolean = false, groupId: Option[String] = None)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -212,8 +217,7 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
     * no restart, like the reference's live rate-limiter update. */
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
     val startPos = start.asInstanceOf[TopicLogOffset].positions
-    val live = availableNowTarget.getOrElse(
-      FileTopicLog.endOffsets(root, listingTtlMs))
+    val live = availableNowTarget.getOrElse(FileTopicLog.endOffsets(root))
     val static = limit match {
       case mr: ReadMaxRows => mr.maxRows()
       case _ => Long.MaxValue
@@ -356,8 +360,8 @@ final class DynamicTopicLogStream(root: String, maxRows: Option[Long],
         else None
       }
     }
-    val targetTasks = maxTasks.getOrElse(math.max(1,
-      2 * org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism))
+    val targetTasks = math.max(1,
+      2 * org.apache.spark.sql.SparkSession.active.sparkContext.defaultParallelism)
     if (ranges.size <= targetTasks)
       ranges.map(r => TopicLogInputPartition(root, Seq(r)): InputPartition).toArray
     else {

@@ -28,9 +28,8 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption, StandardOpenOption
  * partition state as JSON: `{"end":N,"endPos":P,"base":B,"epoch":E}` —
  * `end` is the next offset to assign, `endPos` the byte length of the
  * committed log prefix, `base` the lowest retained offset (retention,
- * see [[truncateBelow]]), `epoch` the data-file generation. A legacy
- * bare-integer `.count` (pre-retention format) still parses (end only;
- * endPos is recovered by a one-record scan on the next append).
+ * see [[truncateBelow]]), `epoch` the data-file generation. A `.count`
+ * that is not this JSON state fails loudly, naming its path.
  *
  * Retention ([[truncateBelow]]) follows Kafka's log-start-offset model:
  * records below `base` are deleted; a consumer positioned at or above
@@ -120,62 +119,87 @@ object FileTopicLog {
     else { val b = new Array[Byte](n); in.readFully(b); b }
   }
 
-  // state() is the per-(topic, partition) metadata read the driver's
-  // endOffsets walk issues EVERY micro-batch — at the reference's
-  // thousands of TPs per route (C/core/OffsetMonitor.java:240-316) the
-  // open+read+parse per TP is the planning-loop bottleneck. Every commit
-  // replaces the count file via rename (atomicWrite / promote's link),
-  // so (fileKey, mtime, size) identifies the committed content: a cache
-  // validated by ONE stat call turns the steady-state walk into pure
-  // stats (~10-20x cheaper) while any commit — same JVM or another
-  // process — is picked up immediately (new inode => new fileKey).
   private final case class StateStamp(fileKey: AnyRef,
       mtime: java.nio.file.attribute.FileTime, size: Long)
-  private val stateCache =
-    new java.util.concurrent.ConcurrentHashMap[Path, (StateStamp, PartitionState)]()
 
-  private def parseState(cf: Path): PartitionState = {
-    val s = new String(Files.readAllBytes(cf), StandardCharsets.UTF_8).trim
-    if (s.startsWith("{")) {
-      val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(s)
-      PartitionState(n.get("end").asLong(), n.get("endPos").asLong(),
-        n.get("base").asLong(), n.get("epoch").asLong())
-    } else PartitionState(s.toLong, -1L, 0L, 0L)
-  }
+  /** Entries per cache before it is dropped wholesale: unbounded roots
+    * (test/bench temp dirs) must not leak the JVM, and every cache here
+    * is an optimization, so clearing one is always safe. */
+  private val CacheBound = 100000
 
-  /** Committed state (zeros when the partition does not exist). A legacy
-    * bare-integer count file yields `endPos = -1` (unknown — recovered
-    * by [[committedEndPos]] when a writer next needs it). */
-  def state(root: String, topic: String, partition: Int): PartitionState = {
-    val cf = countFile(root, topic, partition)
-    val attrs =
-      try Files.readAttributes(cf,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      catch { case _: java.io.IOException => return PartitionState(0L, 0L, 0L, 0L) }
-    val stamp = StateStamp(attrs.fileKey, attrs.lastModifiedTime, attrs.size)
-    // BasicFileAttributes.fileKey may be null on some filesystems; the
-    // stamp then degrades to (mtime, size), where a same-size rename-
-    // replace within one timestamp tick would serve stale committed
-    // offsets. Correctness must not rest on timestamp granularity —
-    // bypass the cache entirely and parse every time.
-    val cacheable = attrs.fileKey != null
-    val hit = if (cacheable) stateCache.get(cf) else null
-    if (hit != null && hit._1 == stamp) hit._2
-    else {
-      val st =
-        try parseState(cf)
-        catch { // vanished between stat and read == partition deleted
-          case _: java.io.IOException => return PartitionState(0L, 0L, 0L, 0L)
+  /** Parsed contents of control files that are only ever replaced by
+    * rename (the `.count` commit, the whitelist), validated by ONE stat.
+    * The driver's endOffsets walk re-reads every count and the
+    * whitelist EVERY micro-batch — at the reference's thousands of TPs
+    * per route (C/core/OffsetMonitor.java:240-316) the open+read+parse
+    * per TP is the planning-loop bottleneck. A rename gives the file a
+    * new inode, so (fileKey, mtime, size) identifies the content: the
+    * steady-state walk becomes pure stats (~10-20x cheaper) while any
+    * commit — same JVM or another process — is picked up immediately. */
+  private final class StampCache[T] {
+    private val entries =
+      new java.util.concurrent.ConcurrentHashMap[Path, (StateStamp, T)]()
+
+    /** `parse(f)`, or the cached value when `f`'s stamp is unchanged;
+      * `absent` when `f` does not exist, vanishes before the read, or
+      * `parse` fails with an IOException. */
+    def get(f: Path, absent: T)(parse: Path => T): T = {
+      val attrs =
+        try Files.readAttributes(f,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+        catch { case _: java.io.IOException => return absent }
+      val stamp = StateStamp(attrs.fileKey, attrs.lastModifiedTime, attrs.size)
+      // BasicFileAttributes.fileKey may be null on some filesystems; the
+      // stamp then degrades to (mtime, size), where a same-size rename-
+      // replace within one timestamp tick would serve stale content.
+      // Correctness must not rest on timestamp granularity — bypass the
+      // cache entirely and parse every time.
+      val cacheable = attrs.fileKey != null
+      val hit = if (cacheable) entries.get(f) else null
+      if (hit != null && hit._1 == stamp) hit._2
+      else {
+        val v =
+          try parse(f)
+          catch { case _: java.io.IOException => return absent }
+        if (cacheable) {
+          if (entries.size() > CacheBound) entries.clear()
+          entries.put(f, (stamp, v))
         }
-      // unbounded roots (test/bench temp dirs) must not leak the JVM:
-      // the cache is an optimization, dropping it wholesale is always safe
-      if (cacheable) {
-        if (stateCache.size() > 100000) stateCache.clear()
-        stateCache.put(cf, (stamp, st))
+        v
       }
-      st
     }
   }
+
+  private val stateCache = new StampCache[PartitionState]
+  private val NoPartition = PartitionState(0L, 0L, 0L, 0L)
+  private val StateFields = Seq("end", "endPos", "base", "epoch")
+
+  /** The JSON state [[commitState]] writes; anything else — a foreign
+    * or hand-edited file — throws naming `cf` rather than being read as
+    * some other partition state. */
+  private def parseState(cf: Path): PartitionState = {
+    val text = new String(Files.readAllBytes(cf), StandardCharsets.UTF_8)
+    val fields =
+      try {
+        val n = new com.fasterxml.jackson.databind.ObjectMapper().readTree(text)
+        StateFields.map(k =>
+          Option(n).flatMap(n => Option(n.get(k))).filter(_.isIntegralNumber))
+      } catch {
+        case _: com.fasterxml.jackson.core.JsonProcessingException => Nil
+      }
+    fields match {
+      case Seq(Some(end), Some(endPos), Some(base), Some(epoch)) =>
+        PartitionState(end.asLong(), endPos.asLong(), base.asLong(), epoch.asLong())
+      case _ =>
+        throw new IllegalStateException(
+          s"$cf is not a partition state (want JSON with " +
+            s"${StateFields.mkString(", ")}): '${text.take(80)}'")
+    }
+  }
+
+  /** Committed state (zeros when the partition does not exist). */
+  def state(root: String, topic: String, partition: Int): PartitionState =
+    stateCache.get(countFile(root, topic, partition), NoPartition)(parseState)
 
   private def commitState(root: String, topic: String, partition: Int,
       st: PartitionState): Unit =
@@ -200,35 +224,7 @@ object FileTopicLog {
     try { in.skipNBytes(rel * 8); in.readLong() } finally in.close()
   }
 
-  /** End byte position of the record starting at `start` — one bounded
-    * parse (used only to recover `endPos` from a legacy count file). */
-  private def recordEndPos(lf: Path, start: Long): Long = {
-    val in = new DataInputStream(new BufferedInputStream(
-      new FileInputStream(lf.toFile), 1 << 14))
-    try {
-      in.skipNBytes(start)
-      var consumed = 0L
-      def skipB(): Unit = {
-        val len = in.readInt(); consumed += 4
-        if (len > 0) { in.skipNBytes(len); consumed += len }
-      }
-      skipB(); skipB()                   // key, value
-      in.skipNBytes(12); consumed += 12  // tsMillis + timestampType
-      val nh = in.readInt(); consumed += 4
-      var i = 0
-      while (i < nh) { skipB(); skipB(); i += 1 }
-      start + consumed
-    } finally in.close()
-  }
-
-  /** Committed byte length of the log prefix, recovering it by scanning
-    * the last committed record when the count file predates `endPos`. */
-  private def committedEndPos(st: PartitionState, lf: Path, xf: Path): Long =
-    if (st.endPos >= 0L) st.endPos
-    else if (st.end == st.base) 0L
-    else recordEndPos(lf, idxAt(xf, st.end - st.base - 1))
-
-  // append/appendAt/truncateBelow/promote all rewrite partition state,
+  // append/appendAt/truncateBelow all rewrite partition state,
   // and with `truncateOnCommit` the DRIVER becomes a mutator while
   // producers append from executor JVMs — an in-process monitor alone
   // cannot serialize that (an append that read state for epoch E could
@@ -299,12 +295,10 @@ object FileTopicLog {
     val st = state(root, topic, partition)
     val lf = dataFile(root, topic, partition, st.epoch, "log")
     val xf = dataFile(root, topic, partition, st.epoch, "idx")
-    val committedEnd =
-      if (!Files.exists(lf)) 0L else committedEndPos(st, lf, xf)
     // reconcile uncommitted garbage from a crashed writer
     truncateTo(xf, (st.end - st.base) * 8)
-    truncateTo(lf, committedEnd)
-    var pos = committedEnd
+    truncateTo(lf, st.endPos)
+    var pos = st.endPos
     var n = st.end
     val log = new DataOutputStream(new BufferedOutputStream(
       new FileOutputStream(lf.toFile, true), 1 << 16))
@@ -336,10 +330,11 @@ object FileTopicLog {
   /** Idempotent append for offset-addressed producers: records carry
     * their ABSOLUTE offsets (contiguous, ascending); those below the
     * committed end are dropped inside the partition lock, so a task
-    * retry — or an in-JVM concurrent duplicate — re-offering the same
-    * run appends nothing. The first retained offset must equal the
-    * committed end (no gaps). Multi-process producers that cannot share
-    * the JVM lock should stage into a scratch root and [[promote]]. */
+    * retry or a concurrent duplicate re-offering the same run appends
+    * nothing. The partition lock is also an OS file lock, so this holds
+    * for duplicates in other processes (task attempts on other
+    * executors) too. The first retained offset must equal the committed
+    * end (no gaps). */
   def appendAt(root: String, topic: String, partition: Int,
       records: IterableOnce[(Long, LogRecord)]): Long =
     withPartitionLock(root, topic, partition) {
@@ -424,7 +419,7 @@ object FileTopicLog {
     if (newBase == st.base) return
     val oldLf = dataFile(root, topic, partition, st.epoch, "log")
     val oldXf = dataFile(root, topic, partition, st.epoch, "idx")
-    val endPos = committedEndPos(st, oldLf, oldXf)
+    val endPos = st.endPos
     val dropRecs = newBase - st.base
     val dropBytes =
       if (newBase == st.end) endPos else idxAt(oldXf, dropRecs)
@@ -482,53 +477,6 @@ object FileTopicLog {
     Files.deleteIfExists(oldXf): Unit
     }
 
-  /** Atomically publish a partition written in a scratch root into
-    * `dstRoot` — the idempotent ingest pattern for task-side writers: a
-    * task attempt appends to its OWN attempt-scoped root (no shared
-    * mutable file), then promotes. Data files move first, the `.count`
-    * move is the commit — so a retry or speculative duplicate of a
-    * deterministic task either finds the partition already published
-    * (skips) or races to publish byte-identical files (harmless).
-    * Returns true when this call published. */
-  def promote(srcRoot: String, dstRoot: String, topic: String,
-      partition: Int): Boolean = {
-    val dstCount = countFile(dstRoot, topic, partition)
-    if (Files.exists(dstCount)) return false
-    withPartitionLock(dstRoot, topic, partition) {
-    // Re-check INSIDE the lock: a racing attempt that published while we
-    // waited must not have its committed data files overwritten by ours
-    // (REPLACE_EXISTING below) — byte-identical only for a deterministic
-    // task, and the commit contract must not rest on task determinism.
-    if (Files.exists(dstCount)) return false
-    Files.createDirectories(dir(dstRoot, topic))
-    val st = state(srcRoot, topic, partition)
-    Seq("log", "idx").foreach { ext =>
-      Files.move(dataFile(srcRoot, topic, partition, st.epoch, ext),
-        dataFile(dstRoot, topic, partition, st.epoch, ext),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
-    // The commit is a hard LINK, not a move: under a true two-attempt race
-    // both callers pass the exists() pre-check, and rename(2) — what
-    // ATOMIC_MOVE maps to on POSIX — silently replaces an existing target
-    // even without REPLACE_EXISTING, so a move could never report the
-    // loser. link(2) is atomic AND fails with EEXIST, so exactly one
-    // attempt returns true. Same-filesystem is already a precondition (the
-    // data-file ATOMIC_MOVEs above require it); data files keep
-    // REPLACE_EXISTING — losing-attempt bytes are byte-identical for a
-    // deterministic task and overwriting them is crash-orphan cleanup.
-    val srcCount = countFile(srcRoot, topic, partition)
-    try {
-      Files.createLink(dstCount, srcCount)
-      Files.deleteIfExists(srcCount)
-      true
-    } catch {
-      case _: java.nio.file.FileAlreadyExistsException =>
-        Files.deleteIfExists(srcCount)
-        false
-    }
-    }
-  }
-
   // Per-topic partition listings are the other walk cost that scales
   // with assignment size (one opendir+readdir per topic per micro-batch
   // — ~60% of the 1000-TP walk once states are cached). Every change to
@@ -537,24 +485,6 @@ object FileTopicLog {
   // the directory validates the cached listing with one stat.
   private val listingCache =
     new java.util.concurrent.ConcurrentHashMap[Path, (StateStamp, Seq[Int])]()
-
-  // Positive short-TTL twin of the stamp cache for HOT directories:
-  // every append commit bumps the topic dir's mtime (count-file
-  // tmp+rename), so under continuous ingest the racy-stamp rule below
-  // keeps the stamp cache permanently cold and every micro-batch pays
-  // the full re-list — the cost the cache existed to remove (~60% of a
-  // 1000-TP walk). Every exact listing is also recorded here with its
-  // wall-clock; callers that opt into BOUNDED STALENESS
-  // ([[partitionsOf]] with maxStalenessMs > 0 — the source's
-  // `listingTtlMs` option) reuse a recent listing instead of
-  // re-listing. Kafka's own consumers discover new partitions with up
-  // to `metadata.max.age.ms` (default 5 min!) of delay — a
-  // trigger-interval TTL here is the same contract, scoped to the one
-  // metadata read whose exactness is not load-bearing per batch (a
-  // partition surfacing one trigger late is indistinguishable from it
-  // having been created one trigger later).
-  private val hotListingCache =
-    new java.util.concurrent.ConcurrentHashMap[Path, (Long, Seq[Int])]()
 
   /** Partition ids present for a topic (from `p<P>.count` files).
     *
@@ -580,13 +510,10 @@ object FileTopicLog {
     if (!attrs.isDirectory) return Seq.empty
     val stamp = StateStamp(attrs.fileKey, attrs.lastModifiedTime, attrs.size)
     val hit = listingCache.get(d)
-    if (hit != null && hit._1 == stamp) {
-      hotListingCache.put(d, (System.currentTimeMillis(), hit._2))
-      hit._2
-    } else {
+    if (hit != null && hit._1 == stamp) hit._2
+    else {
       val listed =
         try {
-          listingWalks.incrementAndGet(): Unit
           val s = Files.list(d)
           try s.iterator().asScala
             .map(_.getFileName.toString)
@@ -602,42 +529,16 @@ object FileTopicLog {
         System.currentTimeMillis() - RacyStampMarginMs
       if (attrs.fileKey != null && settled &&
           StateStamp(after.fileKey, after.lastModifiedTime, after.size) == stamp) {
-        if (listingCache.size() > 100000) listingCache.clear()
+        if (listingCache.size() > CacheBound) listingCache.clear()
         listingCache.put(d, (stamp, listed))
       }
-      if (hotListingCache.size() > 100000) hotListingCache.clear()
-      hotListingCache.put(d, (System.currentTimeMillis(), listed))
       listed
     }
   }
 
-  /** [[partitionsOf]] with opt-in bounded staleness: a listing of this
-    * topic recorded within the last `maxStalenessMs` is reused without
-    * touching the filesystem — the steady-state walk cost under
-    * continuous ingest, where every append bumps the dir mtime and the
-    * exact path must re-list every trigger. `maxStalenessMs <= 0` is
-    * the exact path. A new partition becomes visible at most
-    * `maxStalenessMs` late (one trigger, with the source's
-    * `listingTtlMs` = trigger interval) — the `metadata.max.age.ms`
-    * contract, never applied to committed COUNTS (data availability
-    * stays exact; only the partition-set discovery is TTL'd). */
-  def partitionsOf(root: String, topic: String,
-      maxStalenessMs: Long): Seq[Int] = {
-    if (maxStalenessMs > 0) {
-      val hot = hotListingCache.get(dir(root, topic))
-      if (hot != null &&
-        System.currentTimeMillis() - hot._1 < maxStalenessMs) return hot._2
-    }
-    partitionsOf(root, topic)
-  }
-
-  /** Count of actual directory walks (cache misses) — observability
-    * for specs and the scale bench; not part of the API surface. */
-  private[graft] val listingWalks = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Count of topic-directory listings taken by retention walks for the
-    * crash-garbage sweep — observability for specs, like
-    * [[listingWalks]]. */
+    * crash-garbage sweep — observability for specs; not part of the API
+    * surface. */
   private[graft] val sweepListings = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Margin under which a directory mtime counts as "could still be
@@ -728,51 +629,24 @@ object FileTopicLog {
     atomicWrite(whitelistFile(root), json.getBytes(StandardCharsets.UTF_8))
   }
 
-  // same stamp-validated pattern as the state/listing caches: the
-  // whitelist is re-read every micro-batch and replaced only by rename
-  private val whitelistCache =
-    new java.util.concurrent.ConcurrentHashMap[Path, (StateStamp, Seq[String])]()
+  private val whitelistCache = new StampCache[Seq[String]]
 
   /** Current whitelist (empty when unset). */
-  def whitelist(root: String): Seq[String] = {
-    val f = whitelistFile(root)
-    val attrs =
-      try Files.readAttributes(f,
-        classOf[java.nio.file.attribute.BasicFileAttributes])
-      catch { case _: java.io.IOException => return Seq.empty }
-    val stamp = StateStamp(attrs.fileKey, attrs.lastModifiedTime, attrs.size)
-    // same null-fileKey rule as the state cache: without an inode
-    // identity a same-size rename-replace in one tick could validate a
-    // stale whitelist — always parse on such filesystems
-    val cacheable = attrs.fileKey != null
-    val hit = if (cacheable) whitelistCache.get(f) else null
-    if (hit != null && hit._1 == stamp) hit._2
-    else {
-      val parsed =
-        try {
-          val m = new com.fasterxml.jackson.databind.ObjectMapper()
-          val node = m.readTree(Files.readAllBytes(f))
-          (0 until node.size()).map(node.get(_).asText())
-        } catch { case _: java.io.IOException => return Seq.empty }
-      if (cacheable) {
-        if (whitelistCache.size() > 10000) whitelistCache.clear()
-        whitelistCache.put(f, (stamp, parsed))
-      }
-      parsed
+  def whitelist(root: String): Seq[String] =
+    whitelistCache.get(whitelistFile(root), Seq.empty) { f =>
+      val node = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(Files.readAllBytes(f))
+      (0 until node.size()).map(node.get(_).asText())
     }
-  }
 
   /** End offsets (committed counts) for every (whitelisted topic,
-    * partition): the per-batch metadata read. `listingStalenessMs > 0`
-    * lets the partition-set discovery reuse listings that recent
-    * (bounded staleness — see [[partitionsOf]]); counts are always
-    * read exact. The whitelist is read again after the counts and only
-    * topics in both reads are kept: a removal followed by an append to
-    * the removed topic must never yield the post-removal count. */
-  def endOffsets(root: String,
-      listingStalenessMs: Long = 0L): Map[String, Map[Int, Long]] = {
+    * partition): the per-batch metadata read, exact on every call. The
+    * whitelist is read again after the counts and only topics in both
+    * reads are kept: a removal followed by an append to the removed
+    * topic must never yield the post-removal count. */
+  def endOffsets(root: String): Map[String, Map[Int, Long]] = {
     val counts = whitelist(root).map { t =>
-      t -> partitionsOf(root, t, listingStalenessMs)
+      t -> partitionsOf(root, t)
         .map(p => p -> committedCount(root, t, p)).toMap
     }.toMap
     val still = whitelist(root).toSet

@@ -724,19 +724,6 @@ class DynamicTopicLogSpec extends AnyFunSuite {
       (0 until 9).map(i => s"v$i"))
   }
 
-  test("promote publishes once; a duplicate attempt is a no-op") {
-    val dst = freshRoot()
-    val a1 = freshRoot()
-    val a2 = freshRoot()
-    FileTopicLog.append(a1, "t", 3, (0 until 6).map(rec))
-    FileTopicLog.append(a2, "t", 3, (0 until 6).map(rec))
-    assert(FileTopicLog.promote(a1, dst, "t", 3) === true)
-    assert(FileTopicLog.promote(a2, dst, "t", 3) === false,
-      "retry/speculative duplicate must not double-publish")
-    assert(FileTopicLog.committedCount(dst, "t", 3) === 6)
-    assert(FileTopicLog.read(dst, "t", 3, 0, 6).map(_._1).toSeq === (0L until 6L))
-  }
-
   test("a wide assignment packs onto bounded tasks per micro-batch") {
     // Reference routes carry thousands of TPs; one task per TP per batch
     // would spend the batch on dispatch. planInputPartitions must pack
@@ -849,38 +836,6 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
-  test("maxTasksPerBatch caps the batch fan-out (the fetcher-count knob)") {
-    val root = freshRoot()
-    val topics = (0 until 10).map(i => f"t$i%02d")
-    topics.foreach { t =>
-      (0 until 4).foreach(p => FileTopicLog.append(root, t, p, (0 until 2).map(rec)))
-    } // 40 TPs, 80 records
-    FileTopicLog.setWhitelist(root, topics)
-    val maxStageTasks = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onStageSubmitted(
-          ev: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
-        maxStageTasks.getAndUpdate(m => math.max(m, ev.stageInfo.numTasks)): Unit
-    }
-    val base = graft.SessionTemp.dir("graft_dynq_")
-    s.sparkContext.addSparkListener(listener)
-    try {
-      val q = s.readStream.format("graft-topiclog").option("path", root)
-        .option("maxTasksPerBatch", "3")
-        .load()
-        .selectExpr("cast(value as string) AS v", "topic", "partition", "offset")
-        .writeStream.format("parquet")
-        .option("path", s"$base/sink")
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(Trigger.ProcessingTime("50 milliseconds"))
-        .start()
-      try q.processAllAvailable() finally q.stop()
-    } finally s.sparkContext.removeSparkListener(listener)
-    assert(maxStageTasks.get() > 0 && maxStageTasks.get() <= 3,
-      s"40-TP batch must fan out to <= 3 tasks, saw ${maxStageTasks.get()}")
-    assert(sinkDf(s"$base/sink").count() === 80)
-  }
-
   test("the partition lock serializes mutators ACROSS PROCESSES") {
     // A second JVM ([[LockProbe]]) holds the partition lock mid-append
     // (slow record iterator) while this JVM races an appendAt. The
@@ -956,65 +911,6 @@ class DynamicTopicLogSpec extends AnyFunSuite {
     }
   }
 
-  test("promote race: exactly one of two concurrent attempts reports published") {
-    // Both racers pass the exists() pre-check before either commits — the
-    // hard-link commit must hand FileAlreadyExistsException to the loser so
-    // the publish-once return contract holds under a TRUE race, not just for
-    // sequential retries. Repeat to make the interleaving land.
-    for (round <- 0 until 20) {
-      val dst = freshRoot()
-      val roots = Seq(freshRoot(), freshRoot())
-      roots.foreach(r => FileTopicLog.append(r, "t", 1, (0 until 4).map(rec)))
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val wins = new java.util.concurrent.atomic.AtomicInteger(0)
-      val threads = roots.map { r =>
-        new Thread(() => {
-          gate.await()
-          if (FileTopicLog.promote(r, dst, "t", 1)) wins.incrementAndGet(): Unit
-        })
-      }
-      threads.foreach(_.start())
-      gate.countDown()
-      threads.foreach(_.join())
-      assert(wins.get() === 1, s"round $round: exactly one racer must publish")
-      assert(FileTopicLog.committedCount(dst, "t", 1) === 4)
-      assert(FileTopicLog.read(dst, "t", 1, 0, 4).map(_._1).toSeq === (0L until 4L))
-    }
-  }
-
-  test("promote race: the loser never overwrites the winner's published bytes") {
-    // A loser that passed the exists() pre-check used to ATOMIC_MOVE its
-    // data files over the winner's BEFORE its link commit failed — safe
-    // only for byte-identical retries. With nondeterministic task output
-    // the winner's committed count must keep describing the winner's
-    // bytes; the in-lock re-check returns false before any move.
-    for (round <- 0 until 20) {
-      val dst = freshRoot()
-      val roots = Seq(freshRoot(), freshRoot())
-      roots.zipWithIndex.foreach { case (r, i) =>
-        FileTopicLog.append(r, "t", 1,
-          (0 until 4).map(j => LogRecord(b(s"k$j"), b(s"racer$i-$j"), 1L)))
-      }
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      val winner = new java.util.concurrent.atomic.AtomicInteger(-1)
-      val threads = roots.zipWithIndex.map { case (r, i) =>
-        new Thread(() => {
-          gate.await()
-          if (FileTopicLog.promote(r, dst, "t", 1)) winner.set(i): Unit
-        })
-      }
-      threads.foreach(_.start())
-      gate.countDown()
-      threads.foreach(_.join())
-      val w = winner.get()
-      assert(w >= 0, s"round $round: someone must publish")
-      val values = FileTopicLog.read(dst, "t", 1, 0, 4)
-        .map(r => new String(r._2.value, StandardCharsets.UTF_8)).toSeq
-      assert(values === (0 until 4).map(j => s"racer$w-$j"),
-        s"round $round: published bytes must be the WINNER's")
-    }
-  }
-
   test("a partition created in the listing's timestamp tick is not masked by the cache") {
     // The dir-listing cache is validated by the dir's (fileKey, mtime,
     // size); a p<P>.count created in the same filesystem-timestamp tick
@@ -1033,83 +929,46 @@ class DynamicTopicLogSpec extends AnyFunSuite {
       "a fresh-mtime listing must not be cached — the next walk re-lists")
   }
 
-  test("bounded-staleness listing: hot dirs stop re-listing, exactness on demand") {
-    // Under continuous ingest every append bumps the topic dir mtime,
-    // so the exact path re-lists every call (the racy-stamp rule). The
-    // opt-in TTL path must (a) serve a recent listing WITHOUT a walk,
-    // (b) stay bounded: the exact path — what ttl=0 callers and data
-    // counts use — always sees new partitions immediately, and the TTL
-    // path catches up as soon as the exact path has re-listed.
+  test("a count file that is not the JSON state fails loudly, naming its path") {
     val root = freshRoot()
-    FileTopicLog.append(root, "t", 0, (0 until 2).map(rec))
-    assert(FileTopicLog.partitionsOf(root, "t") === Seq(0))
-    val walks0 = FileTopicLog.listingWalks.get()
-    // (a) hot reuse: a 10-minute TTL must serve from the hot cache
-    (1 to 5).foreach { _ =>
-      assert(FileTopicLog.partitionsOf(root, "t", 600000L) === Seq(0))
+    FileTopicLog.append(root, "t", 0, (0 until 7).map(rec))
+    val cf = java.nio.file.Paths.get(root, "t", "p0.count")
+    Seq("7", "", "{\"end\":7}", "not json").foreach { body =>
+      Files.write(cf, body.getBytes(StandardCharsets.UTF_8))
+      val onState = intercept[IllegalStateException](
+        FileTopicLog.state(root, "t", 0))
+      assert(onState.getMessage.contains(cf.toString), s"state on '$body'")
+      val onAppend = intercept[IllegalStateException](
+        FileTopicLog.append(root, "t", 0, Seq(rec(7))))
+      assert(onAppend.getMessage.contains(cf.toString), s"append on '$body'")
     }
-    assert(FileTopicLog.listingWalks.get() === walks0,
-      "TTL reads within staleness must not walk the directory")
-    // a new partition appears: the TTL path may serve the stale set...
-    FileTopicLog.append(root, "t", 1, (0 until 2).map(rec))
-    assert(FileTopicLog.partitionsOf(root, "t", 600000L) === Seq(0),
-      "bounded staleness: the pre-append listing is within its TTL")
-    // ...but the EXACT path sees it immediately (data counts and
-    // ttl=0 sources are never stale) and refreshes the hot cache
-    assert(FileTopicLog.partitionsOf(root, "t") === Seq(0, 1))
-    assert(FileTopicLog.partitionsOf(root, "t", 600000L) === Seq(0, 1),
-      "the TTL path serves the refreshed listing")
-    // ttl=0 is byte-for-byte the exact path
-    FileTopicLog.append(root, "t", 2, (0 until 2).map(rec))
-    assert(FileTopicLog.partitionsOf(root, "t", 0L) === Seq(0, 1, 2))
   }
 
-  test("a listingTtlMs source discovers an expanded partition within the TTL") {
-    // end-to-end: a stream with bounded-staleness discovery still picks
-    // up a partition created mid-query — just possibly one TTL late.
+  test("an unknown source option fails at load() and lists the supported keys") {
     val root = freshRoot()
-    val base = graft.SessionTemp.dir("graft_ttlq_")
+    Seq("listingTtlMs", "maxTasksPerBatch", "maxRowPerTrigger").foreach { k =>
+      val e = intercept[IllegalArgumentException](
+        s.readStream.format("graft-topiclog").option("path", root)
+          .option(k, "1").load())
+      assert(e.getMessage.contains(k), e.getMessage)
+      assert(e.getMessage.contains(
+        "path, maxRowsPerTrigger, truncateOnCommit, groupId"), e.getMessage)
+    }
+    // known keys match case-insensitively, and the value is honored
+    val base = graft.SessionTemp.dir("graft_dynq_")
     FileTopicLog.setWhitelist(root, Seq("t"))
-    FileTopicLog.append(root, "t", 0, (0 until 3).map(rec))
-    val q = s.readStream.format("graft-topiclog").option("path", root)
-      .option("listingTtlMs", "200")
-      .load()
-      .selectExpr("cast(value as string) AS v", "partition", "offset")
+    FileTopicLog.append(root, "t", 0, (0 until 6).map(rec))
+    val q = s.readStream.format("graft-topiclog").option("PATH", root)
+      .option("maxrowspertrigger", "2").load()
+      .selectExpr("offset")
       .writeStream.format("parquet")
       .option("path", s"$base/sink")
       .option("checkpointLocation", s"$base/ckpt")
-      .trigger(Trigger.ProcessingTime("50 milliseconds"))
+      .trigger(Trigger.AvailableNow())
       .start()
-    try {
-      q.processAllAvailable()
-      FileTopicLog.append(root, "t", 1, (0 until 2).map(rec))
-      // poll-bounded-wait: discovery is allowed to lag by the TTL, so
-      // processAllAvailable alone can't be trusted right after the append
-      val deadline = System.currentTimeMillis() + 15000L
-      var n = 0L
-      while (n < 5L && System.currentTimeMillis() < deadline) {
-        q.processAllAvailable()
-        n = try sinkDf(s"$base/sink").count() catch { case _: Throwable => 0L }
-        if (n < 5L) Thread.sleep(100L)
-      }
-      assert(n === 5L, "the expanded partition lands within the TTL")
-    } finally q.stop()
-  }
-
-  test("legacy bare-integer count files still parse (and upgrade on append)") {
-    val root = freshRoot()
-    FileTopicLog.append(root, "t", 0, (0 until 7).map(rec))
-    // rewrite the commit file in the pre-retention format: bare count
-    val cf = java.nio.file.Paths.get(root, "t", "p0.count")
-    Files.write(cf, "7".getBytes(StandardCharsets.UTF_8))
-    assert(FileTopicLog.committedCount(root, "t", 0) === 7)
-    assert(FileTopicLog.startOffset(root, "t", 0) === 0)
-    assert(FileTopicLog.read(root, "t", 0, 0, 7).size === 7)
-    // appending through the legacy state recovers endPos by a bounded scan
-    FileTopicLog.append(root, "t", 0, (7 until 10).map(rec))
-    val all = FileTopicLog.read(root, "t", 0, 0, 10).toSeq
-    assert(all.map(_._1) === (0L until 10L))
-    assert(new String(all.last._2.value, StandardCharsets.UTF_8) === "v9")
+    q.awaitTermination()
+    assert(q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq ===
+      Seq(2L, 2L, 2L))
   }
 
   test("an abandoned reader frees its file handle on close()") {
